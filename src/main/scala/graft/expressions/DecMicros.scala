@@ -140,3 +140,40 @@ object Dec128FromParts {
       ColumnBridge.expression(s2), ColumnBridge.expression(s1),
       ColumnBridge.expression(s0)))
 }
+
+/** The operand of [[graft.functions.DetAgg]]'s x² legs: integral inputs
+  * widen to DECIMAL(20,0) (every long fits), so their square is exact
+  * and cannot overflow the column's own type (under ANSI an int squared
+  * throws above 46,340, a long above 3.04e9); floating and decimal
+  * inputs pass through untouched, so their squares stay bit-identical.
+  * The SQL twin gets the same promotion from adding a DECIMAL(19,0) zero. */
+case class WidenIntegral(child: Expression) extends UnaryExpression {
+
+  override def dataType: DataType = child.dataType match {
+    case LongType | IntegerType | ShortType | ByteType => DecimalType(20, 0)
+    case t => t
+  }
+  override def prettyName: String = "widen_integral"
+
+  override def nullSafeEval(v: Any): Any = child.dataType match {
+    case LongType | IntegerType | ShortType | ByteType =>
+      Decimal(v.asInstanceOf[Number].longValue)
+    case _ => v
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    child.dataType match {
+      case LongType | IntegerType | ShortType | ByteType =>
+        defineCodeGen(ctx, ev, c =>
+          s"org.apache.spark.sql.types.Decimal.apply((long) $c)")
+      case _ => defineCodeGen(ctx, ev, c => c)
+    }
+
+  override protected def withNewChildInternal(newChild: Expression): WidenIntegral =
+    copy(child = newChild)
+}
+
+object WidenIntegral {
+  def apply(c: Column): Column =
+    ColumnBridge.column(WidenIntegral(ColumnBridge.expression(c)))
+}

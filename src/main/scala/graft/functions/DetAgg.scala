@@ -94,14 +94,22 @@ object DetAgg {
   /** Order-independent average: exact decimal sum, one double division. */
   def davg(c: Column): Column = dsum(c).cast("double") / count(c)
 
+  /** x² for the wide legs of [[dstddev]]/[[dvarPop]]: integral inputs
+    * square as exact decimals ([[graft.expressions.WidenIntegral]]),
+    * floating inputs in their own type. */
+  private def square(c: Column): Column = {
+    val w = graft.expressions.WidenIntegral(c)
+    w * w
+  }
+
   /** Order-independent sample stddev via exact decimal sums of x and x².
-    * Shape mirrored exactly in [[sqlStddev]] so the IEEE ops match.
+    * Shape mirrored exactly in [[sql.dstddev]] so the IEEE ops match.
     * The x² leg stays on the wide decimal path: squared magnitudes
     * exceed the fast path's unscaled-long range. */
   def dstddev(c: Column): Column = {
     val n  = count(c).cast("double")
     val s1 = dsum(c).cast("double")
-    val s2 = dsumWide(c * c).cast("double")
+    val s2 = dsumWide(square(c)).cast("double")
     when(count(c) > 1, sqrt((s2 - s1 * s1 / n) / (n - lit(1.0d))))
   }
 
@@ -109,7 +117,7 @@ object DetAgg {
   def dvarPop(c: Column): Column = {
     val n  = count(c).cast("double")
     val s1 = dsum(c).cast("double")
-    val s2 = dsumWide(c * c).cast("double")
+    val s2 = dsumWide(square(c)).cast("double")
     when(count(c) > 0, (s2 - s1 * s1 / n) / n)
   }
 
@@ -128,7 +136,10 @@ object DetAgg {
     def dstddev(e: String): String = {
       val n  = s"CAST(count($e) AS DOUBLE)"
       val s1 = dsumD(e)
-      val s2 = dsumD(s"($e) * ($e)")
+      // integral e promotes to an exact decimal before squaring (the
+      // WidenIntegral twin); a double plus the decimal zero stays double
+      val w  = s"(($e) + CAST(0 AS DECIMAL(19,0)))"
+      val s2 = dsumD(s"$w * $w")
       s"CASE WHEN count($e) > 1 THEN sqrt(($s2 - $s1 * $s1 / $n) / ($n - 1.0)) END"
     }
   }

@@ -39,10 +39,15 @@ object VectorOps {
     * matrices are baked as plan literals of this length). */
   val MaxSigDims = 1024
 
-  /** Random-hyperplane LSH signature: `planes` sign-vectors are derived
-    * deterministically from xxhash64(plane, dim), so every executor (and
+  /** Random-hyperplane LSH signature: the sign of plane p at dim j is the
+    * parity of the first md5 hex nibble of "p|j", so every executor (and
     * every run) builds the same planes with zero driver-side state to
-    * broadcast. Bit p = 1 iff sum_j v_j * sign(p, j) > 0.
+    * broadcast — and the sign is identically computable in ANSI
+    * SQL/DuckDB, which is what gives q39 a full value-hash oracle. Bit
+    * p = 1 iff sum_j v_j * sign(p, j) > 0. The float fold order matters
+    * for the sign test at the last ulp: both Spark's `aggregate` and
+    * DuckDB's `list_sum` are strict sequential left folds (verified
+    * bit-exact over every (vector, plane) pair in the test corpus).
     *
     * The sign of (plane, dim) does not depend on the row, so the matrix
     * is evaluated ONCE on the driver and embedded as array literals —
@@ -50,35 +55,10 @@ object VectorOps {
     * formulation hashed per (row × plane × dim): measured 8 planes ×
     * 64 dims = 512 hashes/row on the q39 hot path for values that never
     * change.) */
-  def hyperplaneSignature(v: Column, planes: Int): Column =
-    hyperplaneSig(v, planes, (p, j) => {
-      import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
-      // same bits as the previous per-row expression: xxhash64(lit(p), j)
-      // over two INT inputs, then pmod 2
-      val h = new XxHash64(Seq(Literal(p), Literal(j))).eval(null).asInstanceOf[Long]
-      if (Math.floorMod(h, 2L) == 0L) 1.0d else -1.0d
-    })
-
-  /** Portable twin of [[hyperplaneSignature]]: the sign of plane p at dim
-    * j is the parity of the first md5 hex nibble of "p|j" — identically
-    * computable in ANSI SQL/DuckDB, which is what gives q39 a full
-    * value-hash oracle. The float fold order matters for the sign test at
-    * the last ulp: both Spark's `aggregate` and DuckDB's `list_sum` are
-    * strict sequential left folds (verified bit-exact over every
-    * (vector, plane) pair in the test corpus). xxhash64 planes stay the
-    * production default. */
-  def hyperplaneSignatureMd5(v: Column, planes: Int): Column =
-    hyperplaneSig(v, planes, (p, j) => {
-      val hx = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$p|$j".getBytes("UTF-8"))
-      if ((((hx(0) >> 4) & 0xf) % 2) == 0) 1.0d else -1.0d
-    })
-
-  private def hyperplaneSig(
-      v: Column, planes: Int, signAt: (Int, Int) => Double): Column = {
+  def hyperplaneSignature(v: Column, planes: Int): Column = {
     val dv = asDouble(v)
     val bits = (0 until planes).map { p =>
-      val signs = typedLit((0 until MaxSigDims).map(j => signAt(p, j)))
+      val signs = typedLit((0 until MaxSigDims).map(j => planeSign(p, j)))
       val proj = aggregate(
         zip_with(dv, slice(signs, lit(1), size(v)), _ * _),
         lit(0.0d), _ + _)
@@ -91,5 +71,11 @@ object VectorOps {
       .otherwise(raise_error(concat(
         lit(s"hyperplane signature supports at most $MaxSigDims dims, got "),
         size(v).cast("string"))))
+  }
+
+  private def planeSign(p: Int, j: Int): Double = {
+    val hx = java.security.MessageDigest.getInstance("MD5")
+      .digest(s"$p|$j".getBytes("UTF-8"))
+    if ((((hx(0) >> 4) & 0xf) % 2) == 0) 1.0d else -1.0d
   }
 }

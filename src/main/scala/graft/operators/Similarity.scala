@@ -73,12 +73,7 @@ object Similarity {
     * fixed-size keys, never all pairs. */
   def annTopK(embeddings: DataFrame, queryIds: Seq[Long], k: Int,
       planes: Int = 8, bandBits: Int = 2,
-      portablePlanes: Boolean = false,
       corpusKey: Option[String] = None): DataFrame = {
-    val nBands = planes / bandBits
-    val sigFn =
-      if (portablePlanes) graft.functions.VectorOps.hyperplaneSignatureMd5 _
-      else graft.functions.VectorOps.hyperplaneSignature _
     // keyed path: the signature table is the LSH "hash tables" every
     // serving read probes — built once per (corpus, planes) and
     // checkpoint-backed, the same maintained-index posture as ivfIndex.
@@ -86,11 +81,12 @@ object Similarity {
     // don't enter whole-stage codegen), so q39/q128/q137 each paid the
     // full corpus sig pass per run before this. Keyless callers (tests,
     // ad-hoc frames) still get a pure function.
-    def buildSigned = embeddings.withColumn("sig", sigFn(col("embedding"), planes))
+    def buildSigned =
+      embeddings.withColumn("sig", hyperplaneSignature(col("embedding"), planes))
     val signed = corpusKey match {
       case Some(key) =>
         graft.AnnSubstrate.getOrBuildFrames(embeddings.sparkSession,
-            s"lshsig|$key|$planes|$portablePlanes")(
+            s"lshsig|$key|$planes")(
           buildSigned.localCheckpoint(true))(f => Seq(f))
       case None => buildSigned
     }
@@ -138,16 +134,11 @@ object Similarity {
     * re-executes the whole Lloyd chain (and at iters≫3 the growing plan
     * itself becomes the bottleneck). This is the DataFrame analog of
     * MLlib KMeans keeping centers on the driver between iterations. */
-  def kmeansCentroids(embeddings: DataFrame, k: Int, iters: Int,
-      portableMeans: Boolean = false): DataFrame = {
-    // portableMeans swaps the per-dim double avg for DetAgg.davg (exact
-    // decimal sum, one double division): order-independent and therefore
-    // bit-identical on any partitioning AND in the DuckDB twin — which is
-    // what gives q49 a full value-hash oracle. Double avg stays the
-    // default (2-3x cheaper per value; IVF recall does not care about the
-    // last ulp of a centroid).
-    val mean: Column => Column =
-      if (portableMeans) DetAgg.davg else avg(_)
+  def kmeansCentroids(embeddings: DataFrame, k: Int, iters: Int): DataFrame = {
+    // the per-dim mean is DetAgg.davg (exact decimal sum, one double
+    // division): order-independent and therefore bit-identical on any
+    // partitioning, across a crash/re-run, AND in the DuckDB twin —
+    // which is what gives q49 a full value-hash oracle
     val dv = embeddings.select(col("vec_id"),
       graft.functions.VectorOps.asDouble(col("embedding")).as("v"))
     var centroids = dv.orderBy(col("vec_id")).limit(k)
@@ -158,7 +149,7 @@ object Similarity {
       val assigned = assign(dv, centroids)
       centroids = assigned
         .select(col("cid"), posexplode(col("v")).as(Seq("pos", "x")))
-        .groupBy(col("cid"), col("pos")).agg(mean(col("x")).as("m"))
+        .groupBy(col("cid"), col("pos")).agg(DetAgg.davg(col("x")).as("m"))
         .groupBy(col("cid"))
         .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
         .select(col("cid"), expr("transform(pm, s -> s.m)").as("cvec"))
@@ -192,7 +183,7 @@ object Similarity {
     * checkpoint-backed. When `corpusKey` names the corpus (the
     * registered queries pass the testdata path), the pair is memoized
     * process-wide via [[graft.AnnSubstrate]] keyed
-    * (corpus, nlist, iters, portableMeans) — so the ten-plus ANN
+    * (corpus, nlist, iters) — so the ten-plus ANN
     * queries that consume the identical index stop re-running the
     * identical Lloyd chain and corpus assignment per query. That is
     * the maintained-index posture: production trains a coarse
@@ -203,7 +194,6 @@ object Similarity {
     * The rider norm is the family's shared per-row L2; consumers that
     * don't need it project it away for free. */
   private[graft] def ivfIndex(embeddings: DataFrame, nlist: Int, iters: Int,
-      portableMeans: Boolean,
       corpusKey: Option[String] = None): (DataFrame, DataFrame) = {
     // checkpoint: memoized path only — the pqStage checkpointCodes
     // trade. A keyless (test/ad-hoc) caller reads the index once, so an
@@ -211,7 +201,7 @@ object Similarity {
     // corpus-sized block nothing sweeps outside Bench; the lazy plan
     // also lets Catalyst prune the nrm rider for consumers that drop it
     def build(checkpoint: Boolean): (DataFrame, DataFrame) = {
-      val centroids = kmeansCentroids(embeddings, nlist, iters, portableMeans)
+      val centroids = kmeansCentroids(embeddings, nlist, iters)
       val dv = embeddings.select(col("vec_id"),
         graft.functions.VectorOps.asDouble(col("embedding")).as("v"))
       val plan = assign(dv, centroids)
@@ -222,7 +212,7 @@ object Similarity {
     corpusKey match {
       case Some(ck) => graft.AnnSubstrate.getOrBuildFrames(
         embeddings.sparkSession,
-        s"ivf|$ck|$nlist|$iters|$portableMeans")(build(checkpoint = true))(
+        s"ivf|$ck|$nlist|$iters")(build(checkpoint = true))(
         t => Seq(t._1, t._2))
       case None => build(checkpoint = false)
     }
@@ -233,10 +223,9 @@ object Similarity {
     * inverted-file shape that makes 100 TB ANN feasible. */
   def ivfTopK(embeddings: DataFrame, queryIds: Seq[Long], k: Int,
       nlist: Int = 8, nprobe: Int = 3, iters: Int = 3,
-      portableMeans: Boolean = false,
       corpusKey: Option[String] = None): DataFrame = {
     val (centroids, idx) =
-      ivfIndex(embeddings, nlist, iters, portableMeans, corpusKey)
+      ivfIndex(embeddings, nlist, iters, corpusKey)
     val lists = idx.select(col("vec_id"), col("v"), col("cid"))
     val queries = lists.filter(col("vec_id").isin(queryIds: _*))
       .select(col("vec_id").as("query_id"), col("v").as("qv"))
@@ -578,8 +567,7 @@ object Similarity {
       corpusKey: Option[String] = None): DataFrame = {
     val exact = bruteForceTopK(embeddings, queryIds, fromN)
       .select(col("query_id"), col("vec_id"), col("rn"), lit("exact").as("src"))
-    val ann = annTopK(embeddings, queryIds, fromN, portablePlanes = true,
-        corpusKey = corpusKey)
+    val ann = annTopK(embeddings, queryIds, fromN, corpusKey = corpusKey)
       .select(col("query_id"), col("vec_id"), col("rn"), lit("ann").as("src"))
     val fused = exact.union(ann)
       .groupBy(col("query_id"), col("vec_id"))
@@ -1715,11 +1703,10 @@ object Similarity {
     * lexical side. Returns (lists, pairs(cid, d1 < d2)). */
   private[graft] def semanticPairStage(embeddings: DataFrame,
       threshold: Double, nlist: Int, iters: Int,
-      portableMeans: Boolean,
       corpusKey: Option[String] = None): (DataFrame, DataFrame) = {
     val chosen = resolveNlist(embeddings, nlist, corpusKey)
     val (_, lists) =
-      ivfIndex(embeddings, chosen, iters, portableMeans, corpusKey)
+      ivfIndex(embeddings, chosen, iters, corpusKey)
     val a = lists.select(col("cid"), col("vec_id").as("d1"),
       col("v").as("va"), col("nrm").as("na"))
     val b = lists.select(col("cid").as("cidb"), col("vec_id").as("d2"),
@@ -1732,11 +1719,9 @@ object Similarity {
   }
 
   def semanticDedup(embeddings: DataFrame, threshold: Double, nlist: Int = 0,
-      iters: Int = 3, portableMeans: Boolean = false,
-      corpusKey: Option[String] = None): DataFrame = {
+      iters: Int = 3, corpusKey: Option[String] = None): DataFrame = {
     val (lists, pairs) =
-      semanticPairStage(embeddings, threshold, nlist, iters, portableMeans,
-        corpusKey)
+      semanticPairStage(embeddings, threshold, nlist, iters, corpusKey)
     val dropped = pairs.select(col("cid"), col("d2")).distinct()
       .groupBy(col("cid")).agg(count(lit(1)).as("n_dropped"))
     lists.groupBy(col("cid")).agg(count(lit(1)).as("n_vecs"))
@@ -1779,10 +1764,9 @@ object Similarity {
     * at recall 1.0 — an in-query correctness anchor. */
   def ivfProbeRecallCurve(embeddings: DataFrame, queryIds: Seq[Long],
       k: Int, nlist: Int = 8, iters: Int = 3,
-      portableMeans: Boolean = false,
       corpusKey: Option[String] = None): DataFrame = {
     val (centroids, lists) =
-      ivfIndex(embeddings, nlist, iters, portableMeans, corpusKey)
+      ivfIndex(embeddings, nlist, iters, corpusKey)
     val queries = lists.filter(col("vec_id").isin(queryIds: _*))
       .select(col("vec_id").as("query_id"), col("v").as("qv"))
     val pw = Window.partitionBy(col("query_id"))
@@ -1876,11 +1860,10 @@ object Similarity {
     * (cid, vec_id, v, riders*, nrm) and the kNN edge table
     * (src, dst, cosine, src_riders*, dst_riders*, rn <= k). */
   private[graft] def inListKnn(embeddings: DataFrame, k: Int, nlist: Int,
-      iters: Int, portableMeans: Boolean,
-      riders: Seq[String] = Nil,
+      iters: Int, riders: Seq[String] = Nil,
       corpusKey: Option[String] = None): (DataFrame, DataFrame) = {
     val chosen = resolveNlist(embeddings, nlist, corpusKey)
-    val (_, idx) = ivfIndex(embeddings, chosen, iters, portableMeans, corpusKey)
+    val (_, idx) = ivfIndex(embeddings, chosen, iters, corpusKey)
     // riders are per-QUERY columns, so they join onto the shared index
     // here (one vec_id-keyed join, checkpointed because the self-join
     // below reads both sides) rather than being baked into the memo key
@@ -1907,11 +1890,9 @@ object Similarity {
   }
 
   def knnHubness(embeddings: DataFrame, k: Int = 10, nlist: Int = 0,
-      iters: Int = 3, portableMeans: Boolean = false,
-      corpusKey: Option[String] = None): DataFrame = {
+      iters: Int = 3, corpusKey: Option[String] = None): DataFrame = {
     val (lists, knn) =
-      inListKnn(embeddings, k, nlist, iters, portableMeans,
-        corpusKey = corpusKey)
+      inListKnn(embeddings, k, nlist, iters, corpusKey = corpusKey)
     val indeg = lists.select(col("vec_id"))
       .join(knn.groupBy(col("dst")).agg(count(lit(1)).as("c")),
         col("vec_id") === col("dst"), "left")
@@ -1933,10 +1914,9 @@ object Similarity {
     * combined aggregate, one broadcast one-row total — no pairwise
     * stage at all. */
   def ivfListStats(embeddings: DataFrame, nlist: Int = 8, iters: Int = 3,
-      portableMeans: Boolean = false,
       corpusKey: Option[String] = None): DataFrame = {
     val (centroids, lists) =
-      ivfIndex(embeddings, nlist, iters, portableMeans, corpusKey)
+      ivfIndex(embeddings, nlist, iters, corpusKey)
     ivfListStatsFromIndex(lists, centroids, nlist)
   }
 
@@ -2000,10 +1980,7 @@ object Similarity {
     * Returns (newCentroids (cid, cvec), newLists (cid, vec_id, v,
     * from_split)). */
   private[graft] def splitHotLists(lists: DataFrame, centroids: DataFrame,
-      nlist: Int, maxList: Int, iters: Int,
-      portableMeans: Boolean): (DataFrame, DataFrame) = {
-    val mean: Column => Column =
-      if (portableMeans) DetAgg.davg else avg(_)
+      nlist: Int, maxList: Int, iters: Int): (DataFrame, DataFrame) = {
     val hot = lists.groupBy(col("cid")).agg(count(lit(1)).as("n"))
       .filter(col("n") > maxList).select(col("cid"))
       .localCheckpoint(true) // tiny (≤ nlist rows), read 2·iters+3 times
@@ -2028,7 +2005,7 @@ object Similarity {
       assigned.select(col("cid"), col("child"),
           posexplode(col("v")).as(Seq("pos", "x")))
         .groupBy(col("cid"), col("child"), col("pos"))
-        .agg(mean(col("x")).as("m"))
+        .agg(DetAgg.davg(col("x")).as("m"))
         .groupBy(col("cid"), col("child"))
         .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
         .select(col("cid"), col("child"),
@@ -2062,7 +2039,7 @@ object Similarity {
     * list count. Scale: one q139-cost health pass plus the keyed split
     * chain, whose member universe is only the hot lists' rows. */
   def ivfSplitRebalance(embeddings: DataFrame, nlist: Int = 8,
-      maxList: Int = 0, iters: Int = 3, portableMeans: Boolean = false,
+      maxList: Int = 0, iters: Int = 3,
       corpusKey: Option[String] = None): DataFrame = {
     val chosenMax =
       if (maxList > 0) maxList
@@ -2075,10 +2052,10 @@ object Similarity {
         math.ceil(n.toDouble / nlist).toInt
       }
     val (centroids, lists) =
-      ivfIndex(embeddings, nlist, iters, portableMeans, corpusKey)
+      ivfIndex(embeddings, nlist, iters, corpusKey)
     val (newCents, newLists) = splitHotLists(
       lists.select(col("cid"), col("vec_id"), col("v")), centroids,
-      nlist, chosenMax, iters, portableMeans)
+      nlist, chosenMax, iters)
     val mc = newLists
       .join(broadcast(newCents), Seq("cid"))
       .select(col("cid"), col("from_split"),
@@ -2125,16 +2102,13 @@ object Similarity {
     * `sv` is retained on codes so consumers (distortion, recon checks)
     * never re-join the corpus. */
   private[graft] def pqStage(embeddings: DataFrame, m: Int, ksub: Int,
-      iters: Int, portableMeans: Boolean,
-      corpusKey: Option[String] = None): (DataFrame, DataFrame) = {
+      iters: Int, corpusKey: Option[String] = None): (DataFrame, DataFrame) = {
     require(64 % m == 0, s"m=$m must divide the 64-dim embedding")
     // checkpointCodes: the encoded corpus is checkpointed only on the
     // memoized path — a single consumer reads codes once (a checkpoint
     // would be a pure extra pass), but the PQ query trio (q175–q177)
     // shares one (corpus, m, ksub) key and each member re-reads them
     def build(checkpointCodes: Boolean): (DataFrame, DataFrame) = {
-      val mean: Column => Column =
-        if (portableMeans) DetAgg.davg else avg(_)
       val dvs = pqSubvectors(embeddings, m)
       var codebooks = pqSubvectors(embeddings.orderBy(col("vec_id")).limit(ksub), m)
         .withColumn("cid", row_number().over(
@@ -2144,7 +2118,7 @@ object Similarity {
       (0 until iters).foreach { _ =>
         codebooks = assignSub(dvs, codebooks)
           .select(col("sub"), col("cid"), posexplode(col("sv")).as(Seq("pos", "x")))
-          .groupBy(col("sub"), col("cid"), col("pos")).agg(mean(col("x")).as("mv"))
+          .groupBy(col("sub"), col("cid"), col("pos")).agg(DetAgg.davg(col("x")).as("mv"))
           .groupBy(col("sub"), col("cid"))
           .agg(array_sort(collect_list(struct(col("pos"), col("mv")))).as("pm"))
           .select(col("sub"), col("cid"), expr("transform(pm, s -> s.mv)").as("cvec"))
@@ -2156,7 +2130,7 @@ object Similarity {
     corpusKey match {
       case Some(ck) => graft.AnnSubstrate.getOrBuildFrames(
         embeddings.sparkSession,
-        s"pq|$ck|$m|$ksub|$iters|$portableMeans")(
+        s"pq|$ck|$m|$ksub|$iters")(
         build(checkpointCodes = true))(t => Seq(t._1, t._2))
       case None => build(checkpointCodes = false)
     }
@@ -2222,10 +2196,9 @@ object Similarity {
     * (sub, cid)-key map-side-combined aggregate (m·ksub groups), one
     * m-key rollup — never pairwise. */
   def pqCodebookReport(embeddings: DataFrame, m: Int = 4, ksub: Int = 16,
-      iters: Int = 3, portableMeans: Boolean = false,
-      corpusKey: Option[String] = None): DataFrame = {
+      iters: Int = 3, corpusKey: Option[String] = None): DataFrame = {
     val (codebooks, codes) =
-      pqStage(embeddings, m, ksub, iters, portableMeans, corpusKey)
+      pqStage(embeddings, m, ksub, iters, corpusKey)
     val diff = zip_with(col("sv"), col("cvec"), (a, b) => a - b)
     val perCode = codes.join(broadcast(codebooks), Seq("sub", "cid"))
       .select(col("sub"), col("cid"),
@@ -2264,10 +2237,9 @@ object Similarity {
     * a query SAMPLE by construction; the corpus side stays one pass. */
   def pqAdcRecall(embeddings: DataFrame, queryIds: Seq[Long], k: Int = 10,
       m: Int = 4, ksub: Int = 16, iters: Int = 3,
-      portableMeans: Boolean = false,
       corpusKey: Option[String] = None): DataFrame = {
     val (codebooks, codes) =
-      pqStage(embeddings, m, ksub, iters, portableMeans, corpusKey)
+      pqStage(embeddings, m, ksub, iters, corpusKey)
     val recon = pqRecon(codes.select(col("vec_id"), col("sub"), col("cid")),
       codebooks)
     val queries = embeddings.filter(col("vec_id").isin(queryIds: _*))
@@ -2365,11 +2337,10 @@ object Similarity {
     * the bucket histogram is q175's top_code_share early warning. */
   def pqCodeNearDup(embeddings: DataFrame, threshold: Double = 0.3,
       m: Int = 4, ksub: Int = 16, iters: Int = 3,
-      portableMeans: Boolean = false,
       corpusKey: Option[String] = None): DataFrame = {
     require(m == 4, "band layout below assumes 4 subspaces, 2 per band")
     val (_, codes) =
-      pqStage(embeddings, m, ksub, iters, portableMeans, corpusKey)
+      pqStage(embeddings, m, ksub, iters, corpusKey)
     val keys = codes.groupBy(col("vec_id"))
       .agg(array_sort(collect_list(struct(col("sub"), col("cid")))).as("sc"))
       .select(col("vec_id"), expr("transform(sc, s -> s.cid)").as("cs"))
@@ -2399,7 +2370,7 @@ object Similarity {
           .as("avg_pair_cosine"))
   }
 
-  /** DuckDB twin of pqCodeNearDup(threshold=0.3, portableMeans=true). */
+  /** DuckDB twin of pqCodeNearDup(threshold=0.3). */
   private def q177OracleSql: String =
     s"""WITH ${pqCtes(4, 16)},
        |ck AS (
@@ -2447,7 +2418,7 @@ object Similarity {
   /** Shared DuckDB CTE chain for the portable k-means family (q49, q112):
     * dv → deterministic seeds c0 → three unrolled Lloyd assign/recompute
     * rounds → final `lists`(vec_id, v, cid) — the twin of
-    * kmeansCentroids(portableMeans = true) + assign. Callers prepend
+    * kmeansCentroids + assign. Callers prepend
     * "WITH " and append their own tail CTEs. `nlist` is the seed count:
     * the fixed-nlist family (q49/q139/q142/q183) passes its registered
     * literal 8; the auto family passes [[oracleNlist]]. */
@@ -2485,7 +2456,7 @@ object Similarity {
   }
 
   /** Shared DuckDB CTE chain for the PQ family (q175, q176): the twin of
-    * pqStage(m = 4, ksub = 16, iters = 3, portableMeans = true). The
+    * pqStage(m = 4, ksub = 16, iters = 3). The
     * subspace id rides every CTE's key exactly as it rides every engine
     * shuffle key — the m codebooks train in one keyed chain here too,
     * not m unrolled copies. Ends at `codes`(vec_id, sub, sv, cid) and
@@ -2540,7 +2511,7 @@ object Similarity {
        |${assignCte(n("cb3"), n("codes"))}""".stripMargin
   }
 
-  /** DuckDB twin of pqCodebookReport(m=4, ksub=16, portableMeans=true). */
+  /** DuckDB twin of pqCodebookReport(m=4, ksub=16). */
   private def q175OracleSql: String = {
     val sd = 64 / 4
     s"""WITH ${pqCtes(4, 16)},
@@ -2561,7 +2532,7 @@ object Similarity {
        |FROM per GROUP BY sub ORDER BY sub""".stripMargin
   }
 
-  /** DuckDB twin of pqAdcRecall(m=4, ksub=16, k=10, portableMeans=true):
+  /** DuckDB twin of pqAdcRecall(m=4, ksub=16, k=10):
     * reconstruction = the sub-ordered concatenation of each vector's
     * codewords; ADC ranking = round-6 cosine against the reconstruction;
     * exact ranking = the q36 text verbatim. */
@@ -2605,7 +2576,7 @@ object Similarity {
        |LEFT JOIN hits h ON h.query_id = q.query_id
        |ORDER BY q.query_id""".stripMargin
 
-  /** DuckDB twin of ivfTopK(portableMeans = true): the three Lloyd
+  /** DuckDB twin of ivfTopK: the three Lloyd
     * iterations unroll into chained assign/recompute CTE rounds (the
     * shared [[kmeansListsCtes]]). Dot products are explicit sequential
     * list folds (list_sum is a strict left fold, like Spark's
@@ -2719,8 +2690,7 @@ object Similarity {
     // LOSS on q176's sibling leg (0.59 -> 0.71 median, worst 1.04)
     val exact = bruteForceTopK(embeddings, queryIds, k)
       .select(col("query_id"), col("vec_id"))
-    val ann = annTopK(embeddings, queryIds, k, portablePlanes = true,
-        corpusKey = corpusKey)
+    val ann = annTopK(embeddings, queryIds, k, corpusKey = corpusKey)
       .select(col("query_id"), col("vec_id"))
     val hits = ann.join(exact, Seq("query_id", "vec_id"))
       .groupBy(col("query_id")).agg(count(lit(1)).cast("bigint").as("n_hits"))
@@ -2733,7 +2703,7 @@ object Similarity {
       .orderBy(col("query_id"))
   }
 
-  /** DuckDB twin of semanticDedup(threshold = 0.3, portableMeans = true):
+  /** DuckDB twin of semanticDedup(threshold = 0.3):
     * the shared k-means `lists` CTEs, then the same in-cluster pair
     * predicate (round-6 cosine in the join condition) and greedy
     * smaller-id drop rule. */
@@ -2752,8 +2722,8 @@ object Similarity {
     * can never drift from the operators it compares.
     *
     * Determinism: exact pair-set arithmetic over deterministic pair
-    * derivations (the q76 and q112 machinery, portableMeans on the
-    * registered query); jaccard = |both| / |union| is one guarded IEEE
+    * derivations (the q76 and q112 machinery, DetAgg centroid means);
+    * jaccard = |both| / |union| is one guarded IEEE
     * division. Scale: each leg is its family's bounded candidate
     * machinery (banded, never all-pairs; in-cluster, never all-pairs);
     * the endpoint restriction is two semi-joins against the
@@ -2761,8 +2731,7 @@ object Similarity {
     * join on 16-byte pair keys into a single-row aggregate. */
   def lexicalSemanticAgreement(docs: DataFrame, embeddings: DataFrame,
       maxHamming: Int = 8, threshold: Double = 0.3, nlist: Int = 0,
-      iters: Int = 3, portableMeans: Boolean = false,
-      corpusKey: Option[String] = None,
+      iters: Int = 3, corpusKey: Option[String] = None,
       docsKey: Option[String] = None): DataFrame = {
     val ids = docs.select(col("doc_id"))
       .join(embeddings.select(col("vec_id").as("doc_id")), Seq("doc_id"))
@@ -2775,8 +2744,7 @@ object Similarity {
           docsKey)
         .select(col("d1"), col("d2")))
     val sem = restrict(
-      semanticPairStage(embeddings, threshold, nlist, iters, portableMeans,
-        corpusKey)
+      semanticPairStage(embeddings, threshold, nlist, iters, corpusKey)
         ._2.select(col("d1"), col("d2")))
     val m = lex.withColumn("in_lex", lit(true))
       .join(sem.withColumn("in_sem", lit(true)), Seq("d1", "d2"), "full_outer")
@@ -2865,7 +2833,7 @@ object Similarity {
        |ORDER BY cid""".stripMargin
   }
 
-  /** DuckDB twin of [[ivfProbeRecallCurve]](portableMeans = true): the
+  /** DuckDB twin of [[ivfProbeRecallCurve]]: the
     * shared k-means lists, probes ranked over ALL centroids, candidates
     * scored once with their admitting probe rank, one unnest(range) per
     * nprobe row, and the exact baseline under the identical cosine. */
@@ -2918,7 +2886,7 @@ object Similarity {
        |GROUP BY h.nprobe ORDER BY nprobe""".stripMargin
   }
 
-  /** DuckDB twin of [[knnHubness]](portableMeans = true): the shared
+  /** DuckDB twin of [[knnHubness]]: the shared
     * k-means lists, per-row norms computed once, within-list kNN via the
     * same (cosine DESC, dst) window, in-degree from a left join so
     * never-chosen vectors land in the 0 bucket. */
@@ -2941,11 +2909,11 @@ object Similarity {
        |GROUP BY in_degree ORDER BY in_degree""".stripMargin
   }
 
-  /** DuckDB twin of [[ivfListStats]](portableMeans = true): shared
+  /** DuckDB twin of [[ivfListStats]]: shared
     * k-means lists joined to the final centroids c3, round-6 member
     * cosine, DetAgg decimal average, shares against the one-row total. */
 
-  /** DuckDB twin of ivfSplitRebalance(nlist=8, portableMeans=true): the
+  /** DuckDB twin of ivfSplitRebalance(nlist=8): the
     * shared k-means lists, the hot cut at the driver-literal mean list
     * size ([[oracleMaxList]] — OracleCtx count, the autoNlist pattern),
     * the keyed 2-means split chain (seeds = two lowest vec_ids per hot
@@ -3104,12 +3072,11 @@ object Similarity {
     * norms, bounded top-k window, 8-byte-key aggregates) plus one
     * |labels|-key closing join. */
   def knnLabelEval(embeddings: DataFrame, k: Int = 5, nlist: Int = 0,
-      iters: Int = 3, portableMeans: Boolean = false,
-      corpusKey: Option[String] = None): DataFrame = {
+      iters: Int = 3, corpusKey: Option[String] = None): DataFrame = {
     // the q138 scaffold verbatim (ONE neighborhood definition — see
     // inListKnn) with the label carried through as a rider column
     val (lists, edges) =
-      inListKnn(embeddings, k, nlist, iters, portableMeans,
+      inListKnn(embeddings, k, nlist, iters,
         riders = Seq("label"), corpusKey = corpusKey)
     val knn = edges.select(col("src"), col("src_label").as("own"),
       col("dst"), col("dst_label").as("nlabel"))
@@ -3250,10 +3217,9 @@ object Similarity {
     },
 
     Q("q39_ann_lsh_topk", q39OracleSql,
-      "Hyperplane-LSH ANN top-10 for the same 3 queries: banded signature bucket equi-join + exact re-rank. The q39 registration uses md5-parity planes so the DuckDB twin re-derives the identical signatures (the 'approximate' method is a deterministic function of the corpus — only the recall is approximate, and that is pinned vs q36 in SimilaritySpec); production uses the xxhash64 planes (portablePlanes=false). Both Spark's aggregate and DuckDB's list_sum are strict sequential folds, so the projection sign test agrees to the last ulp.") {
+      "Hyperplane-LSH ANN top-10 for the same 3 queries: banded signature bucket equi-join + exact re-rank. The planes are md5-parity signs, so the DuckDB twin re-derives the identical signatures (the 'approximate' method is a deterministic function of the corpus — only the recall is approximate, and that is pinned vs q36 in SimilaritySpec). Both Spark's aggregate and DuckDB's list_sum are strict sequential folds, so the projection sign test agrees to the last ulp.") {
       (s, d) =>
-        annTopK(Tables.embeddings(s, d), QueryIds, 10, portablePlanes = true,
-            corpusKey = embKey(d))
+        annTopK(Tables.embeddings(s, d), QueryIds, 10, corpusKey = embKey(d))
           .orderBy(col("query_id"), col("rn"))
     },
 
@@ -3304,16 +3270,15 @@ object Similarity {
          |FROM (SELECT DISTINCT query_id FROM exact) e
          |LEFT JOIN hits h ON e.query_id = h.query_id
          |ORDER BY e.query_id""".stripMargin,
-      "ANN recall@10 — the index-quality EVAL registered as a first-class query (the number an ANN deployment monitors before trusting its index): per query, |LSH top-10 ∩ exact top-10| / 10, from the SAME bruteForceTopK and annTopK(portablePlanes) definitions q36/q39 register, so the eval can never drift from the methods it evaluates. SimilaritySpec's recall floor becomes a measured, oracle-checked artifact. Determinism: both top-k sets are total-ordered (rounded cosine DESC, vec_id) in identical formulations, the hit count is an exact integer join-count, and recall is one IEEE division by the literal k. Scale: cost is one brute-force pass (|corpus|×|queries| broadcast dots — the eval is run on a SAMPLE of queries by construction) plus the banded index probe; at 100 TB the exact side is the expensive leg and is exactly what you'd budget a recall eval's query sample against.") {
+      "ANN recall@10 — the index-quality EVAL registered as a first-class query (the number an ANN deployment monitors before trusting its index): per query, |LSH top-10 ∩ exact top-10| / 10, from the SAME bruteForceTopK and annTopK definitions q36/q39 register, so the eval can never drift from the methods it evaluates. SimilaritySpec's recall floor becomes a measured, oracle-checked artifact. Determinism: both top-k sets are total-ordered (rounded cosine DESC, vec_id) in identical formulations, the hit count is an exact integer join-count, and recall is one IEEE division by the literal k. Scale: cost is one brute-force pass (|corpus|×|queries| broadcast dots — the eval is run on a SAMPLE of queries by construction) plus the banded index probe; at 100 TB the exact side is the expensive leg and is exactly what you'd budget a recall eval's query sample against.") {
       (s, d) =>
         annRecall(Tables.embeddings(s, d), QueryIds, 10, corpusKey = embKey(d))
     },
 
     Q("q49_ann_ivf_topk", q49OracleSql,
-      "IVF ANN top-10: k-means-lite coarse quantizer (DataFrame Lloyd iterations), probe 3 of 8 inverted lists, exact re-rank. Registered with portableMeans=true: centroid means are DetAgg decimal sums (order-independent, bit-identical cross-engine), dot products are sequential folds on both engines, and argmax/probe ties mirror exactly — so even the k-means ITERATIONS replay identically in the DuckDB twin (three unrolled assign/recompute CTE rounds) and this 'approximate' index gets a full value-hash oracle. Production default keeps plain double means (cheaper; recall is insensitive to centroid ulps). Recall vs q36 asserted in SimilaritySpec.") {
+      "IVF ANN top-10: k-means-lite coarse quantizer (DataFrame Lloyd iterations), probe 3 of 8 inverted lists, exact re-rank. Centroid means are DetAgg decimal sums (order-independent, bit-identical cross-engine), dot products are sequential folds on both engines, and argmax/probe ties mirror exactly — so even the k-means ITERATIONS replay identically in the DuckDB twin (three unrolled assign/recompute CTE rounds) and this 'approximate' index gets a full value-hash oracle. Recall vs q36 asserted in SimilaritySpec.") {
       (s, d) =>
-        ivfTopK(Tables.embeddings(s, d), QueryIds, 10, portableMeans = true,
-            corpusKey = embKey(d))
+        ivfTopK(Tables.embeddings(s, d), QueryIds, 10, corpusKey = embKey(d))
           .orderBy(col("query_id"), col("rn"))
     },
 
@@ -3358,10 +3323,10 @@ object Similarity {
     },
 
     Q("q112_semantic_dedup", q112OracleSql,
-      "SemDeDup-shape semantic deduplication (the published recipe for embedding-level dedup at corpus scale): cluster the corpus with the q49 coarse quantizer, run exact cosine ONLY inside a cluster, drop any vector with a smaller-id in-cluster neighbor at cosine >= 0.3, report per-cluster kept/dropped. Registered with portableMeans=true, so the k-means iterations themselves replay bit-identically in the DuckDB twin (the q49 machinery — decimal-sum centroid means, larger-cid argmax ties) and the round-6 cosine threshold test mirrors exactly: a full value-hash oracle for an 'approximate' dedup method. Greedy keep-lowest-id is deterministic; its chain-overdrop bias is documented on the operator, with the q69/q81 connected-components machinery as the in-repo exact alternative. Scale: the registered query AUTO-SCALES nlist (per-list size held near 63, floored at the oracle's 8 — exactly 8 lists at verify scale so the unrolled DuckDB twin matches; the q138 fix, under which fixed nlist=8 measured 2.1x wall-clock on 5x data), the cluster equi-join bounds pairwise work to n·B, the threshold lives in the join condition so non-matches never materialize (the q38 trick), and the checkpointed signature table is the only thing read twice — never the Lloyd chain.") {
+      "SemDeDup-shape semantic deduplication (the published recipe for embedding-level dedup at corpus scale): cluster the corpus with the q49 coarse quantizer, run exact cosine ONLY inside a cluster, drop any vector with a smaller-id in-cluster neighbor at cosine >= 0.3, report per-cluster kept/dropped. The k-means iterations themselves replay bit-identically in the DuckDB twin (the q49 machinery — decimal-sum centroid means, larger-cid argmax ties) and the round-6 cosine threshold test mirrors exactly: a full value-hash oracle for an 'approximate' dedup method. Greedy keep-lowest-id is deterministic; its chain-overdrop bias is documented on the operator, with the q69/q81 connected-components machinery as the in-repo exact alternative. Scale: the registered query AUTO-SCALES nlist (per-list size held near 63, floored at the oracle's 8 — exactly 8 lists at verify scale so the unrolled DuckDB twin matches; the q138 fix, under which fixed nlist=8 measured 2.1x wall-clock on 5x data), the cluster equi-join bounds pairwise work to n·B, the threshold lives in the join condition so non-matches never materialize (the q38 trick), and the checkpointed signature table is the only thing read twice — never the Lloyd chain.") {
       (s, d) =>
         semanticDedup(Tables.embeddings(s, d), threshold = 0.3,
-          portableMeans = true, corpusKey = embKey(d))
+          corpusKey = embKey(d))
     },
 
     Q("q113_embedding_outliers",
@@ -3513,24 +3478,22 @@ object Similarity {
     },
 
     Q("q138_knn_hubness", q138OracleSql,
-      "kNN-graph hubness histogram — the embedding-space health check retrieval quality silently depends on: build the k-nearest-neighbor graph the way a production index would (top-10 by cosine INSIDE each IVF list — the q112 bound, pairwise work n·B with B the target list size, never n²), then histogram each vector's in-degree. Healthy spaces concentrate in-degree near k; hub vectors (in-degree >> k, the high-dimensional hubness pathology) crowd out true neighbors in every result page they touch, and the 0-bucket counts vectors NO ONE retrieves (orphans — singleton-list members included, kept by the left join). Registered with portableMeans=true so the k-means lists replay bit-identically in the DuckDB twin (q49 machinery); per-row norms are computed once on the checkpointed list table and the round-6 cosine is the q112 IEEE shape, so even the graph edges are engine-portable and the histogram gets a full value-hash oracle. Scale: the registered query AUTO-SCALES nlist to hold per-list size near 63 (exactly the oracle's 8 lists at verify scale, so the unrolled twin matches; fixed nlist measured 7x wall-clock on 5x data, auto restores near-linear), the list self-join is the SemDeDup n·B bound, the top-k window is per-list, and both closing aggregates shuffle 8-byte keys.") {
+      "kNN-graph hubness histogram — the embedding-space health check retrieval quality silently depends on: build the k-nearest-neighbor graph the way a production index would (top-10 by cosine INSIDE each IVF list — the q112 bound, pairwise work n·B with B the target list size, never n²), then histogram each vector's in-degree. Healthy spaces concentrate in-degree near k; hub vectors (in-degree >> k, the high-dimensional hubness pathology) crowd out true neighbors in every result page they touch, and the 0-bucket counts vectors NO ONE retrieves (orphans — singleton-list members included, kept by the left join). DetAgg centroid means make the k-means lists replay bit-identically in the DuckDB twin (q49 machinery); per-row norms are computed once on the checkpointed list table and the round-6 cosine is the q112 IEEE shape, so even the graph edges are engine-portable and the histogram gets a full value-hash oracle. Scale: the registered query AUTO-SCALES nlist to hold per-list size near 63 (exactly the oracle's 8 lists at verify scale, so the unrolled twin matches; fixed nlist measured 7x wall-clock on 5x data, auto restores near-linear), the list self-join is the SemDeDup n·B bound, the top-k window is per-list, and both closing aggregates shuffle 8-byte keys.") {
       (s, d) =>
-        knnHubness(Tables.embeddings(s, d), k = 10, portableMeans = true,
-          corpusKey = embKey(d))
+        knnHubness(Tables.embeddings(s, d), k = 10, corpusKey = embKey(d))
     },
 
     Q("q139_ivf_list_stats", q139OracleSql(nlist = 8),
-      "IVF index-health table — the operational view of the q49/q112 coarse quantizer: per inverted list its size, corpus share, skew vs the mean list size (the imbalance factor an ANN deployment alarms on — probe latency is driven by the hottest lists, and skew >> 1 means the quantizer needs re-training or the corpus drifted), and mean member->centroid cosine (quantization quality: a low-cohesion list should be split before recall degrades — the nlist-scaling trigger). Registered with portableMeans=true: lists and centroids replay bit-identically in DuckDB, the member cosine is the family's round-6 shape against the FINAL centroids, the average is DetAgg's decimal sum, and the share/skew divisions are identical IEEE expressions — full value-hash oracle. Scale: one corpus scan with a broadcast nlist-row centroid join, one nlist-key map-side-combined aggregate, one broadcast one-row total; no pairwise stage exists in this query at all.") {
+      "IVF index-health table — the operational view of the q49/q112 coarse quantizer: per inverted list its size, corpus share, skew vs the mean list size (the imbalance factor an ANN deployment alarms on — probe latency is driven by the hottest lists, and skew >> 1 means the quantizer needs re-training or the corpus drifted), and mean member->centroid cosine (quantization quality: a low-cohesion list should be split before recall degrades — the nlist-scaling trigger). With DetAgg centroid means, lists and centroids replay bit-identically in DuckDB, the member cosine is the family's round-6 shape against the FINAL centroids, the average is DetAgg's decimal sum, and the share/skew divisions are identical IEEE expressions — full value-hash oracle. Scale: one corpus scan with a broadcast nlist-row centroid join, one nlist-key map-side-combined aggregate, one broadcast one-row total; no pairwise stage exists in this query at all.") {
       (s, d) =>
-        ivfListStats(Tables.embeddings(s, d), portableMeans = true,
-          corpusKey = embKey(d))
+        ivfListStats(Tables.embeddings(s, d), corpusKey = embKey(d))
     },
 
     Q("q142_ivf_probe_recall", q142OracleSql(k = 10, nlist = 8, nQueries = 3),
-      "IVF probe-recall tuning curve — recall@10 and mean candidate count per query as a function of nprobe (1..nlist): the table an ANN deployment reads to pick its recall/latency operating point, and the ANN twin of q117's near-dup threshold curve (both turn a tuning knob into an oracle-checked artifact instead of folklore). Built from ONE q49 probe pass: every candidate is scored once carrying the rank of the centroid that admitted it, so each nprobe row is a filter + bounded top-k window over the same table — the curve costs one index run, never nlist of them. The curve carries its own correctness anchor: at nprobe = nlist the candidate set is the full corpus under the IDENTICAL round-6 cosine, so recall ends at exactly 1.0 and avg_candidates at n-1 (SimilaritySpec pins both). Registered with portableMeans=true — k-means lists, probe ranks, cosines, and the integer hit counts all replay bit-identically in DuckDB; the final divisions are one IEEE expression per row. Scale: probe table is |q|·nlist broadcast rows, candidate scoring is the q49 inverted-file bound, the nprobe explosion multiplies only the CANDIDATE set (|q|·n at worst), and the closing aggregates run on nlist·|q| keys.") {
+      "IVF probe-recall tuning curve — recall@10 and mean candidate count per query as a function of nprobe (1..nlist): the table an ANN deployment reads to pick its recall/latency operating point, and the ANN twin of q117's near-dup threshold curve (both turn a tuning knob into an oracle-checked artifact instead of folklore). Built from ONE q49 probe pass: every candidate is scored once carrying the rank of the centroid that admitted it, so each nprobe row is a filter + bounded top-k window over the same table — the curve costs one index run, never nlist of them. The curve carries its own correctness anchor: at nprobe = nlist the candidate set is the full corpus under the IDENTICAL round-6 cosine, so recall ends at exactly 1.0 and avg_candidates at n-1 (SimilaritySpec pins both). With DetAgg centroid means, k-means lists, probe ranks, cosines, and the integer hit counts all replay bit-identically in DuckDB; the final divisions are one IEEE expression per row. Scale: probe table is |q|·nlist broadcast rows, candidate scoring is the q49 inverted-file bound, the nprobe explosion multiplies only the CANDIDATE set (|q|·n at worst), and the closing aggregates run on nlist·|q| keys.") {
       (s, d) =>
         ivfProbeRecallCurve(Tables.embeddings(s, d), QueryIds, k = 10,
-          portableMeans = true, corpusKey = embKey(d))
+          corpusKey = embKey(d))
     },
 
     Q("q146_lloyd_step",
@@ -3587,7 +3550,7 @@ object Similarity {
       "Margin-based cross-lingual pair mining (Artetxe & Schwenk 2019, the LASER/CCMatrix bitext-mining criterion): for every English document its best Spanish candidate by RATIO MARGIN — cos(x,y) divided by the mean of the two sides' average top-4 cross-lingual cosines — the normalization that fixes raw-cosine mining (hub vectors score high against EVERYTHING; dividing by each side's local neighborhood density cancels the hub effect), with the standard margin >= 1.05 acceptance flag. The parallel-corpus construction step of multilingual training pipelines, here bounded to IVF-list co-membership (the q112/q138 SemDeDup bound): candidates, kNN averages, and the best pick all live inside the same coarse-quantizer list, so pairwise work is n*B, never |en|x|es|. Determinism: round-6-family cosines land as exact integer micro-units (round(cos*1e6) — both engines round half away from zero), the top-4 averages stay exact integer (sum, count) pairs, and each margin is ONE IEEE expression over those integers — so even the margin-ordered best-candidate pick replays identically; list membership is the portable k-means chain the oracle unrolls. Scale: the Lloyd chain + one broadcast-assign pass (the accepted IVF build cost), then ONE within-list language-split join reused three times off a checkpoint (both kNN windows + the best pick — all bounded by list size), two 8-byte-key aggregates, one |src|-key window. autoNlist holds per-list size ~63 as the corpus grows (q138's measured fix) — exactly the oracle's 8 lists at verify scale, deliberately more beyond it.") {
       (s, d) =>
         bitextMarginMining(Tables.embeddings(s, d), Tables.documents(s, d),
-          langX = "en", langY = "es", k = 4, portableMeans = true,
+          langX = "en", langY = "es", k = 4,
           corpusKey = embKey(d))
     },
 
@@ -3595,21 +3558,20 @@ object Similarity {
       "Hard-negative mining for contrastive retrieval training — the training-PAIR construction step (not a diagnostic): per query vector, its top same-label positive and its HARDEST different-label negative (highest cosine) among IVF-list co-members, with the confusable flag when the negative outranks the positive — exactly the (anchor, positive, hard-negative) triples an embedding fine-tune consumes, and the well-known lever that separates in-batch-random from hard-negative training (Karpukhin et al. 2020, DPR). Candidates bounded to the query's coarse-quantizer list (the q112/q138/q150 SemDeDup bound — at scale this IS how hard negatives are mined, from the ANN index's own neighborhoods); queries are a deterministic stride sample (vec_id % 50). Both elections run over exact integer micro-cosines via null-ordered max_by structs (non-matching labels contribute null ordering keys and drop out), ties to the smaller candidate id — replay-identical to the oracle's partitioned windows; queries lacking a positive or negative in-list are excluded by the rider counts. Scale: the Lloyd chain + one within-list join off the checkpointed list table, one |queries|-key aggregate; the stride keeps the query side a sample, the list bound keeps candidates n·B. The synthetic corpus's labels are weak clusters, so every verify-scale query is confusable (hard negative outranks the positive — itself the realistic regime that motivates hard-negative training); the non-confusable branch is spec-pinned on a separated-cluster fixture.") {
       (s, d) =>
         hardNegatives(Tables.embeddings(s, d), queryStride = 50,
-          portableMeans = true, corpusKey = embKey(d))
-    },
-
-    Q("q165_knn_label_eval", q165OracleSql(k = 5),
-      "kNN label-agreement — the standard INTRINSIC eval of an embedding space when labels exist, and the measured version of the property every downstream consumer here silently assumes (retrieval quality in q36/q49, SemDeDup validity in q112, hard-negative informativeness in q155): each vector's 5 nearest in-list neighbors vote on its label; reported per true label as majority-vote accuracy. Neighborhoods are bounded to IVF-list co-membership (the q138 production-index bound — pairwise work n*B, never n^2) with AUTO-SCALED nlist (per-list size held near 63, floored at the oracle's 8 so verify scale replays the 8-list chain; fixed-8 measured 2.0x on 5x data during bring-up, auto restores ~linear), which is ALSO what a deployed index would serve, so the eval measures the space as retrieval will actually see it. Majority ties break (max count, then smallest label) — one strict order on both engines; singleton-list vectors have no neighbors and are counted in n_vecs but not n_scored, never silently dropped (the q138 orphan convention). Registered with portableMeans=true: lists, round-6 cosines, votes, and the tie-broken argmax all replay bit-identically in the DuckDB twin — a full value-hash oracle for a model-quality metric. Scale: q138's exact plan (checkpointed list table with per-row norms, bounded per-list top-k window, 8-byte-key aggregates) plus one |labels|-key closing join.") {
-      (s, d) =>
-        knnLabelEval(Tables.embeddings(s, d), k = 5, portableMeans = true,
           corpusKey = embKey(d))
     },
 
+    Q("q165_knn_label_eval", q165OracleSql(k = 5),
+      "kNN label-agreement — the standard INTRINSIC eval of an embedding space when labels exist, and the measured version of the property every downstream consumer here silently assumes (retrieval quality in q36/q49, SemDeDup validity in q112, hard-negative informativeness in q155): each vector's 5 nearest in-list neighbors vote on its label; reported per true label as majority-vote accuracy. Neighborhoods are bounded to IVF-list co-membership (the q138 production-index bound — pairwise work n*B, never n^2) with AUTO-SCALED nlist (per-list size held near 63, floored at the oracle's 8 so verify scale replays the 8-list chain; fixed-8 measured 2.0x on 5x data during bring-up, auto restores ~linear), which is ALSO what a deployed index would serve, so the eval measures the space as retrieval will actually see it. Majority ties break (max count, then smallest label) — one strict order on both engines; singleton-list vectors have no neighbors and are counted in n_vecs but not n_scored, never silently dropped (the q138 orphan convention). With DetAgg centroid means, lists, round-6 cosines, votes, and the tie-broken argmax all replay bit-identically in the DuckDB twin — a full value-hash oracle for a model-quality metric. Scale: q138's exact plan (checkpointed list table with per-row norms, bounded per-list top-k window, 8-byte-key aggregates) plus one |labels|-key closing join.") {
+      (s, d) =>
+        knnLabelEval(Tables.embeddings(s, d), k = 5, corpusKey = embKey(d))
+    },
+
     Q("q174_lexical_semantic_agreement", q174OracleSql,
-      "Lexical x semantic near-dup AGREEMENT — the two dedup modalities the engine ships (q76's simhash band pairs over text, q112's in-cluster cosine pairs over embeddings) compared on the id universe both cover, as one contingency row: per-modality pair counts, the overlap, each modality's exclusive mass, and the Jaccard of the two pair sets. This is the table that decides WHICH dedup pass a corpus needs: semantic-only mass is paraphrase duplication lexical banding cannot see, lexical-only mass is near-verbatim text whose embeddings drifted apart, and a low Jaccard says the passes are complements, not substitutes (on this synthetic corpus, where embeddings are independent of text, the table honestly reports near-zero agreement — the q159 degenerate-result-surfaced convention). Both pair sets come from their family's single source of truth (simhashNearDupPairsCapped; semanticPairStage, ALSO q112's pair stage — factored, not copied) with portableMeans=true, so the whole contingency row is value-hash exact. Determinism: exact pair-set arithmetic; jaccard = |both|/|union| one guarded IEEE division (NULL when both pair sets are empty, identically on both engines). Scale: each leg is its family's bounded candidate machinery (banded / in-cluster, never all-pairs), the endpoint restriction two semi-joins against the checkpointed id intersection, the comparison one full-outer join on 16-byte pair keys into a single-row aggregate.") {
+      "Lexical x semantic near-dup AGREEMENT — the two dedup modalities the engine ships (q76's simhash band pairs over text, q112's in-cluster cosine pairs over embeddings) compared on the id universe both cover, as one contingency row: per-modality pair counts, the overlap, each modality's exclusive mass, and the Jaccard of the two pair sets. This is the table that decides WHICH dedup pass a corpus needs: semantic-only mass is paraphrase duplication lexical banding cannot see, lexical-only mass is near-verbatim text whose embeddings drifted apart, and a low Jaccard says the passes are complements, not substitutes (on this synthetic corpus, where embeddings are independent of text, the table honestly reports near-zero agreement — the q159 degenerate-result-surfaced convention). Both pair sets come from their family's single source of truth (simhashNearDupPairsCapped; semanticPairStage, ALSO q112's pair stage — factored, not copied), and DetAgg centroid means make the whole contingency row value-hash exact. Determinism: exact pair-set arithmetic; jaccard = |both|/|union| one guarded IEEE division (NULL when both pair sets are empty, identically on both engines). Scale: each leg is its family's bounded candidate machinery (banded / in-cluster, never all-pairs), the endpoint restriction two semi-joins against the checkpointed id intersection, the comparison one full-outer join on 16-byte pair keys into a single-row aggregate.") {
       (s, d) =>
         lexicalSemanticAgreement(Tables.documents(s, d),
-          Tables.embeddings(s, d), portableMeans = true,
+          Tables.embeddings(s, d),
           corpusKey = embKey(d), docsKey = Some(s"$d/documents.parquet"))
     },
 
@@ -3617,21 +3579,21 @@ object Similarity {
       "Product-quantization codebook health + distortion (Jegou et al. 2011): split each 64-dim vector into 4 contiguous 16-dim subspaces, train a 16-codeword codebook PER subspace (so a vector stores as 4x4 = 16 bits instead of 2048 — the 128x compression that lets a 100 TB embedding corpus fit an ANN index's memory budget), and report per subspace: corpus rows, codewords actually used, the hottest codeword's mass, and mean squared reconstruction error. The table a PQ deployment reads before trusting its codes: dead codewords waste bits, a hot codeword says the subspace carries no information, avg_sq_error bounds ADC's score error. The 4 Lloyd chains are NOT a driver loop: the subspace id rides every shuffle key, so all 4 codebooks train in ONE keyed chain — per iteration exactly one (sub,cid,pos)-keyed shuffle plus a tiny m*ksub checkpoint, the same barrier count as a single q49 kmeans build at ANY m (the oracle's CTEs are keyed identically, not unrolled per subspace). Determinism: seeds/assignment/means follow the q49 portable conventions (lowest-vec_id seeds, argmax-dot ties to larger cid, DetAgg decimal means); sqerr = dot(sv - cvec, sv - cvec) — every fold term >= 0, so round-6 has no sign-of-zero hazard; distortion sums are DetAgg decimals. Scale: keyed Lloyd chain + one broadcast codeword join + one (sub,cid)-key map-side-combined aggregate (64 groups) + one 4-key rollup — never pairwise, and the corpus is scanned once per iteration regardless of m.") {
       (s, d) =>
         pqCodebookReport(Tables.embeddings(s, d), m = 4, ksub = 16,
-          portableMeans = true, corpusKey = embKey(d))
+          corpusKey = embKey(d))
     },
 
     Q("q176_pq_adc_recall", q176OracleSql,
       "PQ asymmetric-distance recall@10 — the index-quality eval of the COMPRESSION tier (q128 evals the candidate tier): each corpus vector is replaced by its reconstruction (the sub-ordered concatenation of its 4 codewords from q175's codebooks) and ranked against the UNCOMPRESSED query by round-6 cosine; reported per query as |ADC top-10 ∩ exact top-10| / 10 against q36's brute-force text verbatim. cosine(q, recon) IS asymmetric distance computation: the dot decomposes over subspace concatenation, so this single cosine equals the sum-of-table-lookups a production PQ scorer runs — written as one expression so the eval shares q36's scoring convention, with the serving shape noted rather than re-derived. Determinism: reconstructions are portable decimal-mean codewords (the keyed Lloyd chain replays bit-identically in the oracle), both rankings total-order on (round-6 cosine DESC, vec_id) — vectors sharing all 4 codes have IDENTICAL reconstructions and resolve by the id tiebreak on both engines — and the hit count is an exact join count. Scale: the keyed Lloyd chain + one |corpus| groupBy(vec_id) reassembly (4 rows/key) + the q36 broadcast-queries pass over reconstructions; the eval runs on a query sample by construction and the corpus side stays one pass.") {
       (s, d) =>
         pqAdcRecall(Tables.embeddings(s, d), QueryIds, k = 10, m = 4,
-          ksub = 16, portableMeans = true, corpusKey = embKey(d))
+          ksub = 16, corpusKey = embKey(d))
     },
 
     Q("q177_pq_code_neardup", q177OracleSql,
       "PQ codes as dedup bands — the serving index's own 16-bit codes reused as an LSH candidate generator, closing the loop between the compression tier (q175/q176) and the dedup family: a pair is a candidate if it agrees on ALL codewords of ANY band (band 0 = subspaces 0-1, band 1 = subspaces 2-3 — two 8-bit band keys per vector, the OR-of-ANDs amplification q34/q39/q76 use, with signatures the index already stores for free). Candidates get one exact round-6 cosine; the single-row report is the candidate-generator quality table: pair count, semantic mass at the q112 threshold (0.3), precision, mean pair cosine — the number that decides whether PQ buckets can replace a dedicated signature pass for semantic dedup on an already-indexed corpus. Determinism: the portable keyed Lloyd chain (q175's oracle CTEs verbatim), exact integer band keys, round-6 cosines, DetAgg decimal mean — empty-candidate-set guards identical on both engines (NULL precision/mean). Scale: one |corpus| code-pivot aggregate + a band-key equi-join (2|corpus| rows, 8-bit keys — never all-pairs, bucket-bounded exactly like the q76 band join with q175's top_code_share as the hot-bucket early warning) + one exact-rerank join into a single-row aggregate.") {
       (s, d) =>
         pqCodeNearDup(Tables.embeddings(s, d), threshold = 0.3, m = 4,
-          ksub = 16, portableMeans = true, corpusKey = embKey(d))
+          ksub = 16, corpusKey = embKey(d))
     },
 
     Q("q180_ivf_state_served", q139OracleSql(nlist = 8),
@@ -3676,7 +3638,7 @@ object Similarity {
       "IVF hot-list SPLIT — the index-maintenance operation q139's health table exists to trigger (its own scaladoc names it: a low-cohesion or oversized list is one the index should split before recall degrades), registered with the post-split health table as the oracle-checked output. Every list above the driver-literal mean-size threshold (ceil(n/nlist) — OracleCtx count on the oracle side, the memoized corpus count on the engine side: the autoNlist pattern, identical literals at every SF) splits by a deterministic 2-means over its own members: seeds = the list's two lowest vec_ids, three Lloyd rounds in the portable q49/q175 conventions (decimal-sum means, argmax ties to the larger child), children remapped parent + child*nlist (collision-free below nlist). NOT a driver loop: the hot-list id rides every shuffle key, so ALL hot lists split in one keyed chain — per round one (cid, child, pos)-keyed decimal-mean shuffle plus a <=2-rows-per-member argmax window, the same barrier count at any hot-list count (the pqStage lesson keyed by cid instead of sub). One pass halves hot lists; a child can still exceed the threshold, and a deployment reruns the pass until the health table is quiet — each pass one more keyed chain, never a rescan of cold lists' text. Determinism: the whole chain is the portable-means family, so the rebalanced index replays bit-identically in the unrolled DuckDB twin — a full value-hash oracle for an index maintenance op. Scale: the split universe is only the hot lists' members (skew-proportional, not corpus-proportional); the health tail is q139's cost.") {
       (s, d) =>
         ivfSplitRebalance(Tables.embeddings(s, d), nlist = 8,
-          portableMeans = true, corpusKey = embKey(d))
+          corpusKey = embKey(d))
     },
 
     Q("q198_rebalanced_health_state_served", q198OracleSql,
@@ -4035,13 +3997,12 @@ object Similarity {
       val dir = graft.AnnSubstrate.deleteOnExit(java.nio.file.Files
         .createTempDirectory("graft_ivfforget_state").toString)
       val emb = Tables.embeddings(s, d)
-      graft.streaming.IvfStateStream.train(emb, dir, nlist = 8,
-        portableMeans = true)
+      graft.streaming.IvfStateStream.train(emb, dir, nlist = 8)
       // the PQ tier folds too (updatePq = coarse-list append + codes),
       // so forget's codes leg executes against real state and q206 can
       // certify the compressed tier's survivors as its own artifact
       graft.streaming.IvfStateStream.trainPq(emb, dir, m = 4, ksub = 16,
-        portableMeans = true, corpusKey = embKey(d))
+        corpusKey = embKey(d))
       graft.streaming.IvfStateStream.updatePq(dir)(
         emb.filter(col("vec_id") % 2 === 0), 0L)
       graft.streaming.IvfStateStream.updatePq(dir)(
@@ -4070,8 +4031,7 @@ object Similarity {
       val dir = graft.AnnSubstrate.deleteOnExit(java.nio.file.Files
         .createTempDirectory("graft_ivfrebal_state").toString)
       val emb = Tables.embeddings(s, d)
-      graft.streaming.IvfStateStream.train(emb, dir, nlist = 8,
-        portableMeans = true)
+      graft.streaming.IvfStateStream.train(emb, dir, nlist = 8)
       graft.streaming.IvfStateStream.update(dir)(
         emb.filter(col("vec_id") % 2 === 0), 0L)
       graft.streaming.IvfStateStream.update(dir)(
@@ -4082,10 +4042,8 @@ object Similarity {
       val n = graft.AnnSubstrate.getOrBuild(s,
         s"count|$d/embeddings.parquet")(emb.count())
       val maxList = math.ceil(n.toDouble / 8).toInt
-      graft.streaming.IvfStateStream.rebalance(s, dir, maxList,
-        portableMeans = true)
-      graft.streaming.IvfStateStream.rebalance(s, dir, maxList,
-        portableMeans = true)
+      graft.streaming.IvfStateStream.rebalance(s, dir, maxList)
+      graft.streaming.IvfStateStream.rebalance(s, dir, maxList)
       dir
     }
 
@@ -4162,14 +4120,13 @@ object Similarity {
       val dir = graft.AnnSubstrate.deleteOnExit(java.nio.file.Files
         .createTempDirectory("graft_ivf_state").toString)
       val emb = Tables.embeddings(s, d)
-      graft.streaming.IvfStateStream.train(emb, dir, nlist = 8,
-        portableMeans = true)
+      graft.streaming.IvfStateStream.train(emb, dir, nlist = 8)
       // the PQ tier trains into the same state dir (q183's ADC read);
       // updatePq folds lists AND codes in one pass. corpusKey shares
       // the q175–q177 memo, so the per-subspace Lloyd chain is not
       // rebuilt when the batch PQ trio already trained it this session
       graft.streaming.IvfStateStream.trainPq(emb, dir, m = 4, ksub = 16,
-        portableMeans = true, corpusKey = embKey(d))
+        corpusKey = embKey(d))
       graft.streaming.IvfStateStream.updatePq(dir)(emb, 0L)
       dir
     }
@@ -4181,11 +4138,10 @@ object Similarity {
     * the OTHER language inside the same list. */
   def bitextMarginMining(embeddings: DataFrame, docs: DataFrame,
       langX: String, langY: String, k: Int = 4, nlist: Int = 0,
-      iters: Int = 3, portableMeans: Boolean = false,
-      corpusKey: Option[String] = None): DataFrame = {
+      iters: Int = 3, corpusKey: Option[String] = None): DataFrame = {
     val chosen =
       resolveNlist(embeddings, nlist, corpusKey)
-    val (_, idx) = ivfIndex(embeddings, chosen, iters, portableMeans, corpusKey)
+    val (_, idx) = ivfIndex(embeddings, chosen, iters, corpusKey)
     val langs = docs.select(col("doc_id").as("vec_id"), col("lang"))
     val lists = idx.join(langs, "vec_id")
       .select(col("cid"), col("vec_id"), col("v"), col("lang"), col("nrm"))
@@ -4279,12 +4235,11 @@ object Similarity {
     * different-label negative among its IVF-list co-members, with the
     * confusable flag (negative outranks the positive). */
   def hardNegatives(embeddings: DataFrame, queryStride: Long, k: Int = 0,
-      iters: Int = 3, portableMeans: Boolean = false,
-      corpusKey: Option[String] = None): DataFrame = {
+      iters: Int = 3, corpusKey: Option[String] = None): DataFrame = {
     // k <= 0 = auto: hold the per-list size as the corpus grows (the
     // q138/q150 rule — exactly the oracle's 8 lists at verify scale)
     val chosen = resolveNlist(embeddings, k, corpusKey)
-    val (_, idx) = ivfIndex(embeddings, chosen, iters, portableMeans, corpusKey)
+    val (_, idx) = ivfIndex(embeddings, chosen, iters, corpusKey)
     val lists = idx
       .join(embeddings.select(col("vec_id"), col("label")), "vec_id")
       .select(col("cid"), col("vec_id"), col("label"), col("v"), col("nrm"))

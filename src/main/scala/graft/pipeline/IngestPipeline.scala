@@ -46,8 +46,7 @@ object IngestPipeline {
       auditDir: String,
       quarantineDir: String,
       groupCol: String = "sensor_id",
-      dataSource: String = "object_store",
-      deterministicStats: Boolean = true)
+      dataSource: String = "object_store")
 
   final case class BatchResult(
       table: String,
@@ -100,7 +99,7 @@ object IngestPipeline {
       if (goodCount > 0) {
         cfg.sink.writeFact(good, s"${table}_transformed")
         StatsAggregation.aggregate(good0, cfg.groupCol, cfg.dataSource,
-            s"${table}_agg", cfg.deterministicStats)
+            s"${table}_agg")
           .foreach(cfg.sink.writeAgg(_, s"${table}_agg"))
       }
       val result = BatchResult(table, total, goodCount, badCount, "SUCCESS")

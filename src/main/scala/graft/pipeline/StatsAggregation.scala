@@ -15,9 +15,9 @@ import graft.functions.DetAgg
   * (helpers.py:167-170 adds the column only when absent; we additionally
   * coalesce nulls the same way the reference's groupBy would surface them).
   *
-  * `deterministic = true` swaps avg/stddev for the [[DetAgg]] decimal
-  * forms — same math, but reproducible under any partitioning (and
-  * oracle-comparable). Either way this is one hash-aggregate with
+  * avg/stddev are the [[DetAgg]] decimal forms — the same math as
+  * Spark's `avg`/`stddev_samp`, but reproducible under any partitioning
+  * (and oracle-comparable). This is one hash-aggregate with
   * map-side partial aggregation: the shuffle carries |groups| × 4×|cols|
   * values, independent of input size.
   */
@@ -30,28 +30,27 @@ object StatsAggregation {
   def numericCols(df: DataFrame): Seq[String] =
     df.schema.fields.filter(f => NumericTypes.contains(f.dataType)).map(_.name).toSeq
 
-  def statsExprs(cols: Seq[String], deterministic: Boolean): Seq[Column] =
+  def statsExprs(cols: Seq[String]): Seq[Column] =
     cols.flatMap { c =>
       Seq(
         min(col(c)).as(s"min_$c"),
         max(col(c)).as(s"max_$c"),
-        (if (deterministic) DetAgg.davg(col(c)) else avg(col(c))).as(s"avg_$c"),
-        (if (deterministic) DetAgg.dstddev(col(c)) else stddev(col(c))).as(s"stddev_$c"))
+        DetAgg.davg(col(c)).as(s"avg_$c"),
+        DetAgg.dstddev(col(c)).as(s"stddev_$c"))
     }
 
   def aggregate(
       df: DataFrame,
       groupCol: String = "sensor_id",
       dataSource: String = "minio_bucket",
-      fileName: String = "",
-      deterministic: Boolean = true): Option[DataFrame] = {
+      fileName: String = ""): Option[DataFrame] = {
     val withGroup =
       if (df.columns.contains(groupCol)) df
       else df.withColumn(groupCol, lit("unknown"))
     val numerics = numericCols(df)
     if (numerics.isEmpty) None
     else {
-      val exprs = statsExprs(numerics, deterministic)
+      val exprs = statsExprs(numerics)
       Some(withGroup
         .groupBy(col(groupCol))
         .agg(exprs.head, exprs.tail: _*)

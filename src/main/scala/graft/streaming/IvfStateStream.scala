@@ -134,8 +134,7 @@ object IvfStateStream {
     * [[listStatsFromState]]) must use [[storedNlist]], never
     * `centroids.count()`, or they drift from the batch twin by exactly
     * count/nlist on every skew row. */
-  def train(seed: DataFrame, stateDir: String, nlist: Int, iters: Int = 3,
-      portableMeans: Boolean = false): Int = {
+  def train(seed: DataFrame, stateDir: String, nlist: Int, iters: Int = 3): Int = {
     val spark = seed.sparkSession
     CorpusStateStream.stampFormat(spark, stateDir, "ivf",
       FormatVersion, "centroids")
@@ -154,7 +153,7 @@ object IvfStateStream {
         java.util.Collections.singletonList(
           org.apache.spark.sql.Row(Integer.valueOf(nlist))), metaSchema)
       .coalesce(1).write.mode("overwrite").parquet(s"$stateDir/meta")
-    Similarity.kmeansCentroids(seed, nlist, iters, portableMeans)
+    Similarity.kmeansCentroids(seed, nlist, iters)
       .select(col("cid").cast("int").as("cid"), col("cvec"))
       .write.mode("errorifexists").parquet(dir)
     nlist
@@ -315,7 +314,7 @@ object IvfStateStream {
     *     silently served from_split = false for its children);
     *   - otherwise the swaps never ran → discard the plan; the next
     *     pass recomputes it deterministically from the unchanged lists
-    *     (same seeds, same portable Lloyd rounds).
+    *     (same seeds, same DetAgg Lloyd rounds).
     * Degenerate caveat: if EVERY remapped child list came out empty
     * (all members assigned to child-0 — 2-means collapsing on
     * near-identical mass), a completed swap is indistinguishable from
@@ -401,19 +400,18 @@ object IvfStateStream {
     *      multi-pass geometry the r15 still-hot heuristic misread).
     *
     * Returns (configured count before, after) — equal iff the pass was
-    * quiet. Crash-re-run determinism holds under portableMeans (the
-    * registered/served form); plain float means re-split validly but
-    * not necessarily bit-identically. */
+    * quiet. A crashed pass re-runs bit-identically: the child means
+    * are DetAgg decimal sums, so the re-split reproduces the same
+    * centroids on any partitioning. */
   def rebalance(spark: SparkSession, stateDir: String, maxList: Int,
-      iters: Int = 3, portableMeans: Boolean = false): (Int, Int) =
-    rebalanceImpl(spark, stateDir, maxList, iters, portableMeans,
-      crashAfterStep = Int.MaxValue)
+      iters: Int = 3): (Int, Int) =
+    rebalanceImpl(spark, stateDir, maxList, iters, crashAfterStep = Int.MaxValue)
 
   /** Test seam: throw after step `crashAfterStep` (1 = pending staged,
     * 2 = centroids swapped, 3 = lists swapped) so the spec can prove
     * every crash window heals on the next run. */
   private[streaming] def rebalanceImpl(spark: SparkSession, stateDir: String,
-      maxList: Int, iters: Int, portableMeans: Boolean,
+      maxList: Int, iters: Int,
       crashAfterStep: Int): (Int, Int) = {
     require(maxList >= 1, "maxList must be >= 1")
     def crash(step: Int): Unit =
@@ -448,16 +446,17 @@ object IvfStateStream {
     val maxCidLog = if (logMaxRow.isNullAt(0)) -1 else logMaxRow.getInt(0)
     val remapBase = math.max(nlist, math.max(maxCidLists, maxCidLog) + 1)
     val (newCents, newLists) = Similarity.splitHotLists(
-      lists0, cents0, remapBase, maxList, iters, portableMeans)
+      lists0, cents0, remapBase, maxList, iters)
     val listsOut = newLists
       .select(col("vec_id"), col("cid").cast("int").as("cid"), col("v"))
       .localCheckpoint(true)
     val centsOut = newCents
       .select(col("cid").cast("int").as("cid"), col("cvec"))
       // crash-after-centroid-swap re-run: cents0 already holds the
-      // child-1 centroids the recomputed kids re-add (bit-identical
-      // under portableMeans — the served form); fold the duplicates so
-      // the recovered index never double-joins a list. A no-op on the
+      // child-1 centroids the recomputed kids re-add (bit-identical —
+      // DetAgg means — so whichever copy survives is the same row);
+      // fold the duplicates so the recovered index never double-joins a
+      // list. A no-op on the
       // normal path (hot parents are anti-joined out before the union).
       .dropDuplicates("cid")
       .localCheckpoint(true)
@@ -519,16 +518,14 @@ object IvfStateStream {
     * (configured count before pass 1, after the final pass, passes that
     * actually split). */
   def rebalanceUntilQuiet(spark: SparkSession, stateDir: String,
-      maxList: Int, maxPasses: Int = 8, iters: Int = 3,
-      portableMeans: Boolean = false): (Int, Int, Int) = {
+      maxList: Int, maxPasses: Int = 8, iters: Int = 3): (Int, Int, Int) = {
     require(maxPasses >= 1, "maxPasses must be >= 1")
     val first = storedNlist(spark, stateDir)
     var passes = 0
     var last = first
     var quiet = false
     while (!quiet && passes < maxPasses) {
-      val (before, after) = rebalance(spark, stateDir, maxList, iters,
-        portableMeans)
+      val (before, after) = rebalance(spark, stateDir, maxList, iters)
       if (after == before) quiet = true else { passes += 1; last = after }
     }
     require(quiet, s"$passes passes at maxList=$maxList did not quiet the " +
@@ -690,8 +687,7 @@ object IvfStateStream {
     * runs both the batch PQ trio (q175–q177) and this state build then
     * trains the per-subspace Lloyd chain ONCE, not twice. */
   def trainPq(seed: DataFrame, stateDir: String, m: Int = 4, ksub: Int = 16,
-      iters: Int = 3, portableMeans: Boolean = false,
-      corpusKey: Option[String] = None): Unit = {
+      iters: Int = 3, corpusKey: Option[String] = None): Unit = {
     val spark = seed.sparkSession
     CorpusStateStream.stampFormat(spark, stateDir, "ivf",
       FormatVersion, "centroids")
@@ -706,7 +702,7 @@ object IvfStateStream {
           org.apache.spark.sql.Row(Integer.valueOf(m), Integer.valueOf(ksub))),
         pqMetaSchema)
       .coalesce(1).write.mode("overwrite").parquet(s"$stateDir/pqmeta")
-    Similarity.pqStage(seed, m, ksub, iters, portableMeans, corpusKey)._1
+    Similarity.pqStage(seed, m, ksub, iters, corpusKey)._1
       .select(col("sub").cast("int").as("sub"), col("cid").cast("int").as("cid"),
         col("cvec"))
       .write.mode("errorifexists").parquet(dir)

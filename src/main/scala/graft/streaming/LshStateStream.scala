@@ -13,9 +13,10 @@ import graft.operators.Similarity
   * signs each arriving vector once at ingest and answers every search
   * from the persisted table; nothing at read time recomputes a
   * signature. Unlike IVF there is NO training step to freeze — the
-  * planes are a pure deterministic function of (plane, dim) (md5-parity
-  * in the portable form), so the index has no generation to retrain and
-  * the fold starts on an empty dir.
+  * planes are a pure deterministic function of (plane, dim) (md5
+  * parity, [[graft.functions.VectorOps.hyperplaneSignature]]), so the
+  * index has no generation to retrain and the fold starts on an empty
+  * dir.
   *
   * State layout under `stateDir`:
   *   - `sigs/` — (vec_id, sig, embedding float[]): the signed corpus.
@@ -63,24 +64,19 @@ object LshStateStream {
 
   /** One micro-batch: sign arriving vectors and append exactly the new
     * (vec_id, sig, embedding) rows. Calling it twice with the same
-    * batch is a no-op the second time — the restart-recovery contract.
-    * `portablePlanes` must be held constant per stateDir (it IS the
-    * index's plane family; mixing would shard the corpus across two
-    * incompatible sign matrices). */
-  def update(stateDir: String, planes: Int = 8,
-      portablePlanes: Boolean = true)(
+    * batch is a no-op the second time — the restart-recovery contract. */
+  def update(stateDir: String, planes: Int = 8)(
       batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
     CorpusStateStream.stampFormat(spark, stateDir, "lsh",
       FormatVersion, "sigs")
-    val sigFn =
-      if (portablePlanes) graft.functions.VectorOps.hyperplaneSignatureMd5 _
-      else graft.functions.VectorOps.hyperplaneSignature _
     // at-least-once delivery can land a vec_id twice in ONE trigger;
     // the anti-join only protects against rows already in state
     val signed = batch.select(col("vec_id"), col("embedding"))
       .dropDuplicates("vec_id")
-      .select(col("vec_id"), sigFn(col("embedding"), planes).as("sig"),
+      .select(col("vec_id"),
+        graft.functions.VectorOps.hyperplaneSignature(col("embedding"), planes)
+          .as("sig"),
         col("embedding"))
     signed
       .join(sigState(spark, stateDir).select(col("vec_id")),
@@ -116,13 +112,12 @@ object LshStateStream {
       stateDir: String,
       checkpointDir: String,
       planes: Int = 8,
-      portablePlanes: Boolean = true,
       availableNow: Boolean = false,
       triggerSeconds: Int = 10,
       maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
     CorpusStateStream.startDocStream(spark, embDir, checkpointDir,
       availableNow, triggerSeconds, maxFilesPerTrigger,
-      schema = embSchema)(update(stateDir, planes, portablePlanes) _)
+      schema = embSchema)(update(stateDir, planes) _)
 
   /** q39-shaped LSH top-k served FROM the maintained index: band keys
     * derive from persisted signatures (shift-and-mask — no signature is

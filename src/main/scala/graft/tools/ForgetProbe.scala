@@ -58,16 +58,16 @@ object ForgetProbe {
 
     // IVF (+PQ codes): forget vs retrain + refold
     val ivf = s"$root/ivf"
-    IvfStateStream.train(emb, ivf, nlist = 8, portableMeans = true)
-    IvfStateStream.trainPq(emb, ivf, m = 4, ksub = 16, portableMeans = true)
+    IvfStateStream.train(emb, ivf, nlist = 8)
+    IvfStateStream.trainPq(emb, ivf, m = 4, ksub = 16)
     IvfStateStream.update(ivf)(emb, 0L)
     IvfStateStream.updatePq(ivf)(emb, 0L)
     val (_, tIvfForget) = timed(IvfStateStream.forget(spark, ivf, vecTomb))
     val (_, tIvfRebuild) = timed {
       val d2 = s"$root/ivf_rebuild"
       val surv = emb.join(vecTomb, Seq("vec_id"), "left_anti")
-      IvfStateStream.train(surv, d2, nlist = 8, portableMeans = true)
-      IvfStateStream.trainPq(surv, d2, m = 4, ksub = 16, portableMeans = true)
+      IvfStateStream.train(surv, d2, nlist = 8)
+      IvfStateStream.trainPq(surv, d2, m = 4, ksub = 16)
       IvfStateStream.update(d2)(surv, 0L)
       IvfStateStream.updatePq(d2)(surv, 0L)
     }

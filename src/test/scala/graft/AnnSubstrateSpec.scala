@@ -41,9 +41,8 @@ class AnnSubstrateSpec extends SparkSpec {
       "contamination diverged keyed vs unkeyed")
     val embs = Tables.embeddings(spark, sf0001)
     assert(rows(operators.Similarity.annTopK(embs, Seq(0L, 1L), 10,
-        portablePlanes = true, corpusKey = Some("spec|lsh|a"))) ==
-      rows(operators.Similarity.annTopK(embs, Seq(0L, 1L), 10,
-        portablePlanes = true)),
+        corpusKey = Some("spec|lsh|a"))) ==
+      rows(operators.Similarity.annTopK(embs, Seq(0L, 1L), 10)),
       "annTopK diverged keyed vs unkeyed")
   }
 
@@ -81,7 +80,7 @@ class AnnSubstrateSpec extends SparkSpec {
     val trio = Seq("q39_ann_lsh_topk", "q128_ann_recall", "q137_rrf_fusion")
       .map(n => n -> SparkEntry.queries(n)(spark, sf0001))
     val frame = AnnSubstrate.cached[org.apache.spark.sql.DataFrame](spark,
-        s"lshsig|$sf0001/embeddings.parquet|8|true")
+        s"lshsig|$sf0001/embeddings.parquet|8")
       .getOrElse(fail("lshsig substrate not memoized — did the trio stop " +
         "routing through annTopK(corpusKey)?"))
     val subIds = rddIds(frame)

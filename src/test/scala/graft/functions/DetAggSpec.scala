@@ -25,10 +25,31 @@ class DetAggSpec extends SparkSpec {
   }
 
   test("dstddev matches stddev_samp within tolerance") {
-    val df = xs.toDF("x")
-    val got = df.agg(dstddev($"x")).head.getDouble(0)
-    val ref = df.agg(stddev_samp($"x")).head.getDouble(0)
-    assert(math.abs(got - ref) / ref < 1e-9)
+    // integral inputs whose square overflows their own type: an int
+    // above 46,340, a long above 3.04e9
+    val ints = (Seq(50000) ++ (1 to 1000).map(i => (i * 37) % 60000)).toDF("x")
+    val longs = (Seq(4000000000L) ++ (1 to 1000).map(i => i * 7919L)).toDF("x")
+    Seq(xs.toDF("x"), ints, longs).foreach { df =>
+      val got = df.agg(dstddev($"x"), dvarPop($"x")).head
+      val ref = df.agg(stddev_samp($"x"), var_pop($"x")).head
+      assert(math.abs(got.getDouble(0) - ref.getDouble(0)) / ref.getDouble(0) < 1e-9)
+      assert(math.abs(got.getDouble(1) - ref.getDouble(1)) / ref.getDouble(1) < 1e-9)
+    }
+  }
+
+  test("floating inputs square in their own type (bit-identical x² leg)") {
+    val doubles = xs.toDF("x")
+    val floats = xs.map(_.toFloat).toDF("x")
+    Seq(doubles, floats).foreach { df =>
+      val n = count($"x").cast("double")
+      val s1 = dsumD($"x")
+      val s2 = dsumWideD($"x" * $"x")
+      val row = df.agg(dstddev($"x"),
+        sqrt((s2 - s1 * s1 / n) / (n - lit(1.0d))),
+        dvarPop($"x"), (s2 - s1 * s1 / n) / n).head
+      assert(row.getDouble(0) == row.getDouble(1))
+      assert(row.getDouble(2) == row.getDouble(3))
+    }
   }
 
   test("dstddev of a single value is null, of constant column is 0") {

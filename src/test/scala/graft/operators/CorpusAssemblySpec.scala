@@ -216,8 +216,7 @@ class CorpusAssemblySpec extends SparkSpec {
   test("bitext margin: real-corpus output is one best es candidate per en doc") {
     val docs = Tables.documents(spark, sf0001)
     val out = Similarity.bitextMarginMining(
-      Tables.embeddings(spark, sf0001), docs, "en", "es", k = 4,
-      portableMeans = true).collect()
+      Tables.embeddings(spark, sf0001), docs, "en", "es", k = 4).collect()
     val enIds = docs.filter(col("lang") === "en")
       .select(col("doc_id")).collect().map(_.getLong(0)).toSet
     val esIds = docs.filter(col("lang") === "es")
@@ -358,8 +357,7 @@ class CorpusAssemblySpec extends SparkSpec {
 
   test("hard negatives: real-corpus rows are well-formed") {
     val out = Similarity.hardNegatives(
-      Tables.embeddings(spark, sf0001), queryStride = 50,
-      portableMeans = true).collect()
+      Tables.embeddings(spark, sf0001), queryStride = 50).collect()
     assert(out.nonEmpty)
     for (r <- out) {
       assert(r.getLong(0) % 50 == 0)

@@ -184,7 +184,7 @@ class CorpusToolingSpec extends SparkSpec {
     // independent reconstruction from the same public helpers
     val exact = Similarity.bruteForceTopK(emb, ids, 10).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val ann = Similarity.annTopK(emb, ids, 10, portablePlanes = true).collect()
+    val ann = Similarity.annTopK(emb, ids, 10).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val want = ids.map(q => q -> (exact.filter(_._1 == q) & ann.filter(_._1 == q)).size).toMap
     assert(got.forall(r => r.getLong(2) == want(r.getLong(0)).toLong))

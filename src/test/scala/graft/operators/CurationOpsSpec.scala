@@ -64,8 +64,7 @@ class CurationOpsSpec extends SparkSpec {
   }
 
   test("knn label eval: scored within vecs, accuracy bounded, corpus covered") {
-    val e = Similarity.knnLabelEval(Tables.embeddings(spark, sf001), k = 5,
-      portableMeans = true).collect()
+    val e = Similarity.knnLabelEval(Tables.embeddings(spark, sf001), k = 5).collect()
     assert(e.map(_.getLong(1)).sum == Tables.embeddings(spark, sf001).count())
     e.foreach { r =>
       assert(r.getLong(2) <= r.getLong(1), "n_scored <= n_vecs")
@@ -310,8 +309,7 @@ class CurationOpsSpec extends SparkSpec {
     val e2 = e0.unionAll(e0.select((col("vec_id") + 1000000).as("vec_id"),
       col("embedding"), col("label")))
     val n = d0.count()
-    val r = Similarity.lexicalSemanticAgreement(d2, e2,
-      portableMeans = true).collect().head
+    val r = Similarity.lexicalSemanticAgreement(d2, e2).collect().head
     assert(r.getLong(2) >= n,
       s"both=${r.getLong(2)} must cover the $n planted twin pairs")
     // contingency identities + jaccard definition

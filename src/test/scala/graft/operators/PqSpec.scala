@@ -16,8 +16,7 @@ class PqSpec extends SparkSpec {
 
   test("keyed PQ chain == m independent kmeans runs on the sliced corpus") {
     val e = Tables.embeddings(spark, sf0001)
-    val (codebooks, _) = Similarity.pqStage(e, m = 4, ksub = 16, iters = 3,
-      portableMeans = true)
+    val (codebooks, _) = Similarity.pqStage(e, m = 4, ksub = 16, iters = 3)
     val keyed = codebooks.collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2).toVector)
       .toMap
@@ -25,8 +24,7 @@ class PqSpec extends SparkSpec {
       val sliced = e.select(col("vec_id"),
         slice(graft.functions.VectorOps.asDouble(col("embedding")),
           s * 16 + 1, 16).as("embedding"))
-      val solo = Similarity.kmeansCentroids(sliced, k = 16, iters = 3,
-        portableMeans = true).collect()
+      val solo = Similarity.kmeansCentroids(sliced, k = 16, iters = 3).collect()
         .map(r => r.getInt(0) -> r.getSeq[Double](1).toVector).toMap
       val ofSub = keyed.collect { case ((`s`, cid), v) => cid -> v }.toMap
       assert(ofSub.keySet == solo.keySet,
@@ -41,7 +39,7 @@ class PqSpec extends SparkSpec {
   test("codes cover every (vector, subspace) exactly once; codebook bounded") {
     val e = Tables.embeddings(spark, sf0001)
     val (codebooks, codes) = Similarity.pqStage(e, m = 4, ksub = 16,
-      iters = 3, portableMeans = true)
+      iters = 3)
     val n = e.count()
     assert(codes.count() == n * 4, "one code per (vector, subspace)")
     assert(codes.select(col("vec_id"), col("sub")).distinct().count() == n * 4)
@@ -58,7 +56,7 @@ class PqSpec extends SparkSpec {
 
   test("q175 report: identities hold, distortion non-negative, deterministic") {
     val rep = Similarity.pqCodebookReport(Tables.embeddings(spark, sf0001),
-      m = 4, ksub = 16, portableMeans = true).collect()
+      m = 4, ksub = 16).collect()
     assert(rep.map(_.getInt(0)).toSeq == Seq(0, 1, 2, 3))
     rep.foreach { r =>
       assert(r.getLong(2) <= 16, "codes_used <= ksub")
@@ -69,7 +67,7 @@ class PqSpec extends SparkSpec {
     assert(rep.map(_.getLong(1)).distinct.length == 1,
       "every subspace quantizes the same corpus")
     val again = Similarity.pqCodebookReport(Tables.embeddings(spark, sf0001),
-      m = 4, ksub = 16, portableMeans = true).collect()
+      m = 4, ksub = 16).collect()
     assert(rep.map(_.toString).toSeq == again.map(_.toString).toSeq,
       "the report must be a pure function of the corpus")
   }
@@ -77,7 +75,7 @@ class PqSpec extends SparkSpec {
   test("ADC reconstruction is the sub-ordered concatenation of the codewords") {
     val e = Tables.embeddings(spark, sf0001)
     val (codebooks, codes) = Similarity.pqStage(e, m = 4, ksub = 16,
-      iters = 3, portableMeans = true)
+      iters = 3)
     val cb = codebooks.collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2)).toMap
     val someCodes = codes.filter(col("vec_id") === 0L).collect()
@@ -96,7 +94,7 @@ class PqSpec extends SparkSpec {
 
   test("q176 recall: every query scored, bounds hold, ADC beats zero on this corpus") {
     val rows = Similarity.pqAdcRecall(Tables.embeddings(spark, sf0001),
-      queryIds, k = 10, m = 4, ksub = 16, portableMeans = true).collect()
+      queryIds, k = 10, m = 4, ksub = 16).collect()
     assert(rows.map(_.getLong(0)).toSeq == queryIds)
     rows.foreach { r =>
       assert(r.getLong(1) == 10L)
@@ -112,8 +110,7 @@ class PqSpec extends SparkSpec {
   test("q177 code bands: identities hold; planted twins are all candidates AND semantic") {
     val e = Tables.embeddings(spark, sf0001)
       .select(col("vec_id"), col("embedding"))
-    val base = Similarity.pqCodeNearDup(e, threshold = 0.3,
-      portableMeans = true).collect().head
+    val base = Similarity.pqCodeNearDup(e, threshold = 0.3).collect().head
     assert(base.getLong(1) <= base.getLong(0), "semantic mass bounded by candidates")
     if (base.getLong(0) > 0) {
       assert(base.getDouble(2) ==
@@ -128,8 +125,7 @@ class PqSpec extends SparkSpec {
     val n = e.count()
     val twinned = e.unionAll(e.select((col("vec_id") + 10000).as("vec_id"),
       col("embedding")))
-    val t = Similarity.pqCodeNearDup(twinned, threshold = 0.3,
-      portableMeans = true).collect().head
+    val t = Similarity.pqCodeNearDup(twinned, threshold = 0.3).collect().head
     assert(t.getLong(0) >= base.getLong(0) + n,
       s"candidates ${t.getLong(0)} must cover the $n planted twin pairs")
     assert(t.getLong(1) >= base.getLong(1) + n,

@@ -29,10 +29,6 @@ class SimilaritySpec extends SparkSpec {
     assert(recall >= 0.5, s"ANN recall too low: $recall")
     // and the ANN result must itself be correctly ranked within buckets
     assert(ann.size <= exact.size)
-    // the portable (md5-plane) variant q39 ships must hold the same bound
-    val annMd5 = asSet(Similarity.annTopK(e, queryIds, 10, portablePlanes = true))
-    val recallMd5 = exact.count(annMd5.contains).toDouble / exact.size
-    assert(recallMd5 >= 0.5, s"portable-plane ANN recall too low: $recallMd5")
   }
 
   test("int8-quantized top-k nearly reproduces the exact float ranking") {
@@ -68,8 +64,7 @@ class SimilaritySpec extends SparkSpec {
   test("hot-list split: partition preserved, children bounded, flags and remap exact") {
     val e = Tables.embeddings(spark, sf0001)
     val nlist = 8
-    val (cents, lists) = Similarity.ivfIndex(e, nlist, iters = 3,
-      portableMeans = true)
+    val (cents, lists) = Similarity.ivfIndex(e, nlist, iters = 3)
     val base = lists.select(col("cid"), col("vec_id"), col("v"))
       .localCheckpoint(true)
     val n = base.count()
@@ -79,8 +74,7 @@ class SimilaritySpec extends SparkSpec {
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     assert(hot.nonEmpty, "fixture must exercise a real split at the mean cut")
     val (newCents, newLists) =
-      Similarity.splitHotLists(base, cents, nlist, maxList, iters = 3,
-        portableMeans = true)
+      Similarity.splitHotLists(base, cents, nlist, maxList, iters = 3)
     val nl = newLists.localCheckpoint(true)
     // the rebalanced index still partitions the corpus: every vector in
     // exactly one list
@@ -147,8 +141,8 @@ class SimilaritySpec extends SparkSpec {
   test("literal-matrix signatures equal the per-row-hash formulation bit-for-bit") {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.Column
-    // the ORIGINAL formulations (one hash expression per row × plane × dim),
-    // kept here as the semantic pin for the driver-precomputed sign matrices
+    // the ORIGINAL formulation (one hash expression per row × plane × dim),
+    // kept here as the semantic pin for the precomputed sign-matrix literals
     def oldStyle(v: Column, planes: Int, sign: (Int, Column) => Column): Column = {
       val dv = transform(v, _.cast("double"))
       val bits = (0 until planes).map { p =>
@@ -160,19 +154,15 @@ class SimilaritySpec extends SparkSpec {
       }
       bits.reduce((x, y) => x.bitwiseOR(y))
     }
-    val xxSign = (p: Int, j: Column) =>
-      when(pmod(xxhash64(lit(p), j), lit(2)) === 0, 1.0d).otherwise(-1.0d)
     val md5Sign = (p: Int, j: Column) =>
       when(conv(substring(md5(concat(lit(s"$p|"), j.cast("string"))), 1, 1), 16, 10)
             .cast("int") % 2 === 0, 1.0d)
         .otherwise(-1.0d)
     val e = Tables.embeddings(spark, sf0001).limit(100)
     val cmp = e.select(
-      graft.functions.VectorOps.hyperplaneSignature(col("embedding"), 8).as("nx"),
-      oldStyle(col("embedding"), 8, xxSign).as("ox"),
-      graft.functions.VectorOps.hyperplaneSignatureMd5(col("embedding"), 8).as("nm"),
+      graft.functions.VectorOps.hyperplaneSignature(col("embedding"), 8).as("nm"),
       oldStyle(col("embedding"), 8, md5Sign).as("om"))
-    assert(cmp.filter(col("nx") =!= col("ox") || col("nm") =!= col("om")).count() == 0)
+    assert(cmp.filter(col("nm") =!= col("om")).count() == 0)
   }
 
   test("oversized vector fails loud instead of a null-poisoned signature") {
@@ -223,7 +213,7 @@ class SimilaritySpec extends SparkSpec {
     val ids = Seq(0L, 10L)
     val exact = Similarity.bruteForceTopK(e, ids, 10).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(3)).toMap
-    val ann = Similarity.annTopK(e, ids, 10, portablePlanes = true).collect()
+    val ann = Similarity.annTopK(e, ids, 10).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(3)).toMap
     val fused = Similarity.rrfFuse(e, ids, k = 5, fromN = 10).collect()
     assert(fused.groupBy(_.getLong(0)).forall(_._2.map(_.getInt(1)).sorted
@@ -292,7 +282,7 @@ class SimilaritySpec extends SparkSpec {
   test("knn hubness: histogram partitions the corpus, edges bounded by n*k") {
     val e = Tables.embeddings(spark, sf0001)
     val n = e.count()
-    val h = Similarity.knnHubness(e, k = 10, portableMeans = true).collect()
+    val h = Similarity.knnHubness(e, k = 10).collect()
     assert(h.map(_.getLong(1)).sum == n, "every vector must land in one bucket")
     val edges = h.map(r => r.getLong(0) * r.getLong(1)).sum
     assert(edges > 0 && edges <= n * 10, s"edge count $edges out of [1, ${n * 10}]")
@@ -301,7 +291,7 @@ class SimilaritySpec extends SparkSpec {
   test("ivf probe-recall curve: monotone, anchored at exactly 1.0 / n-1 at full probe") {
     val e = Tables.embeddings(spark, sf0001)
     val rows = Similarity
-      .ivfProbeRecallCurve(e, queryIds, k = 10, portableMeans = true)
+      .ivfProbeRecallCurve(e, queryIds, k = 10)
       .collect()
     assert(rows.length == 8, "one row per nprobe value")
     assert(rows.map(_.getInt(0)).toSeq == (1 to 8))
@@ -319,7 +309,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("ivf list stats: shares/skew reconcile; sizes match the q112 lists") {
     val e = Tables.embeddings(spark, sf0001)
-    val st = Similarity.ivfListStats(e, portableMeans = true).collect()
+    val st = Similarity.ivfListStats(e).collect()
     assert(st.length == 8, "all 8 lists populated on this corpus")
     assert(st.map(_.getLong(1)).sum == e.count())
     assert(math.abs(st.map(_.getDouble(2)).sum - 1.0) < 1e-9, "shares sum to 1")
@@ -327,7 +317,7 @@ class SimilaritySpec extends SparkSpec {
       "mean skew is 1 when every list is non-empty")
     assert(st.forall(r => r.getDouble(4) >= -1.000001 && r.getDouble(4) <= 1.000001))
     // the same coarse quantizer q112 accounts with — list sizes must agree
-    val sd = Similarity.semanticDedup(e, threshold = 0.3, portableMeans = true)
+    val sd = Similarity.semanticDedup(e, threshold = 0.3)
       .collect().map(r => (r.getInt(0), r.getLong(1))).toMap
     assert(st.map(r => (r.getInt(0), r.getLong(1))).toMap == sd,
       "ivfListStats and semanticDedup disagree on the list partition")

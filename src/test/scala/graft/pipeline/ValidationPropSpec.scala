@@ -90,4 +90,18 @@ class ValidationPropSpec extends SparkSpec {
         .forall(agg.columns.contains))
     }
   }
+
+  test("stats aggregation accepts an int column whose square overflows an int") {
+    import org.apache.spark.sql.functions.stddev_samp
+    import spark.implicits._
+    val df = Seq(("s1", 50000), ("s1", 1), ("s1", 46341), ("s2", 7))
+      .toDF("sensor_id", "reading")
+    val agg = StatsAggregation.aggregate(df).get
+      .orderBy("sensor_id").select("stddev_reading").collect()
+    val ref = df.groupBy("sensor_id").agg(stddev_samp("reading"))
+      .orderBy("sensor_id").collect()
+    val want = ref(0).getDouble(1)
+    assert(math.abs(agg(0).getDouble(0) - want) / want < 1e-9)
+    assert(agg(1).isNullAt(0)) // one row: no sample stddev
+  }
 }

@@ -103,7 +103,7 @@ class IvfStateStreamSpec extends SparkSpec {
     val root = Files.createTempDirectory("graft-ivfstate-topk").toString
     val stateDir = s"$root/state"
     val emb = embSlice(lit(true))
-    IvfStateStream.train(emb, stateDir, nlist, portableMeans = true)
+    IvfStateStream.train(emb, stateDir, nlist)
     IvfStateStream.update(stateDir)(emb.filter(col("vec_id") % 2 === 0), 0L)
     IvfStateStream.update(stateDir)(emb.filter(col("vec_id") % 2 === 1), 1L)
 
@@ -111,7 +111,7 @@ class IvfStateStreamSpec extends SparkSpec {
     val served = IvfStateStream.topKFromState(spark, stateDir, qids,
       k = 10, nprobe = 3)
     val batch = Similarity.ivfTopK(emb, qids, k = 10, nlist = nlist,
-      nprobe = 3, portableMeans = true)
+      nprobe = 3)
     assert(served.exceptAll(batch).isEmpty && batch.exceptAll(served).isEmpty,
       "state-served top-k diverged from the one-shot batch operator")
     assert(served.count() == qids.size * 10L)
@@ -121,12 +121,11 @@ class IvfStateStreamSpec extends SparkSpec {
     val root = Files.createTempDirectory("graft-ivfstate-stats").toString
     val stateDir = s"$root/state"
     val emb = embSlice(lit(true))
-    IvfStateStream.train(emb, stateDir, nlist, portableMeans = true)
+    IvfStateStream.train(emb, stateDir, nlist)
     IvfStateStream.update(stateDir)(emb, 0L)
 
     val served = IvfStateStream.listStatsFromState(spark, stateDir)
-    val batch = Similarity.ivfListStats(emb, nlist = nlist,
-      portableMeans = true)
+    val batch = Similarity.ivfListStats(emb, nlist = nlist)
     assert(served.exceptAll(batch).isEmpty && batch.exceptAll(served).isEmpty,
       "state-served list stats diverged from the one-shot batch operator")
   }
@@ -147,14 +146,14 @@ class IvfStateStreamSpec extends SparkSpec {
     val root = Files.createTempDirectory("graft-ivfstate-meta").toString
     val stateDir = s"$root/state"
     val k = 4
-    IvfStateStream.train(emb, stateDir, k, portableMeans = true)
+    IvfStateStream.train(emb, stateDir, k)
     assert(IvfStateStream.centroidState(spark, stateDir).count() < k,
       "fixture must actually empty a cluster")
     assert(IvfStateStream.storedNlist(spark, stateDir) == k)
 
     IvfStateStream.update(stateDir)(emb, 0L)
     val served = IvfStateStream.listStatsFromState(spark, stateDir)
-    val batch = Similarity.ivfListStats(emb, nlist = k, portableMeans = true)
+    val batch = Similarity.ivfListStats(emb, nlist = k)
     assert(served.exceptAll(batch).isEmpty && batch.exceptAll(served).isEmpty,
       "state-served stats diverged from the batch twin under an emptied cluster")
   }
@@ -169,11 +168,31 @@ class IvfStateStreamSpec extends SparkSpec {
     assert(e.getMessage.contains("fresh stateDir"))
   }
 
+  test("train + trainPq persist bit-identical centroids and codebooks " +
+      "under any partitioning") {
+    // the crash/restart guarantee: a re-run of training over a
+    // differently partitioned seed writes the same quantizer
+    def trained(emb: org.apache.spark.sql.DataFrame): (Seq[String], Seq[String]) = {
+      val dir = Files.createTempDirectory("graft-ivfstate-part").toString + "/state"
+      IvfStateStream.train(emb, dir, nlist)
+      IvfStateStream.trainPq(emb, dir, m = 4, ksub = 16)
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(_.toString).sorted.toSeq
+      (rows(IvfStateStream.centroidState(spark, dir)),
+        rows(IvfStateStream.codebookState(spark, dir)))
+    }
+    val (cents, books) = trained(embSlice(lit(true)))
+    val (cents7, books7) = trained(embSlice(lit(true)).repartition(7))
+    assert(cents.size == nlist && books.size == 4 * 16)
+    assert(cents7 == cents, "centroids/ depend on the partitioning")
+    assert(books7 == books, "codebooks/ depend on the partitioning")
+  }
+
   test("rebalance splits hot lists in place and equals the batch split") {
     val root = Files.createTempDirectory("graft-ivfstate-rebal").toString
     val stateDir = s"$root/state"
     val emb = embSlice(lit(true))
-    IvfStateStream.train(emb, stateDir, nlist, portableMeans = true)
+    IvfStateStream.train(emb, stateDir, nlist)
     IvfStateStream.update(stateDir)(emb.filter(col("vec_id") % 2 === 0), 0L)
     IvfStateStream.update(stateDir)(emb.filter(col("vec_id") % 2 =!= 0), 1L)
     val n = emb.count()
@@ -184,7 +203,7 @@ class IvfStateStreamSpec extends SparkSpec {
     val cents0 = IvfStateStream.centroidState(spark, stateDir)
       .localCheckpoint(true)
     val (wantCents, wantLists) = Similarity.splitHotLists(
-      lists0, cents0, nlist, maxList, iters = 3, portableMeans = true)
+      lists0, cents0, nlist, maxList, iters = 3)
     val wantL = wantLists
       .select(col("vec_id"), col("cid").cast("int").as("cid"), col("v"))
       .collect().map(_.toString).sorted
@@ -192,8 +211,7 @@ class IvfStateStreamSpec extends SparkSpec {
       .collect().map(_.toString).sorted
 
     val (before, after) =
-      IvfStateStream.rebalance(spark, stateDir, maxList,
-        portableMeans = true)
+      IvfStateStream.rebalance(spark, stateDir, maxList)
     assert(before == nlist && after > nlist,
       s"rebalance must grow the list count past $nlist (got $after)")
     // state == batch, both tables
@@ -231,7 +249,7 @@ class IvfStateStreamSpec extends SparkSpec {
   private def twoPassBatch(lists0: org.apache.spark.sql.DataFrame,
       cents0: org.apache.spark.sql.DataFrame, nlist: Int, maxList: Int) = {
     val (c1, l1raw) = Similarity.splitHotLists(lists0, cents0, nlist, maxList,
-      iters = 3, portableMeans = true)
+      iters = 3)
     val l1 = l1raw.localCheckpoint(true)
     val l1c = l1.select(col("cid"), col("vec_id"), col("v"))
     val c1c = c1.localCheckpoint(true)
@@ -241,7 +259,7 @@ class IvfStateStreamSpec extends SparkSpec {
       math.max(l1c.agg(max(col("cid"))).collect()(0).getInt(0),
         c1c.agg(max(col("cid"))).collect()(0).getInt(0)) + 1)
     val (c2, l2raw) = Similarity.splitHotLists(l1c, c1c, base2, maxList,
-      iters = 3, portableMeans = true)
+      iters = 3)
     // a list pass 2 leaves untouched KEEPS its pass-1 flag — the lineage
     // semantics (and the q198 oracle's l.from_split pass-through)
     val f1 = l1.select(col("cid"), col("from_split").as("fs1")).distinct()
@@ -272,7 +290,7 @@ class IvfStateStreamSpec extends SparkSpec {
     val k = 3
     val root = Files.createTempDirectory("graft-ivfstate-rebal2").toString
     val stateDir = s"$root/state"
-    IvfStateStream.train(emb, stateDir, k, portableMeans = true)
+    IvfStateStream.train(emb, stateDir, k)
     IvfStateStream.update(stateDir)(emb, 0L)
     // hot at 39: the 100-list (pass 1) and its >=40-member child (pass 2)
     val maxList = 39
@@ -287,10 +305,8 @@ class IvfStateStreamSpec extends SparkSpec {
     val wantC = wantCents.select(col("cid").cast("int"), col("cvec"))
       .collect().map(_.toString).sorted
 
-    val (b1, a1) = IvfStateStream.rebalance(spark, stateDir, maxList,
-      portableMeans = true)
-    val (b2, a2) = IvfStateStream.rebalance(spark, stateDir, maxList,
-      portableMeans = true)
+    val (b1, a1) = IvfStateStream.rebalance(spark, stateDir, maxList)
+    val (b2, a2) = IvfStateStream.rebalance(spark, stateDir, maxList)
     assert(a1 > b1, "pass 1 must split")
     assert(b2 == a1 && a2 > b2,
       s"fixture must genuinely split at generation 2 (got $b2 -> $a2)")
@@ -333,11 +349,11 @@ class IvfStateStreamSpec extends SparkSpec {
       .toDF("vec_id", "embedding", "label")
     val root = Files.createTempDirectory("graft-rebal-quiet").toString
     val stateDir = s"$root/state"
-    IvfStateStream.train(emb, stateDir, 3, portableMeans = true)
+    IvfStateStream.train(emb, stateDir, 3)
     IvfStateStream.update(stateDir)(emb, 0L)
     val maxList = 39
     val (first, last, passes) = IvfStateStream.rebalanceUntilQuiet(
-      spark, stateDir, maxList, portableMeans = true)
+      spark, stateDir, maxList)
     assert(first == 3 && passes >= 2 && last > first,
       s"fixture must need MULTIPLE splitting passes to quiet ($first -> $last, $passes)")
     // quiet means quiet: no list above the threshold
@@ -348,7 +364,7 @@ class IvfStateStreamSpec extends SparkSpec {
     assert(IvfStateStream.splitHealthFromState(spark, stateDir).count() > 0)
     // a re-run is a zero-pass no-op on the already-quiet index
     val (f2, l2, p2) = IvfStateStream.rebalanceUntilQuiet(
-      spark, stateDir, maxList, portableMeans = true)
+      spark, stateDir, maxList)
     assert(p2 == 0 && f2 == l2 && f2 == last, "re-run on a quiet index must not mutate")
   }
 
@@ -382,7 +398,7 @@ class IvfStateStreamSpec extends SparkSpec {
     def build(tag: String): String = {
       val dir = Files.createTempDirectory(s"graft-rebal-hotcrash-$tag")
         .toString + "/state"
-      IvfStateStream.train(emb, dir, 3, portableMeans = true)
+      IvfStateStream.train(emb, dir, 3)
       IvfStateStream.update(dir)(emb, 0L)
       dir
     }
@@ -394,13 +410,13 @@ class IvfStateStreamSpec extends SparkSpec {
         .collect().map(_.toString).toSeq)
     // clean reference: the same single pass, uncrashed
     val ref = build("ref")
-    IvfStateStream.rebalance(spark, ref, maxList, portableMeans = true)
+    IvfStateStream.rebalance(spark, ref, maxList)
     val want = snapshot(ref)
 
     val dir = build("crash")
     val e = intercept[IllegalStateException] {
       IvfStateStream.rebalanceImpl(spark, dir, maxList, iters = 3,
-        portableMeans = true, crashAfterStep = 3)
+        crashAfterStep = 3)
     }
     assert(e.getMessage.contains("injected crash"))
     // the blind-spot geometry is real: the swapped lists still hold a
@@ -419,10 +435,8 @@ class IvfStateStreamSpec extends SparkSpec {
       .filter(col("from_split")).count() > 0,
       "promoted generation's children must serve from_split = true")
     // and the operational loop finishes the job identically on both
-    IvfStateStream.rebalanceUntilQuiet(spark, dir, maxList,
-      portableMeans = true)
-    IvfStateStream.rebalanceUntilQuiet(spark, ref, maxList,
-      portableMeans = true)
+    IvfStateStream.rebalanceUntilQuiet(spark, dir, maxList)
+    IvfStateStream.rebalanceUntilQuiet(spark, ref, maxList)
     assert(snapshot(dir) == snapshot(ref),
       "post-recovery loop diverged from the clean loop")
   }
@@ -433,11 +447,11 @@ class IvfStateStreamSpec extends SparkSpec {
     val maxList = 39
     val dir = Files.createTempDirectory("graft-rebal-forgetguard")
       .toString + "/state"
-    IvfStateStream.train(emb, dir, 3, portableMeans = true)
+    IvfStateStream.train(emb, dir, 3)
     IvfStateStream.update(dir)(emb, 0L)
     val e0 = intercept[IllegalStateException] {
       IvfStateStream.rebalanceImpl(spark, dir, maxList, iters = 3,
-        portableMeans = true, crashAfterStep = 1)
+        crashAfterStep = 1)
     }
     assert(e0.getMessage.contains("injected crash"))
     // the interleaving window is structurally closed: a forget here
@@ -462,15 +476,13 @@ class IvfStateStreamSpec extends SparkSpec {
     // forget composes with rebalance as if the deleted vectors had
     // never arrived
     IvfStateStream.forget(spark, dir, tomb)
-    IvfStateStream.rebalanceUntilQuiet(spark, dir, maxList,
-      portableMeans = true)
+    IvfStateStream.rebalanceUntilQuiet(spark, dir, maxList)
     val twin = Files.createTempDirectory("graft-rebal-survtwin")
       .toString + "/state"
-    IvfStateStream.train(emb, twin, 3, portableMeans = true)
+    IvfStateStream.train(emb, twin, 3)
     IvfStateStream.update(twin)(
       emb.filter(col("vec_id") % 7 =!= 3), 0L)
-    IvfStateStream.rebalanceUntilQuiet(spark, twin, maxList,
-      portableMeans = true)
+    IvfStateStream.rebalanceUntilQuiet(spark, twin, maxList)
     def core(d: String) = (
       IvfStateStream.listState(spark, d).collect().map(_.toString).sorted.toSeq,
       IvfStateStream.centroidState(spark, d).collect().map(_.toString).sorted.toSeq,
@@ -488,14 +500,14 @@ class IvfStateStreamSpec extends SparkSpec {
     val emb = embSlice(lit(true))
     val dir = Files.createTempDirectory("graft-ivf-lifecycle")
       .toString + "/state"
-    IvfStateStream.train(emb, dir, nlist, portableMeans = true)
-    IvfStateStream.trainPq(emb, dir, m = 4, ksub = 16, portableMeans = true)
+    IvfStateStream.train(emb, dir, nlist)
+    IvfStateStream.trainPq(emb, dir, m = 4, ksub = 16)
     IvfStateStream.updatePq(dir)(emb.filter(col("vec_id") % 2 === 0), 0L)
     IvfStateStream.updatePq(dir)(emb.filter(col("vec_id") % 2 =!= 0), 1L)
     val n = emb.count()
     val maxList = math.ceil(n.toDouble / (2 * nlist)).toInt // genuinely hot
     val (_, afterLoop, passes) = IvfStateStream.rebalanceUntilQuiet(
-      spark, dir, maxList, portableMeans = true)
+      spark, dir, maxList)
     assert(passes >= 1, "fixture must actually split")
     val tombPred = col("vec_id") % 7 === 3
     val tomb = emb.select(col("vec_id")).filter(tombPred)
@@ -503,7 +515,7 @@ class IvfStateStreamSpec extends SparkSpec {
     // a further pass at a tighter threshold — rebalance AFTER forget
     // (the interleaving the guard makes safe: no pending exists here)
     val maxList2 = math.max(1, maxList / 2)
-    IvfStateStream.rebalance(spark, dir, maxList2, portableMeans = true)
+    IvfStateStream.rebalance(spark, dir, maxList2)
     // lists: every surviving vector exactly once, no tombstones
     val lists = IvfStateStream.listState(spark, dir)
     assert(lists.filter(tombPred).isEmpty, "tombstones resurfaced")
@@ -541,13 +553,13 @@ class IvfStateStreamSpec extends SparkSpec {
     def freshState(tag: String): String = {
       val dir = Files.createTempDirectory(s"graft-rebal-crash-$tag")
         .toString + "/state"
-      IvfStateStream.train(emb, dir, nlist, portableMeans = true)
+      IvfStateStream.train(emb, dir, nlist)
       IvfStateStream.update(stateDir = dir)(emb, 0L)
       dir
     }
     // the uncrashed reference
     val ref = freshState("ref")
-    IvfStateStream.rebalance(spark, ref, maxList, portableMeans = true)
+    IvfStateStream.rebalance(spark, ref, maxList)
     def snapshot(dir: String): (Seq[String], Seq[String], Int, Seq[String]) = (
       IvfStateStream.listState(spark, dir).collect().map(_.toString).sorted.toSeq,
       IvfStateStream.centroidState(spark, dir).collect().map(_.toString).sorted.toSeq,
@@ -560,7 +572,7 @@ class IvfStateStreamSpec extends SparkSpec {
       val dir = freshState(s"s$step")
       val e = intercept[IllegalStateException] {
         IvfStateStream.rebalanceImpl(spark, dir, maxList, iters = 3,
-          portableMeans = true, crashAfterStep = step)
+          crashAfterStep = step)
       }
       assert(e.getMessage.contains("injected crash"))
       // every window leaves a SERVABLE index: valid centroids for every
@@ -578,8 +590,8 @@ class IvfStateStreamSpec extends SparkSpec {
         assert(h.getMessage.contains("rebal_pending"))
       }
       // the next run heals the window (same threshold, deterministic
-      // portable split) — state converges to the uncrashed reference
-      IvfStateStream.rebalance(spark, dir, maxList, portableMeans = true)
+      // DetAgg split) — state converges to the uncrashed reference
+      IvfStateStream.rebalance(spark, dir, maxList)
       assert(snapshot(dir) == want, s"crash window $step did not heal")
     }
   }
@@ -605,9 +617,8 @@ class IvfStateStreamSpec extends SparkSpec {
     val root = Files.createTempDirectory("graft-ivf-forget").toString
     val stateDir = s"$root/state"
     val emb = embSlice(lit(true))
-    IvfStateStream.train(emb, stateDir, nlist, portableMeans = true)
-    IvfStateStream.trainPq(emb, stateDir, m = 4, ksub = 16,
-      portableMeans = true)
+    IvfStateStream.train(emb, stateDir, nlist)
+    IvfStateStream.trainPq(emb, stateDir, m = 4, ksub = 16)
     IvfStateStream.update(stateDir)(emb, 0L)
     IvfStateStream.updatePq(stateDir)(emb, 0L)
 
@@ -656,9 +667,8 @@ class IvfStateStreamSpec extends SparkSpec {
     (0 to 2).foreach { step =>
       val root = Files.createTempDirectory(s"graft-ivfcrash$step").toString
       val state = s"$root/state"
-      IvfStateStream.train(emb, state, nlist, portableMeans = true)
-      IvfStateStream.trainPq(emb, state, m = 4, ksub = 16,
-        portableMeans = true)
+      IvfStateStream.train(emb, state, nlist)
+      IvfStateStream.trainPq(emb, state, m = 4, ksub = 16)
       IvfStateStream.update(state)(emb, 0L)
       IvfStateStream.updatePq(state)(emb, 0L)
       intercept[IllegalStateException] {
@@ -689,9 +699,8 @@ class IvfStateStreamSpec extends SparkSpec {
     val root = Files.createTempDirectory("graft-ivfpq-fold").toString
     val stateDir = s"$root/state"
     val emb = embSlice(lit(true))
-    IvfStateStream.train(emb, stateDir, nlist, portableMeans = true)
-    IvfStateStream.trainPq(emb, stateDir, m = 4, ksub = 16,
-      portableMeans = true)
+    IvfStateStream.train(emb, stateDir, nlist)
+    IvfStateStream.trainPq(emb, stateDir, m = 4, ksub = 16)
     IvfStateStream.updatePq(stateDir)(emb.filter(col("vec_id") % 2 === 0), 0L)
     IvfStateStream.updatePq(stateDir)(emb.filter(col("vec_id") % 2 === 1), 1L)
     val st = IvfStateStream.codeState(spark, stateDir)
@@ -712,9 +721,8 @@ class IvfStateStreamSpec extends SparkSpec {
     val root = Files.createTempDirectory("graft-ivfpq-adc").toString
     val stateDir = s"$root/state"
     val emb = embSlice(lit(true))
-    IvfStateStream.train(emb, stateDir, nlist, portableMeans = true)
-    IvfStateStream.trainPq(emb, stateDir, m = 4, ksub = 16,
-      portableMeans = true)
+    IvfStateStream.train(emb, stateDir, nlist)
+    IvfStateStream.trainPq(emb, stateDir, m = 4, ksub = 16)
     IvfStateStream.updatePq(stateDir)(emb, 0L)
 
     val qids = Seq(0L, 100L, 200L); val k = 5; val nprobe = 3

@@ -21,7 +21,7 @@ class LshStateStreamSpec extends SparkSpec {
   /** Batch twin of the fold: the signed corpus as a pure function. */
   private def batchSigned(emb: org.apache.spark.sql.DataFrame) =
     emb.select(col("vec_id"),
-      graft.functions.VectorOps.hyperplaneSignatureMd5(col("embedding"), 8)
+      graft.functions.VectorOps.hyperplaneSignature(col("embedding"), 8)
         .as("sig"))
 
   test("drain + restart: persisted signatures equal the batch signing") {
@@ -108,7 +108,7 @@ class LshStateStreamSpec extends SparkSpec {
       df.orderBy(col("query_id"), col("rn"))
         .collect().map(_.toString).toSeq
     assert(rows(LshStateStream.topKFromState(spark, stateDir, qids, 10)) ==
-      rows(Similarity.annTopK(emb, qids, 10, portablePlanes = true)),
+      rows(Similarity.annTopK(emb, qids, 10)),
       "state-served LSH top-k diverged from the batch operator")
   }
 
@@ -135,8 +135,7 @@ class LshStateStreamSpec extends SparkSpec {
       df.orderBy(col("query_id"), col("rn"))
         .collect().map(_.toString).toSeq
     val served = rows(LshStateStream.topKFromState(spark, stateDir, qids, 10))
-    assert(served == rows(Similarity.annTopK(emb.filter(!tombPred), qids, 10,
-        portablePlanes = true)),
+    assert(served == rows(Similarity.annTopK(emb.filter(!tombPred), qids, 10)),
       "post-forget served search diverged from batch over survivors")
     // re-deleting already-absent keys is a state no-op
     LshStateStream.forget(spark, stateDir,
