@@ -8,8 +8,8 @@ import org.apache.spark.sql.DataFrame
   * The reference calls PySpark's `rdd.countApprox(5000)` (returns int);
   * the Scala API returns a `PartialResult` — `initialValue` gives the
   * best estimate available when the timeout fires (SURVEY.md §4.3-8).
-  * In the rebuilt pipeline the cached frame makes exact counts cheap, so
-  * the approximate form is only for genuinely huge uncached audits.
+  * The ingest pipeline uses neither helper: [[IngestPipeline.processGroup]]
+  * observes its exact counts in the pass that fills its cache.
   */
 object Counts {
 
@@ -17,6 +17,6 @@ object Counts {
   def approxCount(df: DataFrame, timeoutMs: Long = 5000L): Long =
     df.rdd.countApprox(timeoutMs).initialValue.mean.toLong
 
-  /** Exact count — what the audit path actually uses on cached frames. */
+  /** Exact count (`df.count()`). */
   def exactCount(df: DataFrame): Long = df.count()
 }

@@ -23,12 +23,15 @@ object Metadata {
   def rowHash(cols: Seq[String]): Column =
     sha2(concat_ws("||", cols.map(c => coalesce(col(c).cast("string"), lit("NULL"))): _*), 256)
 
-  /** Append file_path, ingestion_ts and a replay-stable row_hash. */
-  def addLineage(df: DataFrame, filePath: String): DataFrame = {
+  /** Append file_path, ingestion_ts and a replay-stable row_hash.
+    * [[IngestPipeline.processGroup]] passes its group's instant, so the
+    * fact, quarantine and aggregate rows share one `ingestion_ts`. */
+  def addLineage(df: DataFrame, filePath: String,
+      ingestedAt: Column = current_timestamp()): DataFrame = {
     val dataCols = df.columns.toSeq
       .filterNot(Set(FilePathCol, IngestionTsCol, RowHashCol))
     df.withColumn(FilePathCol, lit(filePath))
-      .withColumn(IngestionTsCol, current_timestamp())
+      .withColumn(IngestionTsCol, ingestedAt)
       .withColumn(RowHashCol, rowHash(dataCols))
   }
 

@@ -1,17 +1,20 @@
 package graft.pipeline
 
 import java.sql.DriverManager
+import java.time.{Instant, LocalDate}
 import java.util.Properties
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, DataType, DateType, DecimalType,
   DoubleType, FloatType, IntegerType, LongType, ShortType, TimestampType}
 
 /** Persistence surface, re-expressing the reference's sinks
-  * (SURVEY.md §2.2): JDBC fact/agg appends, date-partitioned JSON audit
-  * and quarantine stores, and the processed/quarantine file mover.
+  * (SURVEY.md §2.2): JDBC fact/agg appends, the date-partitioned JSON
+  * quarantine store, and the processed/quarantine file mover. The audit
+  * store is [[Audit]].
   *
   * The JDBC path adds what the reference lacks (SURVEY.md §3.3/§4.3-3):
   * an idempotent upsert keyed on `row_hash`, so a replayed micro-batch
@@ -150,33 +153,23 @@ object Sinks {
     * (FIXTURES.md §1.1). */
   def quoteIdent(name: String): String = "\"" + name.replace("\"", "\"\"") + "\""
 
-  /** Date-partitioned JSON audit append (utils.py:195-196): one file per
-    * batch under `audit_date=YYYY-MM-DD/`. */
-  def writeAudit(df: DataFrame, auditDir: String): Unit =
-    Retry() {
-      df.withColumn("audit_date", date_format(current_timestamp(), "yyyy-MM-dd"))
-        .coalesce(1)
-        .write.mode(SaveMode.Append)
-        .partitionBy("audit_date")
-        .json(auditDir)
-    }
+  /** The `yyyy-MM-dd` partition value of the audit and quarantine
+    * stores for an instant, in the session time zone (the day
+    * `date_format(current_timestamp(), "yyyy-MM-dd")` would give). */
+  def partitionDate(spark: SparkSession, at: Instant): String =
+    LocalDate.ofInstant(at,
+      DateTimeUtils.getZoneId(spark.conf.get("spark.sql.session.timeZone"))).toString
 
   /** Quarantine store: bad rows + quarantine_date partition
     * (helpers.py:229-244). */
-  def writeQuarantine(bad: DataFrame, quarantineDir: String, tableName: String): Long = {
-    if (bad.isEmpty) 0L
-    else {
-      val stamped = bad.withColumn("quarantine_date",
-        date_format(current_timestamp(), "yyyy-MM-dd"))
-      val n = stamped.count()
-      Retry() {
-        stamped.write.mode(SaveMode.Append)
-          .partitionBy("quarantine_date")
-          .json(s"$quarantineDir/$tableName")
-      }
-      n
+  def writeQuarantine(bad: DataFrame, quarantineDir: String, tableName: String,
+      date: String): Unit =
+    Retry() {
+      bad.withColumn("quarantine_date", lit(date))
+        .write.mode(SaveMode.Append)
+        .partitionBy("quarantine_date")
+        .json(s"$quarantineDir/$tableName")
     }
-  }
 
   /** Move a source file to processed/ or quarantine/ (utils.py:48-78) via
     * Hadoop FS — works for file:// and s3a:// alike. A missing source

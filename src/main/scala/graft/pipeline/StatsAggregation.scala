@@ -43,7 +43,8 @@ object StatsAggregation {
       df: DataFrame,
       groupCol: String = "sensor_id",
       dataSource: String = "minio_bucket",
-      fileName: String = ""): Option[DataFrame] = {
+      fileName: String = "",
+      ingestedAt: Column = current_timestamp()): Option[DataFrame] = {
     val withGroup =
       if (df.columns.contains(groupCol)) df
       else df.withColumn(groupCol, lit("unknown"))
@@ -56,7 +57,7 @@ object StatsAggregation {
         .agg(exprs.head, exprs.tail: _*)
         .withColumn("data_source", lit(dataSource))
         .withColumn("file_name", lit(fileName))
-        .withColumn("ingestion_ts", current_timestamp()))
+        .withColumn("ingestion_ts", ingestedAt))
     }
   }
 }

@@ -1,10 +1,13 @@
 package graft.streaming
 
+import java.time.Instant
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.binaryfile.BinaryFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.pipeline.{IngestPipeline, SchemaRegistry, Sinks}
+import graft.pipeline.{Audit, IngestPipeline, Metadata, SchemaRegistry, Sinks}
 
 /** Streaming shell: watch a directory for new CSV/JSON files and run the
   * ingest pipeline per micro-batch, re-expressing
@@ -30,33 +33,24 @@ object FileWatch {
       checkpointDir: String = "/tmp/graft-checkpoints",
       maxFilesPerTrigger: Int = 1000)
 
-  /** One row per newly arrived file (content discarded — file arrival is
-    * the event, Main.py:44-49). */
+  /** One row per newly arrived file: its plain Hadoop path, no content
+    * (file arrival is the event, Main.py:44-49). `binaryFile` with only
+    * `path` selected lists the files without opening them. */
   def fileArrivals(spark: SparkSession, cfg: Config): DataFrame =
     spark.readStream
-      .format("text")
-      .option("wholetext", "true")
+      .format("binaryFile")
+      .schema(BinaryFileFormat.schema)
       .option("pathGlobFilter", "*.{csv,json}")
       .option("maxFilesPerTrigger", cfg.maxFilesPerTrigger)
       .load(cfg.dataDir)
-      .select(input_file_name().as("file_path"))
-
-  /** `input_file_name()` yields percent-encoded URIs (a space becomes
-    * `%20`); decode through java.net.URI so downstream reads and file
-    * moves see the real path. Scheme-less strings pass through. */
-  private[streaming] def decodePath(p: String): String =
-    try {
-      val uri = new java.net.URI(p)
-      if (uri.getScheme == null) p
-      else new org.apache.hadoop.fs.Path(uri).toString
-    } catch { case _: java.net.URISyntaxException => p }
+      .select(col("path").as("file_path"))
 
   /** Process one micro-batch of file arrivals: group by extension, load
     * each group with its registered schema, run the ingest pipeline, and
     * move sources to processed/ or quarantine/. */
   def processBatch(spark: SparkSession, cfg: Config)(batch: DataFrame, batchId: Long): Unit = {
-    val paths = batch.select("file_path").distinct()
-      .collect().map(r => decodePath(r.getString(0))).toSeq // bounded by maxFilesPerTrigger
+    val paths = batch.select("file_path")
+      .collect().map(_.getString(0)).distinct.toSeq // bounded by maxFilesPerTrigger
     if (paths.nonEmpty) {
       IngestPipeline.groupByExtension(paths).foreach { case (fmt, groupPaths) =>
         val label = groupPaths.map(_.split('/').last).sorted.mkString(",")
@@ -71,7 +65,9 @@ object FileWatch {
             // files. Both are BEST-EFFORT — a failed move (e.g. the file
             // vanished) must not kill the stream; the checkpointed source
             // log already guarantees the batch won't be re-delivered.
-            scala.util.Try(Audit.failure(spark, cfg.pipeline.auditDir, label, e))
+            val failed = IngestPipeline.BatchResult(Metadata.deriveTableName(label), 0L, 0L, 0L,
+              s"FAILURE: ${e.getClass.getName}" + Option(e.getMessage).fold("")(": " + _))
+            scala.util.Try(Audit.write(spark, cfg.pipeline.auditDir, failed, label, Instant.now()))
             groupPaths.foreach(p =>
               scala.util.Try(Sinks.moveFile(spark, p, cfg.quarantineFileDir)))
         }
@@ -137,13 +133,4 @@ object FileWatch {
       .option("checkpointLocation", cfg.checkpointDir)
       .foreachBatch(processBatch(spark, cfg) _)
       .start()
-
-  private object Audit {
-    def failure(spark: SparkSession, auditDir: String, label: String, e: Exception): Unit = {
-      import spark.implicits._
-      val df = Seq(graft.pipeline.AuditRecord(
-        "", label, 0L, 0L, 0L, s"FAILURE: ${e.getMessage}")).toDF()
-      Sinks.writeAudit(df, auditDir)
-    }
-  }
 }

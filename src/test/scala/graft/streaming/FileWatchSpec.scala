@@ -66,7 +66,7 @@ class FileWatchSpec extends SparkSpec {
     // (code/audit/audit_date=2025-08-19/part-*.json — 500/500/0 SUCCESS).
     // Replay the same two files through the streaming shell end to end —
     // the clean fixture in batch 0, the corrupted " - Copy" (spaced
-    // filename, exercising the %20 decode on a real file) in batch 1 on
+    // filename, read and moved by its plain path) in batch 1 on
     // the SAME checkpoint — and assert OUR audit numbers equal the
     // committed record, not re-derived expectations, plus the full
     // processed/sink layout.

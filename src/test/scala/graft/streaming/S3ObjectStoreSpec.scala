@@ -6,7 +6,7 @@ import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 import graft.SparkSpec
-import graft.pipeline.{IngestPipeline, Sinks, Validation}
+import graft.pipeline.{Audit, IngestPipeline, Sinks, Validation}
 
 /** Executes the reference's OBJECT-STORE file lifecycle (utils.py:14-46
   * bucket provisioning + utils.py:48-78 move-to-processed/quarantine,
@@ -16,7 +16,7 @@ import graft.pipeline.{IngestPipeline, Sinks, Validation}
   * passes, and the body is the production code path, not a mock.
   *
   * The repo's lifecycle operators (FileWatch.bootstrap, Sinks.moveFile,
-  * Sinks.writeAudit) are deliberately Hadoop-FS-generic — the identical
+  * Audit.write) are deliberately Hadoop-FS-generic — the identical
   * calls run on file:// in FailurePathSpec/FileWatchSpec and on
   * s3a://hdfs:// in production; this spec is the proof on the actual
   * wire target instead of the local filesystem.
@@ -146,12 +146,11 @@ class S3ObjectStoreSpec extends SparkSpec {
       assert(Sinks.moveFile(spark, bad.toString, cfg.quarantineFileDir))
       assert(fs.exists(new Path(s"${cfg.quarantineFileDir}/corrupt.csv")))
 
-      // 5. the date-partitioned JSON audit append (utils.py:195-196)
-      // through the object store's committer
-      import spark.implicits._
-      Sinks.writeAudit(
-        Seq(("reading.csv", 1L)).toDF("file", "rows"),
-        cfg.pipeline.auditDir)
+      // 5. the date-partitioned JSON audit append (utils.py:195-196):
+      // one object created under audit_date=<day>/
+      Audit.write(spark, cfg.pipeline.auditDir,
+        IngestPipeline.BatchResult("public.reading", 1L, 1L, 0L, "SUCCESS"),
+        "reading.csv", java.time.Instant.now())
       val parts = fs.globStatus(
         new Path(s"${cfg.pipeline.auditDir}/audit_date=*/part-*"))
       assert(parts != null && parts.nonEmpty,
