@@ -1,8 +1,11 @@
 package graft.operators
 
+import java.time.Instant
+
 import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
+import graft.expressions.InstantRef
 import graft.functions.DetAgg.sql
 import graft.pipeline.{Cleaning, Metadata, StatsAggregation, Validation}
 
@@ -95,7 +98,8 @@ object PipelineOps {
       "Reference apply_aggregations (helpers.py:148-204): min/max/avg/stddev per numeric column, dynamic column discovery, deterministic decimal forms.") {
       (s, d) =>
         StatsAggregation.aggregate(Tables.events(s, d), groupCol = "event_type",
-            dataSource = "oracle", fileName = "events_agg").get
+            dataSource = "oracle", fileName = "events_agg",
+            ingestedAt = InstantRef.column(Instant.now())).get
           .drop("ingestion_ts") // wall-clock, not oracle-comparable
           .orderBy(col("event_type"))
     },

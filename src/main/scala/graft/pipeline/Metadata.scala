@@ -24,10 +24,10 @@ object Metadata {
     sha2(concat_ws("||", cols.map(c => coalesce(col(c).cast("string"), lit("NULL"))): _*), 256)
 
   /** Append file_path, ingestion_ts and a replay-stable row_hash.
+    * `ingestedAt` is an [[graft.expressions.InstantRef]] column:
     * [[IngestPipeline.processGroup]] passes its group's instant, so the
     * fact, quarantine and aggregate rows share one `ingestion_ts`. */
-  def addLineage(df: DataFrame, filePath: String,
-      ingestedAt: Column = current_timestamp()): DataFrame = {
+  def addLineage(df: DataFrame, filePath: String, ingestedAt: Column): DataFrame = {
     val dataCols = df.columns.toSeq
       .filterNot(Set(FilePathCol, IngestionTsCol, RowHashCol))
     df.withColumn(FilePathCol, lit(filePath))

@@ -39,12 +39,14 @@ object StatsAggregation {
         DetAgg.dstddev(col(c)).as(s"stddev_$c"))
     }
 
+  /** `ingestedAt` fills `ingestion_ts`: an [[graft.expressions.InstantRef]]
+    * column, so the plan's generated code does not change with the time. */
   def aggregate(
       df: DataFrame,
       groupCol: String = "sensor_id",
       dataSource: String = "minio_bucket",
       fileName: String = "",
-      ingestedAt: Column = current_timestamp()): Option[DataFrame] = {
+      ingestedAt: Column): Option[DataFrame] = {
     val withGroup =
       if (df.columns.contains(groupCol)) df
       else df.withColumn(groupCol, lit("unknown"))

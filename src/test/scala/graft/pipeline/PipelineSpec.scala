@@ -1,10 +1,12 @@
 package graft.pipeline
 
 import java.nio.file.Files
+import java.time.Instant
 
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.expressions.InstantRef
 
 /** Golden end-to-end parity: replay the reference's own fixture pair
   * (clean + corrupted smart-farming CSV, FIXTURES.md §1) through the
@@ -88,8 +90,9 @@ class PipelineSpec extends SparkSpec {
 
   test("row hash is replay-stable and order-insensitive to partitioning") {
     val df = spark.read.option("header", "true").csv(cleanCsv)
-    val h1 = Metadata.addLineage(df, "f").select("row_hash").collect().map(_.getString(0)).sorted
-    val h2 = Metadata.addLineage(df.repartition(7), "f")
+    val at = InstantRef.column(Instant.now())
+    val h1 = Metadata.addLineage(df, "f", at).select("row_hash").collect().map(_.getString(0)).sorted
+    val h2 = Metadata.addLineage(df.repartition(7), "f", at)
       .select("row_hash").collect().map(_.getString(0)).sorted
     assert(h1.sameElements(h2))
   }

@@ -1,11 +1,14 @@
 package graft.pipeline
 
+import java.time.Instant
+
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
 import graft.SparkSpec
+import graft.expressions.InstantRef
 
 /** Property-based invariants of the validation/metadata core
   * (SURVEY.md §5.2-2), over ScalaCheck-generated dirty rows shaped like
@@ -80,7 +83,8 @@ class ValidationPropSpec extends SparkSpec {
   test("stats aggregation emits 4 stats per numeric column plus metadata") {
     samples(40, 3).foreach { rows =>
       val df = toDf(rows)
-      val agg = StatsAggregation.aggregate(df, "sensor_id", "test", "t").get
+      val agg = StatsAggregation.aggregate(df, "sensor_id", "test", "t",
+        InstantRef.column(Instant.now())).get
       val numerics = StatsAggregation.numericCols(df)
       val statCols = agg.columns.filter(c =>
         c.startsWith("min_") || c.startsWith("max_") ||
@@ -96,7 +100,7 @@ class ValidationPropSpec extends SparkSpec {
     import spark.implicits._
     val df = Seq(("s1", 50000), ("s1", 1), ("s1", 46341), ("s2", 7))
       .toDF("sensor_id", "reading")
-    val agg = StatsAggregation.aggregate(df).get
+    val agg = StatsAggregation.aggregate(df, ingestedAt = InstantRef.column(Instant.now())).get
       .orderBy("sensor_id").select("stddev_reading").collect()
     val ref = df.groupBy("sensor_id").agg(stddev_samp("reading"))
       .orderBy("sensor_id").collect()
