@@ -21,7 +21,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{Project, Sort}
   *    presentation sort ([[Q.stripPresentationSort]]) — guide §2.4's
   *    "orderBy used only to make output deterministic" class. At bench
   *    scale the sort's range exchange + sampling pass was measured at
-  *    ~19 % of suite time (SortTaxProbe, r17); at 100 TB it is a full
+  *    ~19 % of suite time (r17); at 100 TB it is a full
   *    range shuffle of every corpus-sized result, bought for nothing the
   *    compare can observe.
   */

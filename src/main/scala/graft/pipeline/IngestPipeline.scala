@@ -21,8 +21,8 @@ import graft.expressions.InstantRef
   *      micro-batch over an already-seen schema compiles nothing new.
   *
   * The fact/agg sink is pluggable: parquet for tests and lakehouse-style
-  * deployments, JDBC (append or upsert) for the reference's Postgres
-  * topology.
+  * deployments, JDBC (fact upsert, aggregate append) for the reference's
+  * Postgres topology.
   */
 object IngestPipeline {
 
@@ -39,10 +39,11 @@ object IngestPipeline {
       df.write.mode(SaveMode.Append).parquet(s"$baseDir/${table.replace('.', '_')}")
   }
 
-  final case class JdbcSink(cfg: Sinks.JdbcConfig, upsert: Boolean = true) extends Sink {
+  /** Fact rows upsert on `row_hash`, so a replayed micro-batch adds no
+    * duplicate; aggregate rows append. */
+  final case class JdbcSink(cfg: Sinks.JdbcConfig) extends Sink {
     def writeFact(df: DataFrame, table: String): Unit =
-      if (upsert) Sinks.jdbcUpsert(df, table, cfg)
-      else Sinks.jdbcAppend(df, table, cfg)
+      Sinks.jdbcUpsert(df, table, cfg)
     def writeAgg(df: DataFrame, table: String): Unit =
       Sinks.jdbcAppend(df, table, cfg)
   }

@@ -12,13 +12,14 @@ import org.apache.spark.sql.types.{BooleanType, DataType, DateType, DecimalType,
   DoubleType, FloatType, IntegerType, LongType, ShortType, TimestampType}
 
 /** Persistence surface, re-expressing the reference's sinks
-  * (SURVEY.md §2.2): JDBC fact/agg appends, the date-partitioned JSON
+  * (SURVEY.md §2.2): JDBC fact/agg writes, the date-partitioned JSON
   * quarantine store, and the processed/quarantine file mover. The audit
   * store is [[Audit]].
   *
-  * The JDBC path adds what the reference lacks (SURVEY.md §3.3/§4.3-3):
-  * an idempotent upsert keyed on `row_hash`, so a replayed micro-batch
-  * cannot double-write. Plain appends stay available for parity.
+  * The JDBC fact write adds what the reference lacks (SURVEY.md
+  * §3.3/§4.3-3): an idempotent upsert keyed on `row_hash`, so a replayed
+  * micro-batch cannot double-write. Aggregate rows append, as the
+  * reference's do.
   */
 object Sinks {
 
@@ -161,13 +162,17 @@ object Sinks {
       DateTimeUtils.getZoneId(spark.conf.get("spark.sql.session.timeZone"))).toString
 
   /** Quarantine store: bad rows + quarantine_date partition
-    * (helpers.py:229-244). */
+    * (helpers.py:229-244). Timestamps keep microseconds, as the parquet
+    * fact and aggregate stores do (Spark's default JSON format keeps
+    * milliseconds), so one group's `ingestion_ts` reads back equal in
+    * every store. */
   def writeQuarantine(bad: DataFrame, quarantineDir: String, tableName: String,
       date: String): Unit =
     Retry() {
       bad.withColumn("quarantine_date", lit(date))
         .write.mode(SaveMode.Append)
         .partitionBy("quarantine_date")
+        .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")
         .json(s"$quarantineDir/$tableName")
     }
 

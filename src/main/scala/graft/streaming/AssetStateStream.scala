@@ -126,15 +126,15 @@ object AssetStateStream {
     * 0 = staged only). */
   private[streaming] def forgetImpl(spark: SparkSession, stateDir: String,
       tombstones: DataFrame, crashAfterSwap: Int): Unit =
-    CorpusStateStream.stagedKeyedForget(spark, stateDir, "doc_id",
-      Seq("digests", "paysigs"), Seq(),
-      tombstones.select(col("doc_id")), crashAfterSwap)
+    CorpusStateStream.stagedKeyedForget(spark, stateDir, "doc_id", swaps,
+      tombstones, crashAfterSwap)
 
   /** Crash recovery for [[forget]] — heal dangling swaps and re-apply a
     * staged pending forget from its stored tombstones. */
   def recoverForget(spark: SparkSession, stateDir: String): Unit =
-    CorpusStateStream.recoverKeyedForget(spark, stateDir, "doc_id",
-      Seq("digests", "paysigs"), Seq())
+    CorpusStateStream.recoverKeyedForget(spark, stateDir, "doc_id", swaps)
+
+  private val swaps = Seq("digests", "paysigs").map(CorpusStateStream.KeyedSwap(_))
 
   /** Start the maintenance stream over arriving document parquet files
     * (same source shape as [[CorpusStateStream.start]] — one landing

@@ -236,14 +236,20 @@ object CorpusStateStream {
       : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val old = new org.apache.hadoop.fs.Path(dir + ".old")
-    // crash recovery from a previous run: died between the two renames →
-    // .old IS the table, promote it back; died after the swap → .old is
-    // a stale copy of the pre-compaction table, safe to drop below
-    if (!fs.exists(p) && fs.exists(old))
-      require(fs.rename(old, p), s"could not recover $old to $dir")
+    healOld(fs, p)
     require(fs.exists(p), s"no state table at $dir")
     (fs, p)
+  }
+
+  /** The one dangling-`.old` promotion: a swap that died between its two
+    * renames left `.old` as the table, so promote it back; a swap that
+    * died after them left `.old` as a stale copy, which the next swap
+    * drops. */
+  private def healOld(fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path): Unit = {
+    val old = new org.apache.hadoop.fs.Path(p.toString + ".old")
+    if (!fs.exists(p) && fs.exists(old))
+      require(fs.rename(old, p), s"could not recover $old to $p")
   }
 
   /** Write a replacement table via `writeTmp(tmpDir)`, then swap it in
@@ -264,102 +270,137 @@ object CorpusStateStream {
     fs.delete(old, true)
   }
 
-  // ——— staged multi-table keyed forgets (the r17 lexical protocol,
+  // ——— the staged-pending crash protocol (the r17 lexical protocol,
   // shared) ———
   //
-  // A keyed family whose forget swaps MORE THAN ONE table has a crash
-  // window between the swaps: each table is individually consistent,
-  // but the PAIR is not (forgotten digests next to unforgotten
-  // signatures; survivor lists next to a still-tombstoned codes tier a
-  // certificate would over-count). The lexical index closed this in
-  // r17 (advisor catch) by staging its tombstones under a
-  // `forget_pending/` marker before the first swap and clearing it
-  // after the last — reads refuse mid-window and recovery replays the
-  // idempotent anti-join body from the stored set. These helpers are
-  // that protocol for the PLAIN keyed families (asset, IVF), whose
-  // replacement tables are pure anti-joins of the stored tombstones.
+  // A mutation that changes MORE THAN ONE thing has a crash window
+  // between its steps: each table is individually consistent, but the
+  // set is not (forgotten digests next to unforgotten signatures;
+  // survivor lists next to a still-tombstoned codes tier; split lists
+  // without their lineage). The lexical index closed this in r17
+  // (advisor catch) by staging the mutation's inputs under a pending
+  // marker before the first step and clearing it after the last —
+  // reads refuse mid-window and recovery replays the idempotent body
+  // from the stored inputs. Every multi-step mutation runs through the
+  // helpers below: the keyed forgets (asset, IVF, lexical, the
+  // datasheet's sigs half) through [[stagedKeyedForget]], and the IVF
+  // rebalance (`rebal_pending`) and packing forget
+  // (`ledger_forget_pending`) through [[stagePending]],
+  // [[requireNoPending]] and [[recoverPending]] around their own apply.
+  // On disk a stage is `<marker>.tmp` until one rename publishes it as
+  // `<marker>`, so a half-written stage is never mistaken for an
+  // appliable one.
 
-  private[streaming] def keyedForgetPendingPath(stateDir: String) =
-    new org.apache.hadoop.fs.Path(s"$stateDir/forget_pending")
+  /** The pending marker of the keyed forgets. */
+  private[streaming] val ForgetPending = "forget_pending"
 
-  /** Read/write-path guard: refuse while a staged forget is mid-window. */
+  private def pendingPath(spark: SparkSession, stateDir: String,
+      marker: String)
+      : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
+    val pend = new org.apache.hadoop.fs.Path(s"$stateDir/$marker")
+    (pend.getFileSystem(spark.sparkContext.hadoopConfiguration), pend)
+  }
+
+  /** Stage a mutation: `write(tmpDir)` fills `<marker>.tmp`, then one
+    * rename publishes it as `<marker>`. */
+  private[streaming] def stagePending(spark: SparkSession, stateDir: String,
+      marker: String)(write: String => Unit): Unit = {
+    val (fs, pend) = pendingPath(spark, stateDir, marker)
+    val tmp = new org.apache.hadoop.fs.Path(s"$stateDir/$marker.tmp")
+    fs.delete(tmp, true)
+    write(tmp.toString)
+    require(fs.rename(tmp, pend), s"could not stage $tmp to $pend")
+  }
+
+  /** Read/write-path guard: refuse while a staged mutation is
+    * mid-window; the message names the marker, then says `why`. */
+  private[streaming] def requireNoPending(spark: SparkSession,
+      stateDir: String, marker: String, why: String): Unit = {
+    val (fs, pend) = pendingPath(spark, stateDir, marker)
+    require(!fs.exists(pend), s"$pend exists: $why")
+  }
+
+  /** [[requireNoPending]] for the keyed forgets. */
   private[streaming] def requireNoPendingForget(spark: SparkSession,
-      stateDir: String, family: String): Unit = {
-    val pend = keyedForgetPendingPath(stateDir)
-    require(!pend.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(pend),
-      s"$pend exists: a $family forget crashed between its table swaps — " +
-      "run recoverForget (or re-run forget) to heal before reading or " +
+      stateDir: String, family: String): Unit =
+    requireNoPending(spark, stateDir, ForgetPending,
+      s"a $family forget crashed between its table swaps — run " +
+      "recoverForget (or re-run forget) to heal before reading or " +
       "writing; a mid-window read would see the tables disagree on which " +
       "keys survive")
+
+  /** Recovery preamble: discard a half-staged `<marker>.tmp` (never
+    * appliable), promote a dangling `.old` of each table the mutation
+    * swaps, and tell whether a staged `<marker>` awaits its apply. */
+  private[streaming] def recoverPending(spark: SparkSession,
+      stateDir: String, marker: String, tables: Seq[String] = Nil): Boolean = {
+    val (fs, pend) = pendingPath(spark, stateDir, marker)
+    fs.delete(new org.apache.hadoop.fs.Path(s"$stateDir/$marker.tmp"), true)
+    tables.foreach(t => healOld(fs, new org.apache.hadoop.fs.Path(s"$stateDir/$t")))
+    fs.exists(pend)
   }
 
-  /** Stage the tombstone set atomically, then run the idempotent
-    * multi-swap body. `keyedTables` must exist; `optionalTables` swap
-    * only if present (the IVF codes tier). Safe from any crash point —
-    * an already-swapped table anti-joins to itself on recovery.
-    * `crashAfterSwap` is the spec seam (0 = staged only). */
+  /** Close a window: the mutation's last step. */
+  private[streaming] def clearPending(spark: SparkSession, stateDir: String,
+      marker: String): Unit = {
+    val (fs, pend) = pendingPath(spark, stateDir, marker)
+    fs.delete(pend, true)
+  }
+
+  /** One table of a keyed forget, in swap order. Its replacement is the
+    * anti-join of the staged tombstones unless `rows` derives it (from
+    * tables swapped before it); an `optional` table swaps only if it
+    * exists (the IVF codes tier). */
+  private[streaming] case class KeyedSwap(table: String,
+      optional: Boolean = false, rows: Option[() => DataFrame] = None)
+
+  /** Stage the tombstone set, then run the idempotent multi-swap body.
+    * Safe from any crash point — an already-swapped table anti-joins to
+    * itself on recovery. `crashAfterSwap` is the spec seam (0 = staged
+    * only, n = after the n-th swap). */
   private[streaming] def stagedKeyedForget(spark: SparkSession,
-      stateDir: String, keyName: String, keyedTables: Seq[String],
-      optionalTables: Seq[String], tombstones: DataFrame,
-      crashAfterSwap: Int = Int.MaxValue): Unit = {
-    recoverKeyedForget(spark, stateDir, keyName, keyedTables, optionalTables)
-    val pend = keyedForgetPendingPath(stateDir)
-    val fs = pend.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(s"$stateDir/forget_pending.tmp")
-    fs.delete(tmp, true)
-    tombstones.select(col(keyName)).distinct()
-      .coalesce(1).write.mode("overwrite").parquet(s"$tmp/tombs")
-    require(fs.rename(tmp, pend), s"could not stage the forget to $pend")
+      stateDir: String, keyName: String, swaps: Seq[KeyedSwap],
+      tombstones: DataFrame, crashAfterSwap: Int = Int.MaxValue): Unit = {
+    recoverKeyedForget(spark, stateDir, keyName, swaps)
+    stagePending(spark, stateDir, ForgetPending)(tmp =>
+      tombstones.select(col(keyName)).distinct()
+        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/tombs"))
     if (crashAfterSwap == 0)
       throw new IllegalStateException("injected crash after staging")
-    applyKeyedForget(spark, stateDir, keyName, keyedTables, optionalTables,
-      crashAfterSwap)
+    applyKeyedForget(spark, stateDir, keyName, swaps, crashAfterSwap)
   }
 
-  private def applyKeyedForget(spark: SparkSession, stateDir: String,
-      keyName: String, keyedTables: Seq[String], optionalTables: Seq[String],
-      crashAfterSwap: Int): Unit = {
-    val pend = keyedForgetPendingPath(stateDir)
-    val fs = pend.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  /** The keyed apply body: swap each table to its replacement against
+    * the staged tombstones, in order, then clear the marker. */
+  private[streaming] def applyKeyedForget(spark: SparkSession,
+      stateDir: String, keyName: String, swaps: Seq[KeyedSwap],
+      crashAfterSwap: Int = Int.MaxValue): Unit = {
+    val (fs, pend) = pendingPath(spark, stateDir, ForgetPending)
     val tomb = spark.read.parquet(s"$pend/tombs").localCheckpoint(true)
-    val present = keyedTables ++ optionalTables.filter(t =>
-      fs.exists(new org.apache.hadoop.fs.Path(s"$stateDir/$t")))
-    present.zipWithIndex.foreach { case (t, i) =>
+    val present = swaps.filter(s => !s.optional ||
+      fs.exists(new org.apache.hadoop.fs.Path(s"$stateDir/${s.table}")))
+    present.zipWithIndex.foreach { case (s, i) =>
       // raw parquet read (the public readers refuse mid-window); the
       // replacement materializes BEFORE its swap
-      val surv = spark.read.parquet(s"$stateDir/$t")
-        .join(broadcast(tomb), Seq(keyName), "left_anti")
+      val surv = s.rows.map(_()).getOrElse(
+          spark.read.parquet(s"$stateDir/${s.table}")
+            .join(broadcast(tomb), Seq(keyName), "left_anti"))
         .localCheckpoint(true)
-      swapState(spark, s"$stateDir/$t")(tmp =>
+      swapState(spark, s"$stateDir/${s.table}")(tmp =>
         surv.write.mode("overwrite").parquet(tmp))
       if (crashAfterSwap == i + 1)
         throw new IllegalStateException(s"injected crash after swap ${i + 1}")
     }
-    fs.delete(pend, true)
+    clearPending(spark, stateDir, ForgetPending)
   }
 
-  /** Crash recovery for [[stagedKeyedForget]]: promote any dangling
-    * `.old` (a swap that died between its two renames), discard a
-    * half-staged `.tmp`, and re-apply a staged pending forget from its
-    * stored tombstones. */
+  /** Crash recovery for [[stagedKeyedForget]]: discard a half-staged
+    * `.tmp`, promote dangling `.old`s, and re-apply a staged pending
+    * forget from its stored tombstones. */
   private[streaming] def recoverKeyedForget(spark: SparkSession,
-      stateDir: String, keyName: String, keyedTables: Seq[String],
-      optionalTables: Seq[String]): Unit = {
-    val pend = keyedForgetPendingPath(stateDir)
-    val fs = pend.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$stateDir/forget_pending.tmp"),
-      true)
-    (keyedTables ++ optionalTables).foreach { t =>
-      val dir = new org.apache.hadoop.fs.Path(s"$stateDir/$t")
-      val old = new org.apache.hadoop.fs.Path(s"$stateDir/$t.old")
-      if (!fs.exists(dir) && fs.exists(old))
-        require(fs.rename(old, dir), s"could not recover $old to $dir")
-    }
-    if (fs.exists(pend))
-      applyKeyedForget(spark, stateDir, keyName, keyedTables, optionalTables,
-        Int.MaxValue)
-  }
+      stateDir: String, keyName: String, swaps: Seq[KeyedSwap]): Unit =
+    if (recoverPending(spark, stateDir, ForgetPending, swaps.map(_.table)))
+      applyKeyedForget(spark, stateDir, keyName, swaps)
 
   /** The reserved batch_id of folded snapshot rows in an additive
     * delta-log table. Real batch ids are non-negative (the streaming

@@ -250,22 +250,11 @@ object DatasheetStateStream {
       batchId: Long, crashAfterStep: Int): Unit = {
     val spark = docs.sparkSession
     stampFormat(spark, stateDir)
-    val pend = CorpusStateStream.keyedForgetPendingPath(stateDir)
-    val fs = pend.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // heal or adopt a prior crashed window: ledger-committed completes
     // here; a pre-delta crash of THIS id is adopted (this run redoes
     // everything from the start); a pre-delta crash of ANOTHER id needs
     // its own docs — refuse with the instruction
-    if (fs.exists(pend)) {
-      val prior = spark.read.parquet(s"$pend/meta").collect()(0).getLong(0)
-      if (ledgerCommitted(spark, stateDir, prior))
-        completePendingForget(spark, stateDir)
-      else if (prior == batchId) fs.delete(pend, true)
-      else throw new IllegalStateException(
-        s"$pend holds a forget (batch $prior) that crashed BEFORE its " +
-        s"deltas committed — re-run forget with batch $prior's original " +
-        "documents to heal before submitting a different deletion")
-    }
+    recoverWindow(spark, stateDir, owner = Some(batchId))
     val scrubbed = docs
       .select(col("doc_id"), col("text"), col("lang"), col("source"))
       .localCheckpoint()
@@ -284,21 +273,20 @@ object DatasheetStateStream {
         batchId, sign = -1L,
         deltasInLog = stateDf(spark, s"$stateDir/ds_counters", countersSchema)
           .filter(col("batch_id") === batchId).limit(1).count() > 0)
-    // stage the marker BEFORE the deltas: tombstone ids + the batch id,
-    // promoted under one atomic rename
-    val tmp = new org.apache.hadoop.fs.Path(s"$stateDir/forget_pending.tmp")
-    fs.delete(tmp, true)
-    scrubbed.select(col("doc_id")).distinct()
-      .coalesce(1).write.mode("overwrite").parquet(s"$tmp/tombs")
-    spark.range(1).select(lit(batchId).as("batch_id"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$tmp/meta")
-    require(fs.rename(tmp, pend), s"could not stage the forget to $pend")
+    // stage the marker BEFORE the deltas: tombstone ids + the batch id
+    CorpusStateStream.stagePending(spark, stateDir,
+        CorpusStateStream.ForgetPending) { tmp =>
+      scrubbed.select(col("doc_id")).distinct()
+        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/tombs")
+      spark.range(1).select(lit(batchId).as("batch_id"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/meta")
+    }
     if (crashAfterStep == 0)
       throw new IllegalStateException("injected crash after staging")
     appendDeltaTables(stateDir, scrubbed, batchId, sign = -1L)
     if (crashAfterStep == 1)
       throw new IllegalStateException("injected crash after deltas")
-    completePendingForget(spark, stateDir)
+    completeSigs(spark, stateDir)
   }
 
   private def ledgerCommitted(spark: SparkSession, stateDir: String,
@@ -306,44 +294,39 @@ object DatasheetStateStream {
     stateDf(spark, s"$stateDir/ds_ledger", ledgerSchema)
       .filter(col("batch_id") === batchId).limit(1).count() > 0
 
-  /** The sigs-swap half, replayed from the PENDING dir's stored
-    * tombstones (anti-join — idempotent), then the marker clears. */
-  private def completePendingForget(spark: SparkSession,
-      stateDir: String): Unit = {
-    val pend = CorpusStateStream.keyedForgetPendingPath(stateDir)
-    val fs = pend.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // heal a sigs swap that died between its two renames
-    val dir = new org.apache.hadoop.fs.Path(s"$stateDir/sigs")
-    val old = new org.apache.hadoop.fs.Path(s"$stateDir/sigs.old")
-    if (!fs.exists(dir) && fs.exists(old))
-      require(fs.rename(old, dir), s"could not recover $old to $dir")
-    val tomb = spark.read.parquet(s"$pend/tombs").localCheckpoint(true)
-    val survivors = spark.read.parquet(s"$stateDir/sigs")
-      .join(broadcast(tomb), Seq("doc_id"), "left_anti")
-      .localCheckpoint(true)
-    CorpusStateStream.swapState(spark, s"$stateDir/sigs")(tmp =>
-      survivors.write.mode("overwrite").parquet(tmp))
-    fs.delete(pend, true)
+  /** The sigs-swap half: the keyed apply over the stored tombstones
+    * (anti-join — idempotent), which then clears the marker. */
+  private def completeSigs(spark: SparkSession, stateDir: String): Unit =
+    CorpusStateStream.applyKeyedForget(spark, stateDir, "doc_id",
+      Seq(CorpusStateStream.KeyedSwap("sigs")))
+
+  /** Heal a staged window: one whose deltas are ledger-committed
+    * completes its sigs swap; a pre-delta one cannot rebuild its deltas
+    * from ids alone, so only its `owner` batch may adopt (clear) it and
+    * anyone else is refused with the batch to re-run. */
+  private def recoverWindow(spark: SparkSession, stateDir: String,
+      owner: Option[Long]): Unit = {
+    if (!CorpusStateStream.recoverPending(spark, stateDir,
+        CorpusStateStream.ForgetPending, Seq("sigs"))) return
+    val pend = s"$stateDir/${CorpusStateStream.ForgetPending}"
+    val prior = spark.read.parquet(s"$pend/meta").collect()(0).getLong(0)
+    if (ledgerCommitted(spark, stateDir, prior)) completeSigs(spark, stateDir)
+    else if (owner.contains(prior))
+      CorpusStateStream.clearPending(spark, stateDir,
+        CorpusStateStream.ForgetPending)
+    else throw new IllegalStateException(
+      s"$pend holds a forget (batch $prior) that crashed BEFORE its " +
+      s"deltas committed — re-run forget with batch $prior's original " +
+      "documents to heal it (the staged ids alone cannot rebuild the " +
+      "deltas) before reading or submitting a different deletion")
   }
 
   /** Crash recovery for [[forget]]: a staged window whose deltas are
     * ledger-committed completes (the sigs swap from stored tombstones);
     * a pre-delta window cannot rebuild its deltas from ids alone and
     * refuses, naming the batch to re-run. */
-  def recoverForget(spark: SparkSession, stateDir: String): Unit = {
-    val pend = CorpusStateStream.keyedForgetPendingPath(stateDir)
-    val fs = pend.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$stateDir/forget_pending.tmp"),
-      true)
-    if (!fs.exists(pend)) return
-    val prior = spark.read.parquet(s"$pend/meta").collect()(0).getLong(0)
-    if (ledgerCommitted(spark, stateDir, prior))
-      completePendingForget(spark, stateDir)
-    else throw new IllegalStateException(
-      s"$pend holds a forget (batch $prior) that crashed BEFORE its " +
-      s"deltas committed — re-run forget with batch $prior's original " +
-      "documents (the staged ids alone cannot rebuild the deltas)")
-  }
+  def recoverForget(spark: SparkSession, stateDir: String): Unit =
+    recoverWindow(spark, stateDir, owner = None)
 
   /** Net > 0 word keys — the vocabulary membership set whose count is
     * the sheet's vocab_size metric; exposed so the deletion certificate

@@ -253,8 +253,7 @@ object IvfStateStream {
     CorpusStateStream.stateDf(spark, s"$stateDir/rebal", rebalSchema)
       .distinct()
 
-  private def pendingPath(stateDir: String) =
-    new org.apache.hadoop.fs.Path(s"$stateDir/rebal_pending")
+  private val RebalPending = "rebal_pending"
 
   /** Refuse any OTHER index mutation while a crashed rebalance's staged
     * plan exists — the [[splitHealthFromState]] guard applied to the
@@ -268,14 +267,11 @@ object IvfStateStream {
     * promoted a NEVER-RUN pass's stale plan. Heal first; the mutation
     * is one `recoverRebalance` call away. */
   private def requireNoPendingRebalance(spark: SparkSession,
-      stateDir: String, op: String): Unit = {
-    val pend = pendingPath(stateDir)
-    val fs = pend.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(!fs.exists(pend),
-      s"$stateDir/rebal_pending exists: a rebalance pass crashed before " +
-      s"promoting its lineage — re-run rebalance with the same maxList " +
-      s"(or call recoverRebalance) to heal before $op")
-  }
+      stateDir: String, op: String): Unit =
+    CorpusStateStream.requireNoPending(spark, stateDir, RebalPending,
+      "a rebalance pass crashed before promoting its lineage — re-run " +
+      "rebalance with the same maxList (or call recoverRebalance) to heal " +
+      s"before $op")
 
   /** Promote a staged pending pass: append its lineage rows, swap
     * `meta/` to the post-pass configured count (two-rename protocol —
@@ -284,7 +280,7 @@ object IvfStateStream {
     * under re-promotion: duplicate lineage rows fold in [[rebalState]],
     * the meta swap rewrites the same value. */
   private def promotePending(spark: SparkSession, stateDir: String): Unit = {
-    val pend = pendingPath(stateDir)
+    val pend = s"$stateDir/$RebalPending"
     spark.read.schema(rebalSchema).parquet(s"$pend/lineage")
       .coalesce(1).write.mode("append").parquet(s"$stateDir/rebal")
     val m = spark.read.schema(pendingMetaSchema).parquet(s"$pend/meta")
@@ -294,8 +290,7 @@ object IvfStateStream {
           java.util.Collections.singletonList(
             org.apache.spark.sql.Row(Integer.valueOf(m.getInt(0)))), metaSchema)
         .coalesce(1).write.mode("overwrite").parquet(tmp))
-    val fs = pend.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(pend, true)
+    CorpusStateStream.clearPending(spark, stateDir, RebalPending)
   }
 
   /** Crash recovery for [[rebalance]] — called at the start of every
@@ -325,11 +320,9 @@ object IvfStateStream {
     * still-hot heuristic under its documented same-maintenance-window
     * semantics. */
   def recoverRebalance(spark: SparkSession, stateDir: String): Unit = {
-    val pend = pendingPath(stateDir)
-    val fs = pend.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // incomplete staging from a crash mid-write is never promotable
-    fs.delete(new org.apache.hadoop.fs.Path(s"$stateDir/rebal_pending.tmp"), true)
-    if (!fs.exists(pend)) return
+    if (!CorpusStateStream.recoverPending(spark, stateDir, RebalPending,
+        Seq("centroids", "lists", "meta"))) return
+    val pend = s"$stateDir/$RebalPending"
     val meta = spark.read.schema(pendingMetaSchema)
       .parquet(s"$pend/meta").take(1).head
     val swapped =
@@ -350,7 +343,8 @@ object IvfStateStream {
           .join(broadcast(staged), Seq("cid"), "left_semi")
           .limit(1).count() > 0
       }
-    if (swapped) promotePending(spark, stateDir) else fs.delete(pend, true)
+    if (swapped) promotePending(spark, stateDir)
+    else CorpusStateStream.clearPending(spark, stateDir, RebalPending)
   }
 
   /** OFFLINE hot-list rebalance of the maintained index — the state
@@ -478,19 +472,15 @@ object IvfStateStream {
         col("root_parent")))
     // 0. stage the pass (atomic dir rename: a half-written pending can
     //    never be mistaken for a promotable one)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val pend = pendingPath(stateDir)
-    val tmp = new org.apache.hadoop.fs.Path(s"$stateDir/rebal_pending.tmp")
-    val fs = pend.getFileSystem(hconf)
-    fs.delete(tmp, true); fs.delete(pend, true)
-    lineage.coalesce(1).write.mode("overwrite").parquet(s"$tmp/lineage")
-    spark.createDataFrame(
-        java.util.Collections.singletonList(
-          org.apache.spark.sql.Row(Integer.valueOf(nNew),
-            Integer.valueOf(maxList), Integer.valueOf(remapBase))),
-        pendingMetaSchema)
-      .coalesce(1).write.mode("overwrite").parquet(s"$tmp/meta")
-    require(fs.rename(tmp, pend), s"could not stage rebalance pass to $pend")
+    CorpusStateStream.stagePending(spark, stateDir, RebalPending) { tmp =>
+      lineage.coalesce(1).write.mode("overwrite").parquet(s"$tmp/lineage")
+      spark.createDataFrame(
+          java.util.Collections.singletonList(
+            org.apache.spark.sql.Row(Integer.valueOf(nNew),
+              Integer.valueOf(maxList), Integer.valueOf(remapBase))),
+          pendingMetaSchema)
+        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/meta")
+    }
     crash(1)
     // 1. centroids swap FIRST, to the full post-split set
     CorpusStateStream.swapState(spark, s"$stateDir/centroids")(t =>
@@ -569,15 +559,17 @@ object IvfStateStream {
     // reads now refuse mid-window and recoverForget heals from the
     // stored tombstones
     CorpusStateStream.stagedKeyedForget(spark, stateDir, "vec_id",
-      Seq("lists"), Seq("codes"), tombstones.select(col("vec_id")),
-      crashAfterSwap)
+      forgetSwaps, tombstones, crashAfterSwap)
   }
 
   /** Crash recovery for [[forget]] — heal dangling swaps and re-apply a
     * staged pending forget from its stored tombstones. */
   def recoverForget(spark: SparkSession, stateDir: String): Unit =
     CorpusStateStream.recoverKeyedForget(spark, stateDir, "vec_id",
-      Seq("lists"), Seq("codes"))
+      forgetSwaps)
+
+  private val forgetSwaps = Seq(CorpusStateStream.KeyedSwap("lists"),
+    CorpusStateStream.KeyedSwap("codes", optional = true))
 
   /** The post-split health table served FROM the REBALANCED state — the
     * q182/q139 serving pattern applied to the maintenance op itself:
@@ -591,12 +583,7 @@ object IvfStateStream {
     * Nothing here re-runs the split or rescans the corpus: the read is
     * one lists-scan + broadcast joins. */
   def splitHealthFromState(spark: SparkSession, stateDir: String): DataFrame = {
-    val fs = pendingPath(stateDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(!fs.exists(pendingPath(stateDir)),
-      s"$stateDir/rebal_pending exists: a rebalance pass crashed before " +
-      "promoting its lineage — re-run rebalance with the same maxList " +
-      "(or call recoverRebalance) to heal before serving split health")
+    requireNoPendingRebalance(spark, stateDir, "serving split health")
     val children = rebalState(spark, stateDir)
       .select(col("child_cid")).localCheckpoint(true)
     require(children.limit(1).count() > 0,

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -110,19 +109,11 @@ object LexicalStateStream {
     StructField("n_dl_docs", LongType),
     StructField("sum_dl", LongType)))
 
-  private def forgetPendingPath(stateDir: String) =
-    new Path(s"$stateDir/forget_pending")
-
   /** Read-path guard: refuse while a [[forget]] is mid-window (some
     * tables swapped, others not — N/df/avgdl would disagree silently)
-    * and require the v2 layout marker on a populated dir. */
+    * and require the v3 layout marker on a populated dir. */
   private def requireReadable(spark: SparkSession, stateDir: String): Unit = {
-    val pend = forgetPendingPath(stateDir)
-    require(!pend.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(pend),
-      s"$pend exists: a lexical forget crashed between its table swaps — " +
-      "run recoverForget (or re-run forget) to heal before reading; a " +
-      "mid-window read would serve df/N/avgdl from inconsistent tables")
+    CorpusStateStream.requireNoPendingForget(spark, stateDir, "lexical")
     CorpusStateStream.requireFormat(spark, stateDir, "lexical",
       FormatVersion, "lexdocs")
   }
@@ -189,11 +180,8 @@ object LexicalStateStream {
     val spark = batch.sparkSession
     CorpusStateStream.stampFormat(spark, stateDir, "lexical",
       FormatVersion, "lexdocs")
-    val pend = forgetPendingPath(stateDir)
-    require(!pend.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(pend),
-      s"$pend exists: heal the crashed forget (recoverForget) before " +
-      "appending — a mid-window append could land in a table about to swap")
+    // a mid-window append could land in a table about to swap
+    CorpusStateStream.requireNoPendingForget(spark, stateDir, "lexical")
     val docs = batch.select(col("doc_id"), col("text"))
       .dropDuplicates("doc_id").localCheckpoint()
     // ONE positional tokenize pass feeds the positional-tier append,
@@ -392,78 +380,27 @@ object LexicalStateStream {
     * refuses reads and heals under [[recoverForget]]. */
   private[streaming] def forgetImpl(spark: SparkSession, stateDir: String,
       tombstones: DataFrame, crashAfterSwap: Int): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val pend = forgetPendingPath(stateDir)
-    val fs = pend.getFileSystem(hconf)
-    // heal any prior crashed forget first — its stored tombstones, then
-    // ours (two deletion requests compose; each body is idempotent)
-    recoverForget(spark, stateDir)
     CorpusStateStream.requireFormat(spark, stateDir, "lexical",
       FormatVersion, "lexdocs")
-    // stage the pending marker atomically: tombstones written to a .tmp
-    // dir, one rename — a half-written marker can never be mistaken for
-    // a healable window
-    val tmp = new Path(s"$stateDir/forget_pending.tmp")
-    fs.delete(tmp, true)
-    tombstones.select(col("doc_id")).distinct()
-      .coalesce(1).write.mode("overwrite").parquet(s"$tmp/tombs")
-    require(fs.rename(tmp, pend), s"could not stage the forget to $pend")
-    if (crashAfterSwap == 0)
-      throw new IllegalStateException("injected crash after staging")
-    applyPendingForget(spark, stateDir, crashAfterSwap)
+    // heals any prior crashed forget first — its stored tombstones, then
+    // ours (two deletion requests compose; each body is idempotent)
+    CorpusStateStream.stagedKeyedForget(spark, stateDir, "doc_id",
+      forgetSwaps(spark, stateDir), tombstones, crashAfterSwap)
   }
 
-  /** The idempotent forget body: anti-join every keyed table against
-    * the PENDING dir's tombstones, snapshot the counter from the
-    * surviving lengths, swap all five, clear the marker. Safe from any
-    * crash point — an already-swapped table anti-joins to itself. */
-  private def applyPendingForget(spark: SparkSession, stateDir: String,
-      crashAfterSwap: Int = Int.MaxValue): Unit = {
-    def crash(step: Int): Unit =
-      if (crashAfterSwap == step)
-        throw new IllegalStateException(s"injected crash after swap $step")
-    val pend = forgetPendingPath(stateDir)
-    val fs = pend.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tomb = spark.read.schema(lexdocsSchema).parquet(s"$pend/tombs")
-      .localCheckpoint(true)
-    // every replacement computes (and materializes) BEFORE its swap;
-    // raw reads — the public readers refuse while the marker exists
-    val p = rawPostings(spark, stateDir)
-      .join(broadcast(tomb), Seq("doc_id"), "left_anti")
-      .localCheckpoint(true)
-    CorpusStateStream.swapState(spark, s"$stateDir/postings")(t =>
-      p.write.mode("overwrite").parquet(t))
-    crash(1)
-    val pl = rawPoslists(spark, stateDir)
-      .join(broadcast(tomb), Seq("doc_id"), "left_anti")
-      .localCheckpoint(true)
-    CorpusStateStream.swapState(spark, s"$stateDir/poslists")(t =>
-      pl.write.mode("overwrite").parquet(t))
-    crash(2)
-    val dl = rawDoclens(spark, stateDir)
-      .join(broadcast(tomb), Seq("doc_id"), "left_anti")
-      .localCheckpoint(true)
-    CorpusStateStream.swapState(spark, s"$stateDir/doclens")(t =>
-      dl.write.mode("overwrite").parquet(t))
-    crash(3)
-    // the counter snapshot derives from the SURVIVING doclens — exact
-    // integers, so post-forget avgdl is the survivors' value to the bit
-    val statsSnap = dl
+  /** The forget's tables in swap order: the keyed ones anti-join the
+    * tombstones; the counter snapshot derives from the already-swapped
+    * SURVIVING doclens — exact integers, so post-forget avgdl is the
+    * survivors' value to the bit. */
+  private def forgetSwaps(spark: SparkSession, stateDir: String) = {
+    import CorpusStateStream.KeyedSwap
+    val statsSnap = () => rawDoclens(spark, stateDir)
       .agg(count(lit(1)).as("n_dl_docs"),
         coalesce(sum(col("dl")), lit(0L)).as("sum_dl"))
       .select(lit(CorpusStateStream.SnapshotBatchId).as("batch_id"),
         col("n_dl_docs"), col("sum_dl"))
-      .localCheckpoint(true)
-    CorpusStateStream.swapState(spark, s"$stateDir/lexstats")(t =>
-      statsSnap.write.mode("overwrite").parquet(t))
-    crash(4)
-    val d = rawLexdocs(spark, stateDir)
-      .join(broadcast(tomb), Seq("doc_id"), "left_anti")
-      .localCheckpoint(true)
-    CorpusStateStream.swapState(spark, s"$stateDir/lexdocs")(t =>
-      d.write.mode("overwrite").parquet(t))
-    crash(5)
-    fs.delete(pend, true)
+    Seq(KeyedSwap("postings"), KeyedSwap("poslists"), KeyedSwap("doclens"),
+      KeyedSwap("lexstats", rows = Some(statsSnap)), KeyedSwap("lexdocs"))
   }
 
   /** Crash recovery for [[forget]]: a staged pending dir replays the
@@ -471,21 +408,9 @@ object LexicalStateStream {
     * is discarded; a table dir left mid-swap (dangling `.old`) promotes
     * back first. Runs at the start of every forget; exposed for
     * operators healing a refused read without deleting anything new. */
-  def recoverForget(spark: SparkSession, stateDir: String): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val pend = forgetPendingPath(stateDir)
-    val fs = pend.getFileSystem(hconf)
-    fs.delete(new Path(s"$stateDir/forget_pending.tmp"), true)
-    // promote any dangling .old left by a swap that died between its
-    // two renames — the body's raw reads would otherwise refuse
-    Seq("postings", "poslists", "doclens", "lexstats", "lexdocs").foreach { t =>
-      val dir = new Path(s"$stateDir/$t")
-      val old = new Path(s"$stateDir/$t.old")
-      if (!fs.exists(dir) && fs.exists(old))
-        require(fs.rename(old, dir), s"could not recover $old to $dir")
-    }
-    if (fs.exists(pend)) applyPendingForget(spark, stateDir)
-  }
+  def recoverForget(spark: SparkSession, stateDir: String): Unit =
+    CorpusStateStream.recoverKeyedForget(spark, stateDir, "doc_id",
+      forgetSwaps(spark, stateDir))
 
   /** Start the maintenance stream over arriving document parquet files
     * (the shared CorpusStateStream starter). */

@@ -61,12 +61,10 @@ object PackingStream {
     * recoverForget]] heals every window; the splitHealthFromState
     * pattern applied to reads). */
   def ledgerState(spark: SparkSession, stateDir: String): DataFrame = {
-    val pend = forgetPendingPath(stateDir)
-    require(!pend.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(pend),
-      s"$pend exists: a packing forget crashed between staging and " +
-      "promoting its repacked suffix — run recoverForget (or re-run " +
-      "forget) to heal before reading or folding the ledger")
+    CorpusStateStream.requireNoPending(spark, stateDir, ForgetPending,
+      "a packing forget crashed between staging and promoting its " +
+      "repacked suffix — run recoverForget (or re-run forget) to heal " +
+      "before reading or folding the ledger")
     CorpusStateStream.requireFormat(spark, stateDir, "packing", 1, "ledger")
     CorpusStateStream.stateDf(spark, s"$stateDir/ledger", ledgerSchema)
   }
@@ -122,8 +120,7 @@ object PackingStream {
     fs.delete(stageDir, true)
   }
 
-  private def forgetPendingPath(stateDir: String) =
-    new Path(s"$stateDir/ledger_forget_pending")
+  private val ForgetPending = "ledger_forget_pending"
 
   /** The staged-forget manifest: one `dest` row (the promote target's
     * unique name) and one `drop` row per replaced file. Role-tagged —
@@ -258,33 +255,31 @@ object PackingStream {
     //    can then never collide with a prior pass's surviving file),
     //    promoted to pending under an atomic dir rename (a half-written
     //    pending can never be mistaken for appliable)
-    val pend = forgetPendingPath(stateDir)
-    val fs = pend.getFileSystem(hconf)
     val ledgerDir = new Path(s"$stateDir/ledger")
-    val tmp = new Path(s"$stateDir/ledger_forget_pending.tmp")
-    fs.delete(tmp, true); fs.delete(pend, true)
-    out.coalesce(1).write.mode("overwrite").parquet(s"$tmp/repack")
-    val part = fs.listStatus(new Path(s"$tmp/repack")).map(_.getPath)
-      .find(_.getName.endsWith(".parquet"))
-      .getOrElse(throw new IllegalStateException(
-        s"staged repack produced no parquet part under $tmp/repack"))
-    require(fs.rename(part, new Path(tmp, "repack.parquet")),
-      s"could not flatten the staged repack part under $tmp")
-    fs.delete(new Path(s"$tmp/repack"), true)
-    val dropBasenames = rewriteFiles
-      .map(f => new Path(new java.net.URI(f)).getName)
-    val taken = fs.listStatus(ledgerDir).map(_.getPath.getName)
-      .filter(_.startsWith("forget-"))
-      .flatMap(n => scala.util.Try(
-        n.stripPrefix("forget-").stripSuffix(".parquet").toLong).toOption)
-    val destName = f"forget-${if (taken.isEmpty) 0L else taken.max + 1}%06d.parquet"
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(
-        (org.apache.spark.sql.Row("dest", destName) +:
-          dropBasenames.toSeq.map(org.apache.spark.sql.Row("drop", _))).asJava,
-        manifestSchema)
-      .coalesce(1).write.mode("overwrite").parquet(s"$tmp/manifest")
-    require(fs.rename(tmp, pend), s"could not stage the forget to $pend")
+    val fs = ledgerDir.getFileSystem(hconf)
+    CorpusStateStream.stagePending(spark, stateDir, ForgetPending) { tmp =>
+      out.coalesce(1).write.mode("overwrite").parquet(s"$tmp/repack")
+      val part = fs.listStatus(new Path(s"$tmp/repack")).map(_.getPath)
+        .find(_.getName.endsWith(".parquet"))
+        .getOrElse(throw new IllegalStateException(
+          s"staged repack produced no parquet part under $tmp/repack"))
+      require(fs.rename(part, new Path(tmp, "repack.parquet")),
+        s"could not flatten the staged repack part under $tmp")
+      fs.delete(new Path(s"$tmp/repack"), true)
+      val dropBasenames = rewriteFiles
+        .map(f => new Path(new java.net.URI(f)).getName)
+      val taken = fs.listStatus(ledgerDir).map(_.getPath.getName)
+        .filter(_.startsWith("forget-"))
+        .flatMap(n => scala.util.Try(
+          n.stripPrefix("forget-").stripSuffix(".parquet").toLong).toOption)
+      val destName = f"forget-${if (taken.isEmpty) 0L else taken.max + 1}%06d.parquet"
+      import scala.jdk.CollectionConverters._
+      spark.createDataFrame(
+          (org.apache.spark.sql.Row("dest", destName) +:
+            dropBasenames.toSeq.map(org.apache.spark.sql.Row("drop", _))).asJava,
+          manifestSchema)
+        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/manifest")
+    }
     crash(1)
     applyPendingForget(spark, stateDir, crashAfterStep)
   }
@@ -304,7 +299,7 @@ object PackingStream {
     def crash(step: Int): Unit =
       if (crashAfterStep == step)
         throw new IllegalStateException(s"injected crash after step $step")
-    val pend = forgetPendingPath(stateDir)
+    val pend = new Path(s"$stateDir/$ForgetPending")
     val fs = pend.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val ledgerDir = new Path(s"$stateDir/ledger")
     val manifest = spark.read.schema(manifestSchema)
@@ -325,20 +320,16 @@ object PackingStream {
       require(fs.rename(src, dest), s"could not promote $src to $dest")
     crash(3)
     // 3. the pending dir clears
-    fs.delete(pend, true)
+    CorpusStateStream.clearPending(spark, stateDir, ForgetPending)
   }
 
   /** Crash recovery for [[forget]] — a staged pending dir is always
     * safe to re-apply (every step idempotent); a half-staged `.tmp` is
     * discarded. Runs at the start of every forget; exposed for
     * operators healing a ledger without deleting anything new. */
-  def recoverForget(spark: SparkSession, stateDir: String): Unit = {
-    val pend = forgetPendingPath(stateDir)
-    val fs = pend.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new Path(s"$stateDir/ledger_forget_pending.tmp"), true)
-    if (fs.exists(pend))
+  def recoverForget(spark: SparkSession, stateDir: String): Unit =
+    if (CorpusStateStream.recoverPending(spark, stateDir, ForgetPending))
       applyPendingForget(spark, stateDir, crashAfterStep = Int.MaxValue)
-  }
 
   /** Start the packing stream over a directory of arriving document
     * parquet files (the shared CorpusStateStream starter). */

@@ -64,8 +64,8 @@ class JobBudgetSpec extends SparkSpec {
   /** (budget, what the job count is made of at sf0.001).
     *
     * Under AQE every shuffle-stage materialization is its own Spark job
-    * (the `withThreadLocalCaptured`/CompletableFuture jobs in a trace —
-    * see tools/JobTrace), so these counts are STAGE budgets, several per
+    * (the `withThreadLocalCaptured`/CompletableFuture jobs a
+    * `SparkListener` sees), so these counts are STAGE budgets, several per
     * driver action; they are stable for fixed data + partitions + plan.
     * Observed at sf0.001 / local[4] / shuffle=4, bounded at ~+25%: a
     * doubled checkpoint or a lost exchange reuse blows the slack. */

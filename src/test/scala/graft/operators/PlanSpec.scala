@@ -1060,7 +1060,7 @@ class PlanSpec extends SparkSpec {
     // ReusedQueryStage in the FINAL adaptive plan), or a Spark upgrade
     // could silently run the band join twice. Reuse is only visible after
     // execution of THIS QueryExecution, so collect the frame itself
-    // (count() would build a separate execution — the ReuseProbe pitfall).
+    // (count() would build a separate execution and show no reuse).
     for (name <- Seq("q141_crosssource_neardup", "q162_split_leakage")) {
       val df = SparkEntry.queries(name)(spark, sf001)
       df.collect()

@@ -546,6 +546,33 @@ class CorpusStateStreamSpec extends SparkSpec {
       "recovered-then-folded vocab diverged from the batch recomputation")
   }
 
+  test("staged-pending protocol: a half-staged .tmp is discarded, a staged " +
+      "marker refuses by name, a dangling .old with no table is promoted") {
+    val stateDir = Files.createTempDirectory("graft-corpstate-pending").toString
+    val marker = "x_pending"
+    def dir(name: String) = new java.io.File(s"$stateDir/$name")
+    def refuse() = CorpusStateStream.requireNoPending(spark, stateDir, marker, "heal first")
+    // a crash mid-stage leaves only <marker>.tmp: never appliable
+    assert(dir(s"$marker.tmp").mkdirs())
+    refuse()
+    assert(!CorpusStateStream.recoverPending(spark, stateDir, marker))
+    assert(!dir(s"$marker.tmp").exists(), "recovery kept a half-staged .tmp")
+    refuse()
+    // a published stage refuses every guarded read and names the marker
+    CorpusStateStream.stagePending(spark, stateDir, marker)(tmp =>
+      assert(new java.io.File(tmp, "plan").mkdirs()))
+    assert(dir(s"$marker/plan").isDirectory && !dir(s"$marker.tmp").exists())
+    val e = intercept[IllegalArgumentException](refuse())
+    assert(e.getMessage.contains(s"$stateDir/$marker exists: heal first"), e.getMessage)
+    assert(CorpusStateStream.recoverPending(spark, stateDir, marker))
+    CorpusStateStream.clearPending(spark, stateDir, marker)
+    refuse()
+    // a swap that died between its two renames: .old IS the table
+    assert(dir("t.old/part").mkdirs())
+    CorpusStateStream.recoverPending(spark, stateDir, marker, Seq("t"))
+    assert(dir("t/part").isDirectory && !dir("t.old").exists(), "dangling .old not promoted")
+  }
+
   test("vocab crash window: deltas committed + ledger lost heals, never double-counts") {
     val root = Files.createTempDirectory("graft-corpstate-vocabcrash").toString
     val stateDir = s"$root/state"

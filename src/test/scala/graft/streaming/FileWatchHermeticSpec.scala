@@ -103,4 +103,51 @@ class FileWatchHermeticSpec extends SparkSpec {
     assert(seen.toArray.toSet == want)
     assert(seen.toArray.map(_.toString.split('/').last).toSet == names.toSet)
   }
+
+  /** A stream over `cfg`'s arrivals whose every batch throws `msg`. */
+  private def failing(cfg: FileWatch.Config, msg: String) =
+    FileWatch.fileArrivals(spark, cfg).writeStream
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .option("checkpointLocation", cfg.checkpointDir)
+      .foreachBatch { (_: org.apache.spark.sql.DataFrame, _: Long) =>
+        throw new RuntimeException(msg)
+      }.start()
+
+  test("supervisor restarts a failed stream and the retry recovers the data") {
+    val root = Files.createTempDirectory("graft-watch-restart")
+    land(root, "farm_restart.csv", FarmFixture.csv(FarmFixture.rows(20)))
+    val cfg = config(root)
+    val failFirst = new java.util.concurrent.atomic.AtomicBoolean(true)
+    val restarts = new java.util.concurrent.atomic.AtomicInteger(0)
+    // first attempt: a stream whose batch throws (simulated sink outage) →
+    // awaitTermination rethrows; second attempt: the real pipeline drains
+    // the SAME checkpoint and must still see the file (failed batches are
+    // not committed to the source log)
+    def attempt() =
+      if (failFirst.getAndSet(false)) failing(cfg, "simulated sink outage")
+      else FileWatch.start(spark, cfg, availableNow = true)
+    FileWatch.supervise(attempt _, maxRestarts = 2,
+      initialDelay = scala.concurrent.duration.DurationInt(50).millis,
+      onRestart = (_, _) => { restarts.incrementAndGet(); () })
+    assert(restarts.get() == 1, s"expected exactly one restart, got ${restarts.get()}")
+    assert(spark.read.parquet(root.resolve("sink/public_farm_restart_transformed").toString)
+      .count() == 20)
+    assert(spark.streams.active.isEmpty)
+  }
+
+  test("supervisor gives up after maxRestarts and propagates the failure") {
+    val root = Files.createTempDirectory("graft-watch-giveup")
+    land(root, "farm_giveup.csv", FarmFixture.csv(FarmFixture.rows(5)))
+    val cfg = config(root)
+    val attempts = new java.util.concurrent.atomic.AtomicInteger(0)
+    def alwaysFail() = { attempts.incrementAndGet(); failing(cfg, "permanent failure") }
+    val e = intercept[Exception] {
+      FileWatch.supervise(alwaysFail _, maxRestarts = 2,
+        initialDelay = scala.concurrent.duration.DurationInt(20).millis)
+    }
+    assert(attempts.get() == 3, s"expected 3 attempts (1 + 2 restarts), got ${attempts.get()}")
+    assert(e.getMessage.contains("permanent failure") ||
+      e.getCause != null && e.getCause.getMessage.contains("permanent failure"))
+    assert(spark.streams.active.isEmpty)
+  }
 }
