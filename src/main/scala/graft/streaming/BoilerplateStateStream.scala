@@ -16,9 +16,10 @@ import org.apache.spark.sql.types._
   * not have); the key domain is the corpus's 3-gram vocabulary, which the
   * df >= 2 read-side cut keeps reviewable.
   *
-  * State layout under `stateDir` (the vocab delta-ledger protocol —
-  * df counts are ADDITIVE, not set-like, so anti-join idempotence does
-  * not apply and replay safety comes from the ledger):
+  * State layout under `stateDir` (the additive-delta ledger protocol,
+  * [[CorpusStateStream.appendLedgerDeltas]] — df counts are ADDITIVE,
+  * not set-like, so anti-join idempotence does not apply and replay
+  * safety comes from the ledger):
   *   - `bp_phrases/`  — (batch_id, phrase, delta) per-batch df deltas;
   *   - `bp_counters/` — (batch_id, n_docs) per-batch corpus-size deltas
   *     (the df_share denominator);
@@ -27,7 +28,7 @@ import org.apache.spark.sql.types._
   *     batch, the ledger probe misses, each delta-log probe finds its
   *     rows already present and skips, and only the ledger heals —
   *     counts can never double.
-  * [[foldDeltas]] is [[CorpusStateStream.foldDeltaState]] on both tables
+  * [[foldDeltas]] is [[CorpusStateStream.foldLedger]] on both tables
   * (LSM merge to one snapshot row per phrase + one global counter row);
   * [[CorpusStateStream.compactState]] handles files.
   *
@@ -48,37 +49,23 @@ object BoilerplateStateStream {
 
   val docSchema: StructType = CorpusStateStream.docSchema
 
-  private val phraseSchema = StructType(Seq(
-    StructField("batch_id", LongType),
-    StructField("phrase", StringType),
-    StructField("delta", LongType)))
+  private val Phrases = CorpusStateStream.DeltaTable("bp_phrases",
+    Seq(StructField("phrase", StringType)))
 
-  private val countersSchema = StructType(Seq(
-    StructField("batch_id", LongType),
-    StructField("n_docs", LongType)))
+  private val Counters =
+    CorpusStateStream.DeltaTable("bp_counters", Nil, Seq("n_docs"))
 
-  private val ledgerSchema = StructType(Seq(StructField("batch_id", LongType)))
-
-  /** Layout version: v2 = the r14 within-trigger doc_id dedup (v1,
-    * never stamped, counted intra-batch duplicates — see the
-    * state-format compatibility note in [[appendDeltas]]). Stamped at
-    * first write, checked on every write and read, so a pre-r14
-    * checkpoint fails LOUDLY instead of replaying into drift. */
-  private val FormatVersion = 2
-
-  private def stateDf(spark: SparkSession, dir: String, s: StructType) =
-    CorpusStateStream.stateDf(spark, dir, s)
-
-  private def stampFormat(spark: SparkSession, stateDir: String): Unit =
-    CorpusStateStream.stampFormat(spark, stateDir, "bp", FormatVersion,
-      "bp_ledger")
-
-  private def requireFormat(spark: SparkSession, stateDir: String): Unit =
-    CorpusStateStream.requireFormat(spark, stateDir, "bp", FormatVersion,
-      "bp_ledger")
+  /** Layout v2 = the r14 within-trigger doc_id dedup (v1, never
+    * stamped, counted intra-batch duplicates — see the state-format
+    * compatibility note in [[appendDeltas]]). Stamped at first write,
+    * checked on every write and read, so a pre-r14 checkpoint fails
+    * LOUDLY instead of replaying into drift. Phrases append FIRST, so
+    * their probe answers "any deltas committed" for the intent guard. */
+  private val Ledger = CorpusStateStream.LedgerFamily("bp", 2, "bp_ledger",
+    "bp_ledger", Seq(Phrases, Counters))
 
   /** One micro-batch: append this batch's per-phrase df deltas and its
-    * doc-count delta exactly once (the vocab-ledger crash protocol).
+    * doc-count delta exactly once (the ledger crash protocol).
     * Calling it twice with the same batch is a no-op the second time. */
   def update(stateDir: String)(batch: DataFrame, batchId: Long): Unit =
     appendDeltas(stateDir, batch, batchId, sign = 1L)
@@ -107,57 +94,31 @@ object BoilerplateStateStream {
 
   private def appendDeltas(stateDir: String, batch: DataFrame,
       batchId: Long, sign: Long): Unit = {
-    require(batchId >= 0, "batchId must be non-negative (negative ids " +
-      "are reserved for folded snapshot rows)")
-    val spark = batch.sparkSession
-    stampFormat(spark, stateDir)
-    val ledgerDir = s"$stateDir/bp_ledger"
-    val seen = stateDf(spark, ledgerDir, ledgerSchema)
-      .filter(col("batch_id") === batchId).limit(1).count() > 0
-    if (seen) {
-      CorpusStateStream.requireLedgerSign(spark, stateDir, "bp_ledger",
-        batchId, sign)
-    } else {
-      // within-trigger dedup on doc_id (the CorpusStateStream sig-path
-      // hardening): an at-least-once source delivering a doc twice in
-      // ONE trigger must not double its df/n_docs contribution — only a
-      // genuine re-upload in a LATER batch counts again (identity note
-      // above, matching the batch twin over concatenated deliveries).
-      // State-format compatibility: this dedup landed in r14 — a state
-      // whose history includes a pre-r14 batch that DID carry duplicate
-      // doc_id rows in one file was counted under the old convention,
-      // and replaying that same delivery now yields different deltas;
-      // mixing such a persisted deployment state with post-change
-      // batches drifts from both conventions. The parity/range builders
-      // never produce intra-batch dupes, so every gated state is
-      // unaffected; a real deployment migrating across r14 rebuilds by
-      // replay (the layouts are otherwise unchanged).
-      val docs = batch.dropDuplicates("doc_id").select(col("text"))
-        .localCheckpoint()
-      // phrases append FIRST, so their probe answers "any deltas
-      // committed" for the intent guard (a crash leaves a prefix)
-      val inPhrases = stateDf(spark, s"$stateDir/bp_phrases", phraseSchema)
-        .filter(col("batch_id") === batchId).limit(1).count() > 0
-      CorpusStateStream.intentSignGuard(spark, stateDir, "bp_ledger",
-        batchId, sign, inPhrases)
-      if (!inPhrases) {
-        // ShingleText dedupes per doc (the ShingleHash64 convention), so
-        // the count IS a document frequency within the batch
-        docs.select(
-            explode(graft.expressions.ShingleText(col("text"), 3)).as("phrase"))
-          .groupBy(col("phrase")).agg((count(lit(1)) * sign).as("delta"))
-          .select(lit(batchId).as("batch_id"), col("phrase"), col("delta"))
-          .write.mode("append").parquet(s"$stateDir/bp_phrases")
-      }
-      val inCounters = stateDf(spark, s"$stateDir/bp_counters", countersSchema)
-        .filter(col("batch_id") === batchId).limit(1).count() > 0
-      if (!inCounters) {
-        docs.agg((count(lit(1)) * sign).as("n_docs"))
-          .select(lit(batchId).as("batch_id"), col("n_docs"))
-          .write.mode("append").parquet(s"$stateDir/bp_counters")
-      }
-      spark.range(1).select(lit(batchId).as("batch_id"))
-        .write.mode("append").parquet(ledgerDir)
+    // within-trigger dedup on doc_id (the CorpusStateStream sig-path
+    // hardening): an at-least-once source delivering a doc twice in
+    // ONE trigger must not double its df/n_docs contribution — only a
+    // genuine re-upload in a LATER batch counts again (identity note
+    // above, matching the batch twin over concatenated deliveries).
+    // State-format compatibility: this dedup landed in r14 — a state
+    // whose history includes a pre-r14 batch that DID carry duplicate
+    // doc_id rows in one file was counted under the old convention,
+    // and replaying that same delivery now yields different deltas;
+    // mixing such a persisted deployment state with post-change
+    // batches drifts from both conventions. The parity/range builders
+    // never produce intra-batch dupes, so every gated state is
+    // unaffected; a real deployment migrating across r14 rebuilds by
+    // replay (the layouts are otherwise unchanged).
+    lazy val docs = batch.dropDuplicates("doc_id").select(col("text"))
+      .localCheckpoint()
+    CorpusStateStream.appendLedgerDeltas(batch.sparkSession, stateDir,
+        Ledger, batchId, sign) {
+      // ShingleText dedupes per doc (the ShingleHash64 convention), so
+      // the count IS a document frequency within the batch
+      case Phrases => docs
+        .select(explode(graft.expressions.ShingleText(col("text"), 3))
+          .as("phrase"))
+        .groupBy(col("phrase")).agg(count(lit(1)).as("delta"))
+      case Counters => docs.agg(count(lit(1)).as("n_docs"))
     }
   }
 
@@ -169,14 +130,14 @@ object BoilerplateStateStream {
   /** Net corpus size (the df_share denominator) — counts minus any
     * [[forget]] batches; the number q206's certificate audits. */
   def docCountFromState(spark: SparkSession, stateDir: String): DataFrame = {
-    requireFormat(spark, stateDir)
-    stateDf(spark, s"$stateDir/bp_counters", countersSchema)
+    Ledger.requireFormat(spark, stateDir)
+    Counters.read(spark, stateDir)
       .agg(coalesce(sum(col("n_docs")), lit(0L)).as("n_docs"))
   }
 
   def phraseTableFromState(spark: SparkSession, stateDir: String): DataFrame = {
     val nd = docCountFromState(spark, stateDir)
-    stateDf(spark, s"$stateDir/bp_phrases", phraseSchema)
+    Phrases.read(spark, stateDir)
       .groupBy(col("phrase")).agg(sum(col("delta")).as("df"))
       .filter(col("df") >= 2)
       .crossJoin(broadcast(nd))
@@ -185,15 +146,14 @@ object BoilerplateStateStream {
       .orderBy(col("df").desc, col("phrase"))
   }
 
-  /** Fold both committed delta logs into snapshots (they share
-    * `bp_ledger`). Returns ((phrases before, after),
+  /** Fold both committed delta logs into snapshots, then compact their
+    * shared `bp_ledger` once. Returns ((phrases before, after),
     * (counters before, after)). */
   def foldDeltas(spark: SparkSession, stateDir: String)
-      : ((Long, Long), (Long, Long)) =
-    (CorpusStateStream.foldDeltaState(spark, stateDir, "bp_phrases",
-        "bp_ledger", phraseSchema, Seq("phrase"), Seq("delta")),
-      CorpusStateStream.foldDeltaState(spark, stateDir, "bp_counters",
-        "bp_ledger", countersSchema, Seq.empty, Seq("n_docs")))
+      : ((Long, Long), (Long, Long)) = {
+    val folded = CorpusStateStream.foldLedger(spark, stateDir, Ledger)
+    (folded(0), folded(1))
+  }
 
   /** Start the maintenance stream; `foldEvery = Some(n)` folds from the
     * stream's own quiet window after every n-th committed batch. */

@@ -13,11 +13,11 @@ import org.apache.spark.sql.types._
   * (source, dim) state is a pair of exact integers (Σq, n) that is
   * batch-ADDITIVE — sums over the union of all deliveries equal the sum
   * of per-batch sums, with no float reassociation anywhere. The state
-  * layout is therefore the vocab-delta pattern
-  * ([[CorpusStateStream.updateVocab]]): (batch_id, source, dim, sq, n)
-  * delta rows plus a one-row-per-batch ledger; replay probes the delta
-  * log before appending, so counts can never double; compaction folds
-  * delta files without changing any aggregate.
+  * layout is therefore an additive ledger family
+  * ([[CorpusStateStream.appendLedgerDeltas]]): (batch_id, source, dim,
+  * sq, n) delta rows plus a one-row-per-batch ledger; replay probes the
+  * delta log before appending, so counts can never double; compaction
+  * folds delta files without changing any aggregate.
   *
   * Two reads, both pure functions of the state composed from q108's own
   * factored stages (`Similarity.centroidFromSums` /
@@ -52,20 +52,15 @@ object CentroidStateStream {
     StructField("embedding", ArrayType(FloatType)),
     StructField("source", StringType)))
 
-  private val deltaSchema = StructType(Seq(
-    StructField("batch_id", LongType),
-    StructField("source", StringType),
-    StructField("dim", IntegerType),
-    StructField("sq", LongType),
-    StructField("n", LongType)))
+  private val Cent = CorpusStateStream.DeltaTable("cent",
+    Seq(StructField("source", StringType), StructField("dim", IntegerType)),
+    Seq("sq", "n"))
 
-  private val ledgerSchema = StructType(Seq(StructField("batch_id", LongType)))
-
-  private def stateDf(spark: SparkSession, dir: String, s: StructType) =
-    CorpusStateStream.stateDf(spark, dir, s)
+  private val Ledger = CorpusStateStream.LedgerFamily("centroid", 1, "cent",
+    "cent_ledger", Seq(Cent))
 
   /** One micro-batch: append this batch's (source, dim) micro-unit sum
-    * deltas exactly once (the vocab-ledger protocol). */
+    * deltas exactly once (the ledger protocol). */
   def update(stateDir: String)(batch: DataFrame, batchId: Long): Unit =
     appendCentDeltas(stateDir, batch, batchId, sign = 1L)
 
@@ -89,33 +84,12 @@ object CentroidStateStream {
     appendCentDeltas(stateDir, vecs, batchId, sign = -1L)
 
   private def appendCentDeltas(stateDir: String, batch: DataFrame,
-      batchId: Long, sign: Long): Unit = {
-    require(batchId >= 0, "batchId must be non-negative (negative ids " +
-      "are reserved for folded snapshot rows)")
-    val spark = batch.sparkSession
-    CorpusStateStream.stampFormat(spark, stateDir, "centroid", 1, "cent")
-    val ledgerDir = s"$stateDir/cent_ledger"
-    val seen = stateDf(spark, ledgerDir, ledgerSchema)
-      .filter(col("batch_id") === batchId).limit(1).count() > 0
-    if (seen) {
-      CorpusStateStream.requireLedgerSign(spark, stateDir, "cent_ledger",
-        batchId, sign)
-    } else {
-      val inLog = stateDf(spark, s"$stateDir/cent", deltaSchema)
-        .filter(col("batch_id") === batchId).limit(1).count() > 0
-      CorpusStateStream.intentSignGuard(spark, stateDir, "cent_ledger",
-        batchId, sign, inLog)
-      if (!inLog) {
-        graft.operators.Similarity.centroidSums(
-            batch.select(col("source"), col("embedding")))
-          .select(lit(batchId).as("batch_id"), col("source"), col("dim"),
-            (col("sq") * sign).as("sq"), (col("n") * sign).as("n"))
-          .write.mode("append").parquet(s"$stateDir/cent")
-      }
-      spark.range(1).select(lit(batchId).as("batch_id"))
-        .write.mode("append").parquet(ledgerDir)
+      batchId: Long, sign: Long): Unit =
+    CorpusStateStream.appendLedgerDeltas(batch.sparkSession, stateDir,
+        Ledger, batchId, sign) { case _ =>
+      graft.operators.Similarity.centroidSums(
+        batch.select(col("source"), col("embedding")))
     }
-  }
 
   /** The aggregated (source, dim, sq, n) view over the delta log. The
     * n > 0 cut is load-bearing only after a [[forget]] pass: a
@@ -125,8 +99,8 @@ object CentroidStateStream {
     * divide by zero in [[driftMatrixFromState]]. Under pure
     * accumulation the filter never fires. */
   def centroidSumsState(spark: SparkSession, stateDir: String): DataFrame = {
-    CorpusStateStream.requireFormat(spark, stateDir, "centroid", 1, "cent")
-    stateDf(spark, s"$stateDir/cent", deltaSchema)
+    Ledger.requireFormat(spark, stateDir)
+    Cent.read(spark, stateDir)
       .groupBy(col("source"), col("dim"))
       .agg(sum(col("sq")).as("sq"), sum(col("n")).as("n"))
       .filter(col("n") > 0)
@@ -170,13 +144,12 @@ object CentroidStateStream {
   }
 
   /** Fold the committed centroid-sum deltas into one snapshot row per
-    * (source, dim) — [[CorpusStateStream.foldDeltaState]] on the delta
+    * (source, dim) — [[CorpusStateStream.foldLedger]] on the delta
     * log, bounding state to |sources|·64 rows (plus crash-window
     * deltas) no matter how many crawls have folded in. Sums are exact
     * integers (the quantize-then-sum design), so no read changes. */
   def foldDeltas(spark: SparkSession, stateDir: String): (Long, Long) =
-    CorpusStateStream.foldDeltaState(spark, stateDir, "cent",
-      "cent_ledger", deltaSchema, Seq("source", "dim"), Seq("sq", "n"))
+    CorpusStateStream.foldLedger(spark, stateDir, Ledger).head
 
   /** Start the maintenance stream over arriving embedding parquet files
     * (the CorpusStateStream wiring with the vector schema).

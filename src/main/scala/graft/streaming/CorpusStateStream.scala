@@ -412,10 +412,8 @@ object CorpusStateStream {
     * snapshot row per key — the LSM-style merge the delta layout exists
     * for. [[compactState]] bounds the FILE count but the row count still
     * grows as |keys|·|batches|; this bounds the rows to |keys| plus any
-    * crash-window deltas. Covers every delta table in the tree: `vocab`
-    * ([[foldVocab]]), the centroid ledger
-    * ([[CentroidStateStream.foldDeltas]]) and the datasheet counters /
-    * template prefixes ([[DatasheetStateStream.foldDeltas]]).
+    * crash-window deltas. Every ledger family's tables fold through it
+    * ([[foldLedger]]).
     *
     * Correctness hinges on WHICH rows fold:
     *   - rows whose batch_id is in the ledger (and prior snapshot rows,
@@ -430,10 +428,10 @@ object CorpusStateStream {
     * Sums are exact integers throughout the tree, so fold order cannot
     * perturb any aggregate. Idempotent; same stopped-stream contract as
     * [[compactState]]. Returns (rows before, rows after). */
-  def foldDeltaState(spark: SparkSession, stateDir: String, table: String,
-      ledgerTable: String, schema: StructType, keyCols: Seq[String],
-      sumCols: Seq[String], targetFiles: Int = 1): (Long, Long) = {
-    val dir = s"$stateDir/$table"
+  private def foldDeltaState(spark: SparkSession, stateDir: String,
+      t: DeltaTable, ledgerTable: String): (Long, Long) = {
+    val dir = s"$stateDir/${t.name}"
+    val (schema, sumCols) = (t.schema, t.sums)
     recoverState(spark, dir)
     val sc = spark.sparkContext
     val blocksBefore = sc.getPersistentRDDs.keySet
@@ -449,7 +447,7 @@ object CorpusStateStream {
     val pending = deltas.filter(col("batch_id") =!= SnapshotBatchId)
       .join(broadcast(ledger), Seq("batch_id"), "left_anti")
     val snapshot = committed
-      .groupBy(keyCols.map(col): _*)
+      .groupBy(t.keys.map(k => col(k.name)): _*)
       .agg(sum(col(sumCols.head)).as(sumCols.head),
         sumCols.tail.map(c => sum(col(c)).as(c)): _*)
       // a key-less (global) fold over an empty committed set yields one
@@ -465,15 +463,7 @@ object CorpusStateStream {
     val folded = snapshot
       .unionByName(pending.select(schema.fieldNames.toSeq.map(col): _*))
     swapState(spark, dir)(tmp =>
-      folded.repartition(targetFiles).write.mode("overwrite").parquet(tmp))
-    // the ledger keeps one ROW per batch forever (replay probes need
-    // them), but without file maintenance it also keeps one FILE per
-    // batch and every trigger's probe pays the listing — compact it in
-    // the same quiet window (file-level only; rows untouched). Guarded:
-    // a fold over pure crash-window deltas may predate the ledger dir
-    val lp = new org.apache.hadoop.fs.Path(s"$stateDir/$ledgerTable")
-    if (lp.getFileSystem(sc.hadoopConfiguration).exists(lp))
-      compactState(spark, stateDir, ledgerTable)
+      folded.repartition(1).write.mode("overwrite").parquet(tmp))
     // Dataset.unpersist does NOT free localCheckpoint blocks (they are
     // RDD-level persists, not CacheManager entries — the Bench.scala
     // lesson); release them at the RDD level, sparing substrate frames
@@ -484,28 +474,43 @@ object CorpusStateStream {
     (before, stateDf(spark, dir, schema).count())
   }
 
-  /** [[foldDeltaState]] applied to the reference-vocabulary delta log:
+  /** Fold every delta table of `fam` ([[foldDeltaState]]), then compact
+    * its ledger once. The ledger keeps one ROW per batch forever (replay
+    * probes need them), but without file maintenance it also keeps one
+    * FILE per batch and every trigger's probe pays the listing — so the
+    * fold's quiet window compacts it too (file-level only; rows
+    * untouched). Guarded: a fold over pure crash-window deltas may
+    * predate the ledger dir. Returns (rows before, rows after) per
+    * table, in `fam.tables` order. */
+  private[streaming] def foldLedger(spark: SparkSession, stateDir: String,
+      fam: LedgerFamily): Seq[(Long, Long)] = {
+    val rows = fam.tables.map(foldDeltaState(spark, stateDir, _, fam.ledger))
+    val lp = new org.apache.hadoop.fs.Path(s"$stateDir/${fam.ledger}")
+    if (lp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(lp))
+      compactState(spark, stateDir, fam.ledger)
+    rows
+  }
+
+  /** [[foldLedger]] applied to the reference-vocabulary delta log:
     * |terms|·|batches| count deltas fold to |terms| snapshot rows. */
   def foldVocab(spark: SparkSession, stateDir: String): (Long, Long) =
-    foldDeltaState(spark, stateDir, "vocab", "vocab_ledger", vocabSchema,
-      Seq("w"), Seq("delta"))
+    foldLedger(spark, stateDir, VocabLedger).head
 
   // ——— maintained BIGRAM-LM state (q231 one Markov order up) ———
   //
   // The vocab delta layout with a two-hash key: (batch_id, w1, w2,
-  // delta) adjacent-pair occurrence deltas under the same ledger +
-  // intent-mark + fold protocol (appendVocabDeltas' crash argument
-  // transfers verbatim). The left-slot counts c1 DERIVE from the
-  // bigram table (sum over w2), and the smoothing denominator's V is
-  // the co-maintained vocabulary's size — so a served bigram score
-  // needs exactly two maintained tables and no corpus rescan, and a
-  // forget nets both like a retrain (q233's gate).
+  // delta) adjacent-pair occurrence deltas under the same ledger
+  // protocol ([[appendLedgerDeltas]]) and fold. The left-slot counts c1
+  // DERIVE from the bigram table (sum over w2), and the smoothing
+  // denominator's V is the co-maintained vocabulary's size — so a
+  // served bigram score needs exactly two maintained tables and no
+  // corpus rescan, and a forget nets both like a retrain (q233's gate).
 
-  private val bigramsSchema = StructType(Seq(
-    StructField("batch_id", LongType),
-    StructField("w1", LongType),
-    StructField("w2", LongType),
-    StructField("delta", LongType)))
+  private val Bigrams = DeltaTable("bigrams",
+    Seq(StructField("w1", LongType), StructField("w2", LongType)))
+
+  private val BigramLedger =
+    LedgerFamily("bigrams", 1, "bigrams", "bigrams_ledger", Seq(Bigrams))
 
   /** Net adjacent-pair counts. The cnt > 0 cut is [[vocabState]]'s:
     * load-bearing only after [[forgetBigrams]] — a pair whose every
@@ -513,8 +518,8 @@ object CorpusStateStream {
     * probability falls back to the unseen-pair value, exactly as a
     * retrain's would). */
   def bigramLmState(spark: SparkSession, stateDir: String): DataFrame = {
-    requireFormat(spark, stateDir, "bigrams", 1, "bigrams")
-    stateDf(spark, s"$stateDir/bigrams", bigramsSchema)
+    BigramLedger.requireFormat(spark, stateDir)
+    Bigrams.read(spark, stateDir)
       .groupBy(col("w1"), col("w2")).agg(sum(col("delta")).as("cnt"))
       .filter(col("cnt") > 0)
   }
@@ -522,52 +527,30 @@ object CorpusStateStream {
   /** One bigram micro-batch: append this batch's adjacent-pair count
     * deltas exactly once ([[updateVocab]]'s ledger protocol). */
   def updateBigrams(stateDir: String)(batch: DataFrame, batchId: Long): Unit =
-    appendBigramDeltas(stateDir, batch, batchId, sign = 1L)
+    appendLedgerDeltas(batch.sparkSession, stateDir, BigramLedger, batchId,
+      sign = 1L) { case _ => bigramCounts(batch) }
 
   /** Right-to-be-forgotten against the maintained bigram LM — the
     * NEGATIVE-delta twin of [[updateBigrams]] ([[forgetVocab]]'s
     * contract verbatim, occurrence-count semantics included: pass each
     * forgotten document exactly as often as it was counted). */
   def forgetBigrams(stateDir: String)(docs: DataFrame, batchId: Long): Unit =
-    appendBigramDeltas(stateDir, docs, batchId, sign = -1L)
+    appendLedgerDeltas(docs.sparkSession, stateDir, BigramLedger, batchId,
+      sign = -1L) { case _ => bigramCounts(docs) }
 
-  private def appendBigramDeltas(stateDir: String, batch: DataFrame,
-      batchId: Long, sign: Long): Unit = {
-    require(batchId >= 0, s"batchId $batchId: negative ids are reserved " +
-      s"for folded snapshot rows (SnapshotBatchId = $SnapshotBatchId)")
-    val spark = batch.sparkSession
-    stampFormat(spark, stateDir, "bigrams", 1, "bigrams")
-    val ledgerDir = s"$stateDir/bigrams_ledger"
-    val seen = stateDf(spark, ledgerDir, ledgerSchema)
-      .filter(col("batch_id") === batchId).limit(1).count() > 0
-    if (seen) {
-      requireLedgerSign(spark, stateDir, "bigrams_ledger", batchId, sign)
-    } else {
-      val inLog = stateDf(spark, s"$stateDir/bigrams", bigramsSchema)
-        .filter(col("batch_id") === batchId).limit(1).count() > 0
-      intentSignGuard(spark, stateDir, "bigrams_ledger", batchId, sign, inLog)
-      if (!inLog) {
-        batch
-          .select(graft.expressions.Md5TokenHash64.words(lower(col("text")))
-            .as("hs"))
-          .select(explode(
-              graft.operators.TextAnalysis.adjacentPairs(col("hs"))).as("p"))
-          .select(col("p.w1").as("w1"), col("p.w2").as("w2"))
-          .groupBy(col("w1"), col("w2"))
-          .agg((count(lit(1)) * sign).as("delta"))
-          .select(lit(batchId).as("batch_id"), col("w1"), col("w2"),
-            col("delta"))
-          .write.mode("append").parquet(s"$stateDir/bigrams")
-      }
-      spark.range(1).select(lit(batchId).as("batch_id"))
-        .write.mode("append").parquet(ledgerDir)
-    }
-  }
+  private def bigramCounts(batch: DataFrame): DataFrame =
+    batch
+      .select(graft.expressions.Md5TokenHash64.words(lower(col("text")))
+        .as("hs"))
+      .select(explode(
+          graft.operators.TextAnalysis.adjacentPairs(col("hs"))).as("p"))
+      .select(col("p.w1").as("w1"), col("p.w2").as("w2"))
+      .groupBy(col("w1"), col("w2"))
+      .agg(count(lit(1)).as("delta"))
 
   /** LSM fold for the bigram delta log ([[foldVocab]]'s contract). */
   def foldBigrams(spark: SparkSession, stateDir: String): (Long, Long) =
-    foldDeltaState(spark, stateDir, "bigrams", "bigrams_ledger",
-      bigramsSchema, Seq("w1", "w2"), Seq("delta"))
+    foldLedger(spark, stateDir, BigramLedger).head
 
   /** q231's bigram-LM NLL served FROM the maintained state — the
     * production scoring shape ([[lmScoreAgainstState]] one Markov order
@@ -660,15 +643,23 @@ object CorpusStateStream {
   // bounds the ROW count — the LSM merge that sums ledger-committed
   // deltas into one snapshot row per term (foldDeltaState's contract).
 
-  private val vocabSchema = StructType(Seq(
-    StructField("batch_id", LongType),
-    StructField("w", LongType),
-    StructField("delta", LongType)))
+  private val Vocab = DeltaTable("vocab", Seq(StructField("w", LongType)))
+
+  private val VocabLedger =
+    LedgerFamily("vocab", 1, "vocab", "vocab_ledger", Seq(Vocab))
 
   private val ledgerSchema = StructType(Seq(StructField("batch_id", LongType)))
 
-  // ——— forget-marks: the sign-collision guard for additive forgets ———
+  // ——— the additive-delta ledger protocol ———
   //
+  // Every additive family (vocab, bigrams, shingle-df, boilerplate,
+  // centroid, datasheet) describes itself once as a [[LedgerFamily]]
+  // and appends through [[appendLedgerDeltas]]: deltas append BEFORE
+  // the ledger row, so a crash between them replays the batch, the
+  // ledger probe misses, each delta table's own probe finds its rows
+  // and skips, and only the ledger row heals — counts never double.
+  //
+  // Forget-marks, the sign-collision guard for additive forgets.
   // An additive family's ledger records THAT a batchId committed, not
   // with which SIGN. A forget() accidentally reusing an arrival's
   // batchId would therefore be silently treated as a replay — the
@@ -691,18 +682,99 @@ object CorpusStateStream {
   // loud-failure direction, never a silent wrong count; the error
   // names the manual heal.
 
-  private[streaming] def forgetMarksDir(stateDir: String, ledgerTable: String) =
+  /** One delta table of a ledger family: rows (batch_id, keys…, sums…),
+    * every sum a count that a forget negates. */
+  private[streaming] case class DeltaTable(name: String,
+      keys: Seq[StructField], sums: Seq[String] = Seq("delta")) {
+    val schema: StructType = StructType(StructField("batch_id", LongType) +:
+      (keys ++ sums.map(StructField(_, LongType))))
+    def read(spark: SparkSession, stateDir: String): DataFrame =
+      stateDf(spark, s"$stateDir/$name", schema)
+  }
+
+  /** An additive family: its layout marker (format, version, and the
+    * table whose presence dates a populated dir), its ledger table and
+    * its delta tables in write order. */
+  private[streaming] case class LedgerFamily(format: String, version: Int,
+      populatedProbe: String, ledger: String, tables: Seq[DeltaTable]) {
+    def stampFormat(spark: SparkSession, stateDir: String): Unit =
+      CorpusStateStream.stampFormat(spark, stateDir, format, version,
+        populatedProbe)
+    def requireFormat(spark: SparkSession, stateDir: String): Unit =
+      CorpusStateStream.requireFormat(spark, stateDir, format, version,
+        populatedProbe)
+  }
+
+  private def holdsBatch(spark: SparkSession, dir: String, schema: StructType,
+      batchId: Long): Boolean =
+    stateDf(spark, dir, schema)
+      .filter(col("batch_id") === batchId).limit(1).count() > 0
+
+  /** Is `batchId` committed in `fam`'s ledger? */
+  private[streaming] def ledgerCommitted(spark: SparkSession, stateDir: String,
+      fam: LedgerFamily, batchId: Long): Boolean =
+    holdsBatch(spark, s"$stateDir/${fam.ledger}", ledgerSchema, batchId)
+
+  /** Append one batch's deltas to every table of `fam` exactly once, at
+    * `sign` (+1 arrival, −1 forget). `project(t)` is table t's unsigned
+    * delta projection (its key and sum columns); the helper stamps the
+    * batch id and the sign, so a forget subtracts exactly what the
+    * arrival added. Steps: (1) refuse a negative id, (2) stamp the
+    * format marker, (3) probe the ledger — a committed id only checks
+    * its sign and stops, (4) probe the first-written table and run the
+    * intent-mark sign guard, (5) append each table's deltas unless its
+    * own probe finds the id, (6) append the ledger row. */
+  private[streaming] def appendLedgerDeltas(spark: SparkSession,
+      stateDir: String, fam: LedgerFamily, batchId: Long, sign: Long)(
+      project: PartialFunction[DeltaTable, DataFrame]): Unit =
+    ledgerGuard(spark, stateDir, fam, batchId, sign).foreach { inFirst =>
+      fam.tables.zipWithIndex.foreach { case (t, i) =>
+        val dir = s"$stateDir/${t.name}"
+        val present =
+          if (i == 0) inFirst else holdsBatch(spark, dir, t.schema, batchId)
+        if (!present)
+          project(t).select(lit(batchId).as("batch_id") +:
+              (t.keys.map(k => col(k.name)) ++
+                t.sums.map(s => (col(s) * sign).as(s))): _*)
+            .write.mode("append").parquet(dir)
+      }
+      spark.range(1).select(lit(batchId).as("batch_id"))
+        .write.mode("append").parquet(s"$stateDir/${fam.ledger}")
+    }
+
+  /** Steps 1–4 of [[appendLedgerDeltas]], also run by a forget that must
+    * refuse before it stages anything: None for a committed id (a
+    * genuine replay, nothing to append), else whether the first-written
+    * table already holds the id (a crash leaves a prefix of the append
+    * sequence, so that one probe answers "any deltas committed"). */
+  private[streaming] def ledgerGuard(spark: SparkSession, stateDir: String,
+      fam: LedgerFamily, batchId: Long, sign: Long): Option[Boolean] = {
+    require(batchId >= 0, s"batchId $batchId: negative ids are reserved " +
+      s"for folded snapshot rows (SnapshotBatchId = $SnapshotBatchId)")
+    fam.stampFormat(spark, stateDir)
+    if (ledgerCommitted(spark, stateDir, fam, batchId)) {
+      requireLedgerSign(spark, stateDir, fam.ledger, batchId, sign)
+      None
+    } else {
+      val first = fam.tables.head
+      val inFirst = holdsBatch(spark, s"$stateDir/${first.name}",
+        first.schema, batchId)
+      intentSignGuard(spark, stateDir, fam.ledger, batchId, sign, inFirst)
+      Some(inFirst)
+    }
+  }
+
+  private def forgetMarksDir(stateDir: String, ledgerTable: String) =
     s"$stateDir/${ledgerTable}_fmarks"
 
   /** Called when `batchId` is already ledger-committed: require the
     * caller's sign to match the recorded one (mark present == the
     * batch was a forget); matching means a genuine replay — skip. */
-  private[streaming] def requireLedgerSign(spark: SparkSession,
+  private def requireLedgerSign(spark: SparkSession,
       stateDir: String, ledgerTable: String, batchId: Long,
       sign: Long): Unit = {
-    val marked = stateDf(spark, forgetMarksDir(stateDir, ledgerTable),
-        ledgerSchema)
-      .filter(col("batch_id") === batchId).limit(1).count() > 0
+    val marked = holdsBatch(spark, forgetMarksDir(stateDir, ledgerTable),
+      ledgerSchema, batchId)
     require(marked == (sign < 0),
       s"batch $batchId under $stateDir/$ledgerTable was committed by " +
       s"${if (marked) "a FORGET" else "an ARRIVAL"} batch but is being " +
@@ -714,7 +786,7 @@ object CorpusStateStream {
 
   /** Record a forget batchId — appended as a WRITE-INTENT mark, BEFORE
     * the negative deltas (via [[intentSignGuard]]). */
-  private[streaming] def markForgetBatch(spark: SparkSession,
+  private def markForgetBatch(spark: SparkSession,
       stateDir: String, ledgerTable: String, batchId: Long): Unit =
     spark.range(1).select(lit(batchId).as("batch_id"))
       .write.mode("append").parquet(forgetMarksDir(stateDir, ledgerTable))
@@ -723,9 +795,8 @@ object CorpusStateStream {
     * delta append: verifies the intent-marks state agrees with the
     * caller's sign even when a prior attempt crashed mid-protocol, and
     * writes the intent mark for a fresh forget ahead of its deltas.
-    * `deltasInLog` = some delta table already holds the id (for
-    * multi-table families, probe the FIRST-written table — a crash can
-    * only leave a prefix of the append sequence). Crash matrix:
+    * `deltasInLog` = the family's first-written table already holds the
+    * id ([[ledgerGuard]]). Crash matrix:
     * mark-only + forget replay → heals (appends deltas); mark-only +
     * ARRIVAL under that id → fails fast (the id is claimed);
     * arrival-deltas + forget under that id → fails fast (no mark = the
@@ -733,12 +804,11 @@ object CorpusStateStream {
     * negative append and committed a forget ledger row over positive
     * deltas); deltas-with-mark + forget replay → heals (skips the
     * append, commits the ledger). */
-  private[streaming] def intentSignGuard(spark: SparkSession,
+  private def intentSignGuard(spark: SparkSession,
       stateDir: String, ledgerTable: String, batchId: Long, sign: Long,
       deltasInLog: Boolean): Unit = {
-    val marked = stateDf(spark, forgetMarksDir(stateDir, ledgerTable),
-        ledgerSchema)
-      .filter(col("batch_id") === batchId).limit(1).count() > 0
+    val marked = holdsBatch(spark, forgetMarksDir(stateDir, ledgerTable),
+      ledgerSchema, batchId)
     if (sign > 0) {
       require(!marked,
         s"batch $batchId under $stateDir/$ledgerTable was claimed by a " +
@@ -845,22 +915,21 @@ object CorpusStateStream {
     * must leave the vocabulary — ln(0) in the LM table would poison
     * every consumer. Under pure accumulation the filter never fires. */
   def vocabState(spark: SparkSession, stateDir: String): DataFrame = {
-    requireFormat(spark, stateDir, "vocab", 1, "vocab")
-    stateDf(spark, s"$stateDir/vocab", vocabSchema)
+    VocabLedger.requireFormat(spark, stateDir)
+    Vocab.read(spark, stateDir)
       .groupBy(col("w")).agg(sum(col("delta")).as("cnt"))
       .filter(col("cnt") > 0)
   }
 
   /** One vocab micro-batch: append this batch's term-count deltas
-    * exactly once. The DELTA LOG is the idempotence record (rows carry
-    * their batch_id; a batch already present never appends again), the
-    * ledger is the cheap fast-path probe that avoids scanning the log's
-    * batch_id column on every trigger. Deltas append BEFORE the ledger
-    * row: a crash between the two replays the batch, the ledger misses,
-    * the log probe finds the deltas already present and skips them, and
-    * only the ledger row is healed — counts can never double. */
+    * exactly once ([[appendLedgerDeltas]]). The DELTA LOG is the
+    * idempotence record (rows carry their batch_id; a batch already
+    * present never appends again), the ledger is the cheap fast-path
+    * probe that avoids scanning the log's batch_id column on every
+    * trigger. */
   def updateVocab(stateDir: String)(batch: DataFrame, batchId: Long): Unit =
-    appendVocabDeltas(stateDir, batch, batchId, sign = 1L)
+    appendLedgerDeltas(batch.sparkSession, stateDir, VocabLedger, batchId,
+      sign = 1L) { case _ => vocabCounts(batch) }
 
   /** Right-to-be-forgotten against the maintained vocabulary — the
     * NEGATIVE-delta twin of [[updateVocab]] (the BoilerplateStateStream
@@ -878,37 +947,16 @@ object CorpusStateStream {
     * and a deduped deletion set (what the builders pass) subtracts a
     * once-counted doc exactly once. */
   def forgetVocab(stateDir: String)(docs: DataFrame, batchId: Long): Unit =
-    appendVocabDeltas(stateDir, docs, batchId, sign = -1L)
+    appendLedgerDeltas(docs.sparkSession, stateDir, VocabLedger, batchId,
+      sign = -1L) { case _ => vocabCounts(docs) }
 
-  private def appendVocabDeltas(stateDir: String, batch: DataFrame,
-      batchId: Long, sign: Long): Unit = {
-    require(batchId >= 0, s"batchId $batchId: negative ids are reserved " +
-      s"for folded snapshot rows (SnapshotBatchId = $SnapshotBatchId)")
-    val spark = batch.sparkSession
-    stampFormat(spark, stateDir, "vocab", 1, "vocab")
-    val ledgerDir = s"$stateDir/vocab_ledger"
-    val seen = stateDf(spark, ledgerDir, ledgerSchema)
-      .filter(col("batch_id") === batchId).limit(1).count() > 0
-    if (seen) {
-      requireLedgerSign(spark, stateDir, "vocab_ledger", batchId, sign)
-    } else {
-      val inLog = stateDf(spark, s"$stateDir/vocab", vocabSchema)
-        .filter(col("batch_id") === batchId).limit(1).count() > 0
-      intentSignGuard(spark, stateDir, "vocab_ledger", batchId, sign, inLog)
-      if (!inLog) {
-        batch
-          .select(explode(
-              graft.expressions.Md5TokenHash64.words(lower(col("text"))))
-            .as("w"))
-          .groupBy(col("w"))
-          .agg((count(lit(1)) * sign).as("delta"))
-          .select(lit(batchId).as("batch_id"), col("w"), col("delta"))
-          .write.mode("append").parquet(s"$stateDir/vocab")
-      }
-      spark.range(1).select(lit(batchId).as("batch_id"))
-        .write.mode("append").parquet(ledgerDir)
-    }
-  }
+  private def vocabCounts(batch: DataFrame): DataFrame =
+    batch
+      .select(explode(
+          graft.expressions.Md5TokenHash64.words(lower(col("text"))))
+        .as("w"))
+      .groupBy(col("w"))
+      .agg(count(lit(1)).as("delta"))
 
   /** q103's unigram NLL served FROM the maintained vocabulary — the
     * production scoring shape, where an arriving crawl is ranked against
@@ -979,29 +1027,30 @@ object CorpusStateStream {
   // cannot be un-asserted without knowing whether any SURVIVING document
   // still holds the key. This variant pays the documented +8 B/key to
   // keep a per-shingle document-frequency COUNT as an additive delta
-  // table (the vocab-ledger protocol), so deletion is the same negative-
+  // table (the ledger protocol), so deletion is the same negative-
   // delta batch as everywhere else and membership is `net df > 0`. A
   // deployment that must serve right-to-be-forgotten against its
   // decontamination state runs THIS table; one that never deletes keeps
   // the cheaper set.
 
-  private val shdfSchema = StructType(Seq(
-    StructField("batch_id", LongType),
-    StructField("h", LongType),
-    StructField("delta", LongType)))
+  private val ShingleDf = DeltaTable("shdf", Seq(StructField("h", LongType)))
+
+  private val ShingleDfLedger =
+    LedgerFamily("shdf", 1, "shdf", "shdf_ledger", Seq(ShingleDf))
 
   /** Net per-shingle document frequency; df > 0 IS the membership set
     * (a shingle all of whose holders were forgotten has left it). */
   def shingleDfState(spark: SparkSession, stateDir: String): DataFrame = {
-    requireFormat(spark, stateDir, "shdf", 1, "shdf")
-    stateDf(spark, s"$stateDir/shdf", shdfSchema)
+    ShingleDfLedger.requireFormat(spark, stateDir)
+    ShingleDf.read(spark, stateDir)
       .groupBy(col("h")).agg(sum(col("delta")).as("df"))
       .filter(col("df") > 0)
   }
 
   /** One micro-batch of df deltas (ledger-committed, replay-safe). */
   def updateShingleDf(stateDir: String)(batch: DataFrame, batchId: Long): Unit =
-    appendShingleDfDeltas(stateDir, batch, batchId, sign = 1L)
+    appendLedgerDeltas(batch.sparkSession, stateDir, ShingleDfLedger, batchId,
+      sign = 1L) { case _ => shingleDfCounts(batch) }
 
   /** Right-to-be-forgotten against the df-counted shingle state — the
     * [[forgetVocab]] contract: the forgotten documents' per-shingle df
@@ -1009,42 +1058,20 @@ object CorpusStateStream {
     * the fold nets them; zeroed shingles leave membership through the
     * df > 0 cut. Docs must be currently counted. */
   def forgetShingleDf(stateDir: String)(docs: DataFrame, batchId: Long): Unit =
-    appendShingleDfDeltas(stateDir, docs, batchId, sign = -1L)
+    appendLedgerDeltas(docs.sparkSession, stateDir, ShingleDfLedger, batchId,
+      sign = -1L) { case _ => shingleDfCounts(docs) }
 
-  private def appendShingleDfDeltas(stateDir: String, batch: DataFrame,
-      batchId: Long, sign: Long): Unit = {
-    require(batchId >= 0, s"batchId $batchId: negative ids are reserved " +
-      s"for folded snapshot rows (SnapshotBatchId = $SnapshotBatchId)")
-    val spark = batch.sparkSession
-    stampFormat(spark, stateDir, "shdf", 1, "shdf")
-    val ledgerDir = s"$stateDir/shdf_ledger"
-    val seen = stateDf(spark, ledgerDir, ledgerSchema)
-      .filter(col("batch_id") === batchId).limit(1).count() > 0
-    if (seen) {
-      requireLedgerSign(spark, stateDir, "shdf_ledger", batchId, sign)
-    } else {
-      val inLog = stateDf(spark, s"$stateDir/shdf", shdfSchema)
-        .filter(col("batch_id") === batchId).limit(1).count() > 0
-      intentSignGuard(spark, stateDir, "shdf_ledger", batchId, sign, inLog)
-      if (!inLog) {
-        // within-trigger dedup on doc_id, then the per-doc-DISTINCT
-        // compiled shingle stream (ShingleHash64 dedupes per doc), so
-        // the count IS a document frequency within the batch
-        batch.dropDuplicates("doc_id").select(col("text"))
-          .select(explode(graft.expressions.ShingleHash64(col("text"))).as("h"))
-          .groupBy(col("h")).agg((count(lit(1)) * sign).as("delta"))
-          .select(lit(batchId).as("batch_id"), col("h"), col("delta"))
-          .write.mode("append").parquet(s"$stateDir/shdf")
-      }
-      spark.range(1).select(lit(batchId).as("batch_id"))
-        .write.mode("append").parquet(ledgerDir)
-    }
-  }
+  // within-trigger dedup on doc_id, then the per-doc-DISTINCT compiled
+  // shingle stream (ShingleHash64 dedupes per doc), so the count IS a
+  // document frequency within the batch
+  private def shingleDfCounts(batch: DataFrame): DataFrame =
+    batch.dropDuplicates("doc_id").select(col("text"))
+      .select(explode(graft.expressions.ShingleHash64(col("text"))).as("h"))
+      .groupBy(col("h")).agg(count(lit(1)).as("delta"))
 
-  /** [[foldDeltaState]] applied to the shingle-df delta log. */
+  /** [[foldLedger]] applied to the shingle-df delta log. */
   def foldShingleDf(spark: SparkSession, stateDir: String): (Long, Long) =
-    foldDeltaState(spark, stateDir, "shdf", "shdf_ledger", shdfSchema,
-      Seq("h"), Seq("delta"))
+    foldLedger(spark, stateDir, ShingleDfLedger).head
 
   /** [[noveltyAgainstState]] against the df-counted table — same probe
     * plan (one arrival scan, one left join, one aggregate), membership

@@ -40,7 +40,7 @@ import graft.functions.TextFunctions.wsTokens
   *     deltas, keyed by the RAW 80-code-point prefix (hashing the key
   *     would admit collisions the batch groupBy does not have);
   *   - `ds_ledger/` — the committed-batch ledger for ALL five delta
-  *     tables (the vocab-ledger crash-window protocol: deltas append
+  *     tables ([[CorpusStateStream.appendLedgerDeltas]]: deltas append
   *     before the ledger row; a replay probes each delta log itself and
   *     only heals the ledger — counts can never double).
   *
@@ -86,115 +86,64 @@ object DatasheetStateStream {
     StructField("lang", StringType),
     StructField("source", StringType)))
 
-  private val countersSchema = StructType(Seq(
-    StructField("batch_id", LongType),
-    StructField("n_docs", LongType),
-    StructField("n_tokens", LongType),
-    StructField("n_flagged", LongType)))
+  private val Counters = CorpusStateStream.DeltaTable("ds_counters", Nil,
+    Seq("n_docs", "n_tokens", "n_flagged"))
+  private val Prefixes = CorpusStateStream.DeltaTable("ds_prefixes",
+    Seq(StructField("prefix", StringType)))
+  private val Langs = CorpusStateStream.DeltaTable("langs",
+    Seq(StructField("lang", StringType)))
+  private val Sources = CorpusStateStream.DeltaTable("sources",
+    Seq(StructField("source", StringType)))
+  private val Words = CorpusStateStream.DeltaTable("words",
+    Seq(StructField("w", LongType)))
 
-  private val prefixesSchema = StructType(Seq(
-    StructField("batch_id", LongType),
-    StructField("prefix", StringType),
-    StructField("delta", LongType)))
-
-  private def keyDeltaSchema(field: StructField) = StructType(Seq(
-    StructField("batch_id", LongType), field,
-    StructField("delta", LongType)))
-
-  private val langField = StructField("lang", StringType)
-  private val sourceField = StructField("source", StringType)
-  private val wordField = StructField("w", LongType)
-
-  private val ledgerSchema = StructType(Seq(StructField("batch_id", LongType)))
-
-  /** Layout version of the five delta tables: v2 = the r15 df-counted
+  /** Layout v2 of the five delta tables = the r15 df-counted
     * langs/sources/words (v1, never stamped, was the set layout this
     * object's own state-format note describes). Stamped at first write,
-    * checked on every write and read ([[CorpusStateStream.stampFormat]])
-    * so an old checkpoint fails LOUDLY with the rebuild instruction. */
-  private val FormatVersion = 2
-
-  private def stateDf(spark: SparkSession, dir: String, s: StructType) =
-    CorpusStateStream.stateDf(spark, dir, s)
-
-  private def stampFormat(spark: SparkSession, stateDir: String): Unit =
-    CorpusStateStream.stampFormat(spark, stateDir, "ds", FormatVersion,
-      "ds_ledger")
+    * checked on every write and read, so an old checkpoint fails LOUDLY
+    * with the rebuild instruction. Counters append FIRST, so their probe
+    * answers "any deltas committed" for the intent guard. */
+  private val Ledger = CorpusStateStream.LedgerFamily("ds", 2, "ds_ledger",
+    "ds_ledger", Seq(Counters, Prefixes, Langs, Sources, Words))
 
   private def requireFormat(spark: SparkSession, stateDir: String): Unit = {
     // a forget crashed between its ledger commit and the sigs swap
     // would otherwise serve a silently inconsistent sheet (r17 guard)
     CorpusStateStream.requireNoPendingForget(spark, stateDir, "datasheet")
-    CorpusStateStream.requireFormat(spark, stateDir, "ds", FormatVersion,
-      "ds_ledger")
+    Ledger.requireFormat(spark, stateDir)
   }
 
-  /** The five delta projections of one batch at a given sign — ONE
-    * definition for the arrival fold (+1) and the forget (−1), so the
-    * negative batch subtracts exactly what the positive one added. */
+  /** The five delta projections of one batch — ONE definition for the
+    * arrival fold (+1) and the forget (−1), so the negative batch
+    * subtracts exactly what the positive one added. */
   private def appendDeltaTables(stateDir: String, docs: DataFrame,
       batchId: Long, sign: Long): Unit = {
-    require(batchId >= 0, "batchId must be non-negative (negative ids " +
-      "are reserved for folded snapshot rows)")
-    val spark = docs.sparkSession
-    val ledgerDir = s"$stateDir/ds_ledger"
-    val seen = stateDf(spark, ledgerDir, ledgerSchema)
-      .filter(col("batch_id") === batchId).limit(1).count() > 0
-    if (seen) {
-      // sign-collision guard (advisor catch, r15): a forget reusing an
-      // arrival's batchId would skip its negative deltas here as a
-      // "replay" while the sigs swap below still executed — counters
-      // and key tables inconsistent with the signature table, silently
-      CorpusStateStream.requireLedgerSign(spark, stateDir, "ds_ledger",
-        batchId, sign)
-      return
+    // df per key: nulls are dropped, as countDistinct ignores them
+    def keyCounts(keys: DataFrame) = keys.na.drop()
+      .groupBy(col(keys.columns.head)).agg(count(lit(1)).as("delta"))
+    CorpusStateStream.appendLedgerDeltas(docs.sparkSession, stateDir, Ledger,
+        batchId, sign) {
+      case Counters =>
+        graft.operators.TextAnalysis.gateFlags(docs)
+          .select(col("nt"),
+            (col("f_short") || col("f_low_ttr") || col("f_bad_len") ||
+              col("f_dup")).as("f"))
+          .agg(count(lit(1)).as("n_docs"), coalesce(sum(col("nt")), lit(0L))
+              .as("n_tokens"),
+            coalesce(sum(when(col("f"), 1L).otherwise(0L)), lit(0L))
+              .as("n_flagged"))
+      case Prefixes =>
+        docs.groupBy(substring(col("text"), 1, 80).as("prefix"))
+          .agg(count(lit(1)).as("delta"))
+      case Langs => keyCounts(docs.select(col("lang")))
+      case Sources => keyCounts(docs.select(col("source")))
+      // document frequency: per-doc DISTINCT words, so net > 0 is
+      // exactly "some surviving document holds this word"
+      case Words => keyCounts(
+        docs.select(col("doc_id"), explode(wsTokens(lower(col("text")))).as("tok"))
+          .select(col("doc_id"), xxhash64(col("tok")).as("w")).distinct()
+          .select(col("w")))
     }
-    def missing(table: String, schema: StructType): Boolean =
-      stateDf(spark, s"$stateDir/$table", schema)
-        .filter(col("batch_id") === batchId).limit(1).count() == 0
-    // counters append FIRST, so their probe answers "any deltas
-    // committed" for the intent guard (a crash leaves a prefix)
-    val countersMissing = missing("ds_counters", countersSchema)
-    CorpusStateStream.intentSignGuard(spark, stateDir, "ds_ledger",
-      batchId, sign, deltasInLog = !countersMissing)
-    if (countersMissing) {
-      graft.operators.TextAnalysis.gateFlags(docs)
-        .select(col("nt"),
-          (col("f_short") || col("f_low_ttr") || col("f_bad_len") ||
-            col("f_dup")).as("f"))
-        .agg(count(lit(1)).as("n_docs"), coalesce(sum(col("nt")), lit(0L))
-            .as("n_tokens"),
-          coalesce(sum(when(col("f"), 1L).otherwise(0L)), lit(0L))
-            .as("n_flagged"))
-        .select(lit(batchId).as("batch_id"), (col("n_docs") * sign).as("n_docs"),
-          (col("n_tokens") * sign).as("n_tokens"),
-          (col("n_flagged") * sign).as("n_flagged"))
-        .write.mode("append").parquet(s"$stateDir/ds_counters")
-    }
-    if (missing("ds_prefixes", prefixesSchema)) {
-      docs.groupBy(substring(col("text"), 1, 80).as("prefix"))
-        .agg((count(lit(1)) * sign).as("delta"))
-        .select(lit(batchId).as("batch_id"), col("prefix"), col("delta"))
-        .write.mode("append").parquet(s"$stateDir/ds_prefixes")
-    }
-    def keyDeltas(table: String, field: StructField, keys: DataFrame): Unit =
-      if (missing(table, keyDeltaSchema(field))) {
-        keys.na.drop()
-          .groupBy(col(field.name))
-          .agg((count(lit(1)) * sign).as("delta"))
-          .select(lit(batchId).as("batch_id"), col(field.name), col("delta"))
-          .write.mode("append").parquet(s"$stateDir/$table")
-      }
-    keyDeltas("langs", langField, docs.select(col("lang")))
-    keyDeltas("sources", sourceField, docs.select(col("source")))
-    // document frequency: per-doc DISTINCT words, so net > 0 is exactly
-    // "some surviving document holds this word"
-    keyDeltas("words", wordField,
-      docs.select(col("doc_id"), explode(wsTokens(lower(col("text")))).as("tok"))
-        .select(col("doc_id"), xxhash64(col("tok")).as("w")).distinct()
-        .select(col("w")))
-    spark.range(1).select(lit(batchId).as("batch_id"))
-      .write.mode("append").parquet(ledgerDir)
   }
 
   /** One micro-batch: fold the arrivals into every datasheet state
@@ -206,7 +155,7 @@ object DatasheetStateStream {
     // forget is about to swap from a pre-append read — refuse until
     // the window heals (forget itself is exempt: it IS the healer)
     CorpusStateStream.requireNoPendingForget(spark, stateDir, "datasheet")
-    stampFormat(spark, stateDir)
+    Ledger.stampFormat(spark, stateDir)
     val docs = batch
       .select(col("doc_id"), col("text"), col("lang"), col("source"))
       .localCheckpoint()
@@ -249,7 +198,7 @@ object DatasheetStateStream {
   private[streaming] def forgetImpl(stateDir: String, docs: DataFrame,
       batchId: Long, crashAfterStep: Int): Unit = {
     val spark = docs.sparkSession
-    stampFormat(spark, stateDir)
+    Ledger.stampFormat(spark, stateDir)
     // heal or adopt a prior crashed window: ledger-committed completes
     // here; a pre-delta crash of THIS id is adopted (this run redoes
     // everything from the start); a pre-delta crash of ANOTHER id needs
@@ -265,14 +214,8 @@ object DatasheetStateStream {
     // can never heal it. For a legitimate forget this also writes the
     // write-intent mark (mark-first is the protocol); appendDeltaTables
     // re-checks idempotently below.
-    if (ledgerCommitted(spark, stateDir, batchId))
-      CorpusStateStream.requireLedgerSign(spark, stateDir, "ds_ledger",
-        batchId, sign = -1L)
-    else
-      CorpusStateStream.intentSignGuard(spark, stateDir, "ds_ledger",
-        batchId, sign = -1L,
-        deltasInLog = stateDf(spark, s"$stateDir/ds_counters", countersSchema)
-          .filter(col("batch_id") === batchId).limit(1).count() > 0)
+    CorpusStateStream.ledgerGuard(spark, stateDir, Ledger, batchId,
+      sign = -1L)
     // stage the marker BEFORE the deltas: tombstone ids + the batch id
     CorpusStateStream.stagePending(spark, stateDir,
         CorpusStateStream.ForgetPending) { tmp =>
@@ -288,11 +231,6 @@ object DatasheetStateStream {
       throw new IllegalStateException("injected crash after deltas")
     completeSigs(spark, stateDir)
   }
-
-  private def ledgerCommitted(spark: SparkSession, stateDir: String,
-      batchId: Long): Boolean =
-    stateDf(spark, s"$stateDir/ds_ledger", ledgerSchema)
-      .filter(col("batch_id") === batchId).limit(1).count() > 0
 
   /** The sigs-swap half: the keyed apply over the stored tombstones
     * (anti-join — idempotent), which then clears the marker. */
@@ -310,7 +248,8 @@ object DatasheetStateStream {
         CorpusStateStream.ForgetPending, Seq("sigs"))) return
     val pend = s"$stateDir/${CorpusStateStream.ForgetPending}"
     val prior = spark.read.parquet(s"$pend/meta").collect()(0).getLong(0)
-    if (ledgerCommitted(spark, stateDir, prior)) completeSigs(spark, stateDir)
+    if (CorpusStateStream.ledgerCommitted(spark, stateDir, Ledger, prior))
+      completeSigs(spark, stateDir)
     else if (owner.contains(prior))
       CorpusStateStream.clearPending(spark, stateDir,
         CorpusStateStream.ForgetPending)
@@ -334,7 +273,7 @@ object DatasheetStateStream {
     * artifact row. */
   def vocabularyState(spark: SparkSession, stateDir: String): DataFrame = {
     requireFormat(spark, stateDir)
-    stateDf(spark, s"$stateDir/words", keyDeltaSchema(wordField))
+    Words.read(spark, stateDir)
       .groupBy(col("w")).agg(sum(col("delta")).as("n"))
       .filter(col("n") > 0)
   }
@@ -354,12 +293,12 @@ object DatasheetStateStream {
     def one(metric: String, v: DataFrame): DataFrame =
       v.select(lit(metric).as("metric"), col(v.columns.head).cast("double")
         .as("value"))
-    def keyCount(table: String, field: StructField): DataFrame =
-      stateDf(spark, s"$stateDir/$table", keyDeltaSchema(field))
-        .groupBy(col(field.name)).agg(sum(col("delta")).as("n"))
+    def keyCount(t: CorpusStateStream.DeltaTable): DataFrame =
+      t.read(spark, stateDir)
+        .groupBy(col(t.keys.head.name)).agg(sum(col("delta")).as("n"))
         .filter(col("n") > 0)
         .agg(count(lit(1)).as("k"))
-    val c = stateDf(spark, s"$stateDir/ds_counters", countersSchema)
+    val c = Counters.read(spark, stateDir)
       .agg(coalesce(sum(col("n_docs")), lit(0L)).as("n_docs"),
         coalesce(sum(col("n_tokens")), lit(0L)).as("n_tokens"),
         coalesce(sum(col("n_flagged")), lit(0L)).as("n_flagged"))
@@ -368,21 +307,21 @@ object DatasheetStateStream {
         CorpusStateStream.sigState(spark, stateDir), maxHamming = 8, maxBucket)
       .select(explode(array(col("d1"), col("d2"))).as("doc_id")).distinct()
       .agg(count(lit(1)).as("members"))
-    val tpl = stateDf(spark, s"$stateDir/ds_prefixes", prefixesSchema)
+    val tpl = Prefixes.read(spark, stateDir)
       .groupBy(col("prefix")).agg(sum(col("delta")).as("n"))
       .filter(col("n") >= 2)
       .agg(coalesce(sum(col("n")), lit(0L)).as("tdocs"))
     one("n_docs", c.select(col("n_docs")))
       .unionByName(one("n_tokens", c.select(col("n_tokens"))))
-      .unionByName(one("n_langs", keyCount("langs", langField)))
-      .unionByName(one("n_sources", keyCount("sources", sourceField)))
+      .unionByName(one("n_langs", keyCount(Langs)))
+      .unionByName(one("n_sources", keyCount(Sources)))
       .unionByName(one("mean_tokens_per_doc", c.select(
         // guarded: an empty state reads as NULL rather than an ANSI
         // divide-by-zero (the batch twin never runs on zero docs)
         when(col("n_docs") > 0,
           col("n_tokens").cast("double") / col("n_docs").cast("double"))
           .as("m"))))
-      .unionByName(one("vocab_size", keyCount("words", wordField)))
+      .unionByName(one("vocab_size", keyCount(Words)))
       .unionByName(one("flagged_docs", c.select(col("n_flagged"))))
       .unionByName(one("neardup_member_docs", members))
       .unionByName(one("template_docs", tpl))
@@ -390,25 +329,16 @@ object DatasheetStateStream {
   }
 
   /** Fold all five committed delta logs into snapshots —
-    * [[CorpusStateStream.foldDeltaState]] on the per-batch counters
-    * (one global snapshot row), the template-prefix counts, and the
-    * three df-counted key tables. They share `ds_ledger`, so one fold
-    * call per table with the same ledger. Returns
-    * ((counters before, after), (prefixes before, after)) — the two
-    * tables whose row growth is per-batch rather than per-key. */
+    * [[CorpusStateStream.foldLedger]] on the per-batch counters (one
+    * global snapshot row), the template-prefix counts, and the three
+    * df-counted key tables, then one compaction of their shared
+    * `ds_ledger`. Returns ((counters before, after), (prefixes before,
+    * after)) — the two tables whose row growth is per-batch rather than
+    * per-key. */
   def foldDeltas(spark: SparkSession, stateDir: String)
       : ((Long, Long), (Long, Long)) = {
-    CorpusStateStream.foldDeltaState(spark, stateDir, "langs",
-      "ds_ledger", keyDeltaSchema(langField), Seq("lang"), Seq("delta"))
-    CorpusStateStream.foldDeltaState(spark, stateDir, "sources",
-      "ds_ledger", keyDeltaSchema(sourceField), Seq("source"), Seq("delta"))
-    CorpusStateStream.foldDeltaState(spark, stateDir, "words",
-      "ds_ledger", keyDeltaSchema(wordField), Seq("w"), Seq("delta"))
-    (CorpusStateStream.foldDeltaState(spark, stateDir, "ds_counters",
-        "ds_ledger", countersSchema, Seq.empty,
-        Seq("n_docs", "n_tokens", "n_flagged")),
-      CorpusStateStream.foldDeltaState(spark, stateDir, "ds_prefixes",
-        "ds_ledger", prefixesSchema, Seq("prefix"), Seq("delta")))
+    val folded = CorpusStateStream.foldLedger(spark, stateDir, Ledger)
+    (folded(0), folded(1))
   }
 
   /** Start the maintenance stream (the CorpusStateStream wiring with the
