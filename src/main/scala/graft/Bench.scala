@@ -85,12 +85,9 @@ object Bench {
         .groupBy(col("k"))
         .agg(sum(col("rs")).as("s"), avg(col("rn")).as("a"),
           count(lit(1)).as("c"), max(col("u") + col("w")).as("m"),
-          // deterministic-aggregate path: the DetAgg fast sum the
-          // oracle-parity aggregates run through since r17 (q01's plan
-          // shape — UnscaledMicros + split long sums + the per-group
-          // recombine), plus the wide decimal path the x² legs keep
+          // deterministic-aggregate path: the DetAgg exact sum the
+          // oracle-parity aggregates run through (q01's plan shape)
           graft.functions.DetAgg.dsumD(col("v")).as("ds"),
-          graft.functions.DetAgg.dsumWideD(col("v")).as("dw"),
           graft.functions.DetAgg.davg(col("v")).as("da"))
         .write.format("noop").mode("overwrite").save()
     }

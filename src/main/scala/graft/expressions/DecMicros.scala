@@ -1,144 +1,151 @@
 package graft.expressions
 
-import java.math.{BigInteger, RoundingMode}
+import java.math.{BigInteger, RoundingMode, BigDecimal => JBigDecimal}
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 
-/** The per-element half of the fast deterministic sum
-  * ([[graft.functions.DetAgg.dsum]]): the input value as an "unscaled
-  * micros" long — EXACTLY the unscaled value of Spark's
-  * `CAST(v AS DECIMAL(_, 6))`, produced through the same Java call
-  * chain (`BigDecimal.valueOf(double)` = shortest-decimal
-  * representation, then `setScale(6, HALF_UP)`), so summing these
-  * longs is bit-equivalent to summing the decimals.
+/** The one exact, order-independent sum behind
+  * [[graft.functions.DetAgg.dsum]]: bit-identical to
+  * `sum(CAST(x AS DECIMAL(38,6)))`, but summed in primitive longs.
   *
-  * Why it exists (optimization r17, guide §1.2 "per-task work"): a
-  * `sum(CAST(x AS DECIMAL(38,6)))` buffers a precision-38 decimal,
-  * which Spark stores as a serialized BigDecimal — every row pays a
-  * BigDecimal.add plus a byte-array write-back into the aggregation
-  * buffer, and q01's five decimal sums measured 1.3 s of the query's
-  * 1.8 s at sf0.1 (vs 0.52 s with plain double sums). Summing the
-  * unscaled value as three overflow-safe longs (see
-  * [[graft.functions.DetAgg.dsum]]) keeps the whole update inside
-  * whole-stage codegen's primitive fast path while preserving exact,
-  * order-independent arithmetic.
+  * A `sum(decimal(38,6))` buffers a serialized BigDecimal, so every row
+  * pays a BigDecimal add plus a byte-array write-back into the
+  * aggregation buffer. Here each element converts ONCE to its unscaled
+  * value at scale 6 — the 128-bit integer the decimal cast stores,
+  * through the cast's own rounding chain ([[DetSum.toMicros]]) — and
+  * the buffer is four longs plus a `seen` flag:
+  *   - p0, p1, p2: the 22-, 22- and 20-bit parts of the low 64 bits,
+  *     read as unsigned (each addend < 2^22, so 2^41 rows per group
+  *     before a part could overflow);
+  *   - p3: the signed high 64 bits.
+  * The value is p3·2^64 + p2·2^44 + p1·2^22 + p0, recombined once per
+  * group ([[DetSum.combine]]). Every add is exact (`addExact`): p3 can
+  * only overflow past ~1.7e38 unscaled, already outside DECIMAL(38,6),
+  * and a group total above DECIMAL(38,6) throws in the recombine, so
+  * overflow is always loud. Integer addition is associative, so the
+  * result is bit-identical on any partitioning. Empty and all-null
+  * groups yield null (`sum` semantics).
   *
-  * Range contract: |v| must fit the unscaled long, i.e. |v| ≤ 9.2e12 —
-  * four orders of magnitude above DetAgg's documented ~1e9 cross-engine
-  * input bound; `longValueExact` throws loudly (never truncates) if a
-  * caller feeds a wider value, and such callers (the x² legs of
-  * dstddev/dvarPop) stay on the wide decimal path instead.
-  *
-  * Integral inputs skip the BigDecimal entirely: v·1e6 is exact in a
-  * long for the same range, `multiplyExact` guarding the bound. */
-case class UnscaledMicros(child: Expression) extends UnaryExpression {
+  * Inputs: floating (through the double→decimal cast's chain), integral
+  * (exact: v·10^6 as a 128-bit product) and decimal (rounded HALF_UP to
+  * scale 6, as the cast does). An element beyond DECIMAL(38,6) throws. */
+case class DetSum(child: Expression) extends DeclarativeAggregate
+    with UnaryLike[Expression] {
 
-  override def dataType: DataType = LongType
-  override def prettyName: String = "unscaled_micros"
+  override def dataType: DataType = DecimalType(38, 6)
+  override def nullable: Boolean = true
+  override def prettyName: String = "dsum"
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case DoubleType | FloatType | LongType | IntegerType | ShortType | ByteType =>
-      TypeCheckResult.TypeCheckSuccess
+    case _: NumericType => TypeCheckResult.TypeCheckSuccess
     case t => TypeCheckResult.TypeCheckFailure(
-      s"unscaled_micros expects a double/float/integral input, got ${t.simpleString}")
+      s"dsum expects a numeric input, got ${t.simpleString}")
   }
 
-  override def nullSafeEval(v: Any): Any = child.dataType match {
-    case DoubleType  => UnscaledMicros.toMicros(v.asInstanceOf[Double])
-    case FloatType   => UnscaledMicros.toMicros(v.asInstanceOf[Float].toDouble)
-    case LongType    => Math.multiplyExact(v.asInstanceOf[Long], 1000000L)
-    case IntegerType => v.asInstanceOf[Int].toLong * 1000000L
-    case ShortType   => v.asInstanceOf[Short].toLong * 1000000L
-    case ByteType    => v.asInstanceOf[Byte].toLong * 1000000L
-    case t => throw new IllegalStateException(s"unreachable: $t")
+  private lazy val parts =
+    Seq.tabulate(4)(i => AttributeReference(s"p$i", LongType, nullable = false)())
+  private lazy val seen = AttributeReference("seen", BooleanType, nullable = false)()
+
+  override lazy val aggBufferAttributes: Seq[AttributeReference] = parts :+ seen
+
+  override lazy val initialValues: Seq[Expression] =
+    Seq.fill(4)(Literal(0L)) :+ Literal(false)
+
+  private def exactAdd(a: Expression, b: Expression): Expression =
+    Add(a, b, NumericEvalContext(EvalMode.ANSI))
+
+  /** `DetSum.<fn>(args)`, overloaded by input type; a null input reads
+    * 0, so it adds nothing. */
+  private def word(fn: String, args: Expression*): Expression =
+    Coalesce(Seq(StaticInvoke(classOf[DetSum], LongType, fn, args), Literal(0L)))
+
+  // `low` is the one per-element conversion; subexpression elimination
+  // evaluates it once for all four slots
+  override lazy val updateExpressions: Seq[Expression] = {
+    val low = word("low", child)
+    val mask = Literal(0x3FFFFFL)
+    val addends = Seq(
+      BitwiseAnd(low, mask),
+      BitwiseAnd(ShiftRightUnsigned(low, Literal(22)), mask),
+      ShiftRightUnsigned(low, Literal(44)),
+      word("high", child, low))
+    parts.zip(addends).map { case (p, a) => exactAdd(p, a) } :+
+      Or(seen, IsNotNull(child))
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    child.dataType match {
-      case DoubleType =>
-        defineCodeGen(ctx, ev, c =>
-          s"graft.expressions.UnscaledMicros.toMicros($c)")
-      case FloatType =>
-        defineCodeGen(ctx, ev, c =>
-          s"graft.expressions.UnscaledMicros.toMicros((double) $c)")
-      case LongType =>
-        defineCodeGen(ctx, ev, c => s"java.lang.Math.multiplyExact($c, 1000000L)")
-      case _ =>
-        defineCodeGen(ctx, ev, c => s"((long) $c) * 1000000L")
-    }
+  override lazy val mergeExpressions: Seq[Expression] =
+    parts.map(p => exactAdd(p.left, p.right)) :+ Or(seen.left, seen.right)
 
-  override protected def withNewChildInternal(newChild: Expression): UnscaledMicros =
+  override lazy val evaluateExpression: Expression =
+    If(seen,
+      StaticInvoke(classOf[DetSum], dataType, "combine", parts, returnNullable = false),
+      Literal(null, dataType))
+
+  override protected def withNewChildInternal(newChild: Expression): DetSum =
     copy(child = newChild)
 }
 
-object UnscaledMicros {
-  /** The double→unscaled-micros conversion — the SAME rounding chain as
-    * Spark's double→decimal cast (`BigDecimal.valueOf` = shortest
-    * decimal representation of the double; `HALF_UP` at scale 6), so
-    * the long is the cast's unscaled value to the bit. NaN/Infinity
-    * throw (as the decimal cast would under ANSI); values beyond the
-    * long's unscaled range throw via longValueExact rather than
-    * truncate. */
+object DetSum {
+  /** Below this magnitude a double's unscaled value fits a long. */
+  private val FastBound = 9.2e12
+
+  /** The double→unscaled-micros conversion for |d| < 9.2e12 — the SAME
+    * rounding chain as Spark's double→decimal cast
+    * (`BigDecimal.valueOf` = the double's shortest decimal
+    * representation; `HALF_UP` at scale 6), so the long is the cast's
+    * unscaled value to the bit. NaN/Infinity throw, as the cast does
+    * under ANSI. */
   def toMicros(d: Double): Long =
-    java.math.BigDecimal.valueOf(d)
-      .setScale(6, RoundingMode.HALF_UP)
-      .unscaledValue()
-      .longValueExact()
+    JBigDecimal.valueOf(d).setScale(6, RoundingMode.HALF_UP)
+      .unscaledValue().longValueExact()
 
-  def apply(c: Column): Column =
-    ColumnBridge.column(UnscaledMicros(ColumnBridge.expression(c)))
-}
+  /** The unscaled value at scale 6 of any element; beyond DECIMAL(38,6)
+    * it throws the same error as the cast. */
+  private def unscaled(b: JBigDecimal): BigInteger =
+    Decimal(b, 38, 6).toJavaBigDecimal.unscaledValue()
 
-/** The per-group recombination half of the fast deterministic sum: the
-  * three 22-bit-split part sums (see [[graft.functions.DetAgg.dsum]])
-  * back into one DECIMAL(38,6). Exact by construction — the parts are
-  * a two's-complement decomposition (u = (u>>44)·2^44 + ((u>>22)&M)·2^22
-  * + (u&M)), so Σu = s2·2^44 + s1·2^22 + s0, computed here in
-  * BigInteger (once per GROUP, never per row). Null (empty group)
-  * propagates — matching `sum`'s null-on-empty semantics. */
-case class Dec128FromParts(first: Expression, second: Expression,
-    third: Expression) extends TernaryExpression {
+  /** An element's unscaled value at scale 6 as its low 64 bits (two's
+    * complement) and its signed high 64 bits. Floats widen to double,
+    * smaller integrals to long; an integral's is the exact 128-bit
+    * product v·10^6. A value whose unscaled form fits a long has the
+    * sign extension of its low word as high word, so only wider values
+    * convert a second time. */
+  def low(d: Double): Long =
+    if (Math.abs(d) < FastBound) toMicros(d)
+    else unscaled(JBigDecimal.valueOf(d)).longValue()
+  def low(v: Long): Long = v * 1000000L
+  def low(d: Decimal): Long = unscaled(d.toJavaBigDecimal).longValue()
 
-  override def dataType: DataType = DecimalType(38, 6)
-  override def prettyName: String = "dec128_from_parts"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (children.forall(_.dataType == LongType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"dec128_from_parts expects three longs, got " +
-        children.map(_.dataType.simpleString).mkString(", "))
-
-  override def nullSafeEval(s2: Any, s1: Any, s0: Any): Any =
-    Dec128FromParts.combine(s2.asInstanceOf[Long], s1.asInstanceOf[Long],
-      s0.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b, c) =>
-      s"graft.expressions.Dec128FromParts.combine($a, $b, $c)")
-
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression): Dec128FromParts =
-    copy(first = newFirst, second = newSecond, third = newThird)
-}
-
-object Dec128FromParts {
-  def combine(s2: Long, s1: Long, s0: Long): org.apache.spark.sql.types.Decimal = {
-    val unscaled = BigInteger.valueOf(s2).shiftLeft(44)
-      .add(BigInteger.valueOf(s1).shiftLeft(22))
-      .add(BigInteger.valueOf(s0))
-    org.apache.spark.sql.types.Decimal(
-      new java.math.BigDecimal(unscaled, 6), 38, 6)
+  def high(d: Double, low: Long): Long =
+    if (Math.abs(d) < FastBound) low >> 63
+    else unscaled(JBigDecimal.valueOf(d)).shiftRight(64).longValue()
+  def high(v: Long, low: Long): Long = Math.multiplyHigh(v, 1000000L)
+  def high(d: Decimal, low: Long): Long = {
+    val b = d.toJavaBigDecimal
+    if (b.precision - b.scale <= 12) low >> 63
+    else unscaled(b).shiftRight(64).longValue()
   }
 
-  def apply(s2: Column, s1: Column, s0: Column): Column =
-    ColumnBridge.column(Dec128FromParts(
-      ColumnBridge.expression(s2), ColumnBridge.expression(s1),
-      ColumnBridge.expression(s0)))
+  /** The four slot sums back into one DECIMAL(38,6), once per group;
+    * a total beyond DECIMAL(38,6) throws. */
+  def combine(p0: Long, p1: Long, p2: Long, p3: Long): Decimal = {
+    val u = BigInteger.valueOf(p3).shiftLeft(64)
+      .add(BigInteger.valueOf(p2).shiftLeft(44))
+      .add(BigInteger.valueOf(p1).shiftLeft(22))
+      .add(BigInteger.valueOf(p0))
+    Decimal(new JBigDecimal(u, 6), 38, 6)
+  }
+
+  def apply(c: Column): Column =
+    ColumnBridge.column(DetSum(ColumnBridge.expression(c)).toAggregateExpression())
 }
 
 /** The operand of [[graft.functions.DetAgg]]'s x² legs: integral inputs

@@ -22,9 +22,11 @@ import org.apache.spark.sql.types.DecimalType
   * decimal→double / double arithmetic is IEEE-identical when the
   * expression shape matches.
   *
-  * Cost: decimal aggregation is ~2-3× slower per value than double sum but
-  * stays inside whole-stage codegen and partial (map-side) aggregation —
-  * at scale the shuffle still carries one 16-byte value per group.
+  * Cost: the exact sum ([[graft.expressions.DetSum]]) converts each
+  * element once to its unscaled decimal value and sums primitive longs
+  * inside whole-stage codegen and partial (map-side) aggregation; at
+  * scale the shuffle carries five buffer fields (four longs and a flag)
+  * per sum per group.
   */
 object DetAgg {
   /** 6 fractional digits; 32 integral digits — enough for sums of 1e12
@@ -40,53 +42,14 @@ object DetAgg {
     * exact at every magnitude; see [[sql.dsumD]] for the DuckDB subtlety.) */
   val Dec: DecimalType = DecimalType(38, 6)
 
-  /** Exact, order-independent sum; returns DECIMAL(38,6).
-    *
-    * Since the r17 optimization round this no longer buffers a
-    * precision-38 decimal per group: a `sum(decimal(38,6))` stores its
-    * accumulator as a serialized BigDecimal, so EVERY ROW pays a
-    * BigDecimal.add plus a byte-array write-back into the aggregation
-    * buffer — measured 1.3 s of q01's 1.8 s at sf0.1 (plain double
-    * sums: 0.52 s). Instead each element converts ONCE to its exact
-    * unscaled-micros long ([[graft.expressions.UnscaledMicros]] — the
-    * identical `BigDecimal.valueOf(d).setScale(6, HALF_UP)` chain the
-    * decimal cast runs, so the value is the cast's unscaled long to
-    * the bit) and is split into three non-overflowing parts
-    * (u>>44, (u>>22)&(2^22−1), u&(2^22−1) — a two's-complement
-    * decomposition), each summed as a PLAIN LONG inside whole-stage
-    * codegen's primitive fast path. The parts recombine per GROUP in
-    * BigInteger ([[graft.expressions.Dec128FromParts]]), yielding the
-    * identical DECIMAL(38,6).
-    *
-    * Exactness envelope: per-element |v| ≤ 9.2e12 (longValueExact
-    * throws loudly beyond — callers are bounded at ~1e9 by the
-    * cross-engine contract above anyway), ≤ 2.2e12 non-null elements
-    * per group before a part sum could overflow (the documented
-    * "sums of 1e12 values" design point; the wide-range x² legs of
-    * [[dstddev]]/[[dvarPop]] stay on [[dsumWide]]). Associativity and
-    * order-independence are inherited from integer addition, so the
-    * result is bit-identical on local[32] and a 1000-executor cluster
-    * — the same guarantee, ~3× cheaper per row. */
-  def dsum(c: Column): Column = {
-    val m = lit(0x3FFFFFL)
-    val u = graft.expressions.UnscaledMicros(c)
-    graft.expressions.Dec128FromParts(
-      sum(shiftright(u, 44)),
-      sum(shiftright(u, 22).bitwiseAND(m)),
-      sum(u.bitwiseAND(m)))
-  }
-
-  /** The pre-r17 wide-range form: per-element decimal(38,6) cast,
-    * decimal-buffered sum. Slower per row (BigDecimal add + buffer
-    * serialization every row) but handles per-element magnitudes up to
-    * 1e32 — the x² legs of [[dstddev]]/[[dvarPop]] and the integer
-    * OLS product sums (q89's m·v, q113's x·y — bounded ≤ ~2e14 by
-    * their own docs, beyond [[dsum]]'s 9.2e12) need it. Identical
-    * result to [[dsum]] wherever both ranges admit the input. */
-  def dsumWide(c: Column): Column = sum(c.cast(Dec))
-
-  /** [[dsumWide]] as double — the wide-range twin of [[dsumD]]. */
-  def dsumWideD(c: Column): Column = dsumWide(c).cast("double")
+  /** Exact, order-independent sum; returns DECIMAL(38,6), bit-identical
+    * to `sum(CAST(c AS DECIMAL(38,6)))` ([[sql.dsum]]) over the whole
+    * DECIMAL(38,6) range: one [[graft.expressions.DetSum]] aggregate,
+    * which converts each element once to its 128-bit unscaled value and
+    * sums primitive longs inside whole-stage codegen. An element or a
+    * group total beyond DECIMAL(38,6) throws, never wraps. Works as a
+    * window function too (`dsum(c).over(w)`). */
+  def dsum(c: Column): Column = graft.expressions.DetSum(c)
 
   /** Order-independent sum as double (single deterministic final cast). */
   def dsumD(c: Column): Column = dsum(c).cast("double")
@@ -94,7 +57,7 @@ object DetAgg {
   /** Order-independent average: exact decimal sum, one double division. */
   def davg(c: Column): Column = dsum(c).cast("double") / count(c)
 
-  /** x² for the wide legs of [[dstddev]]/[[dvarPop]]: integral inputs
+  /** x² for the x² leg of [[dstddev]]: integral inputs
     * square as exact decimals ([[graft.expressions.WidenIntegral]]),
     * floating inputs in their own type. */
   private def square(c: Column): Column = {
@@ -103,22 +66,12 @@ object DetAgg {
   }
 
   /** Order-independent sample stddev via exact decimal sums of x and x².
-    * Shape mirrored exactly in [[sql.dstddev]] so the IEEE ops match.
-    * The x² leg stays on the wide decimal path: squared magnitudes
-    * exceed the fast path's unscaled-long range. */
+    * Shape mirrored exactly in [[sql.dstddev]] so the IEEE ops match. */
   def dstddev(c: Column): Column = {
     val n  = count(c).cast("double")
     val s1 = dsum(c).cast("double")
-    val s2 = dsumWide(square(c)).cast("double")
+    val s2 = dsum(square(c)).cast("double")
     when(count(c) > 1, sqrt((s2 - s1 * s1 / n) / (n - lit(1.0d))))
-  }
-
-  /** Order-independent population variance, same technique. */
-  def dvarPop(c: Column): Column = {
-    val n  = count(c).cast("double")
-    val s1 = dsum(c).cast("double")
-    val s2 = dsumWide(square(c)).cast("double")
-    when(count(c) > 0, (s2 - s1 * s1 / n) / n)
   }
 
   /** ANSI-SQL twins for DuckDB oracle queries. `e` is the SQL expression

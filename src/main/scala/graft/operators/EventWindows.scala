@@ -53,7 +53,7 @@ object EventWindows {
       .withColumn("ts_us", unix_micros(col("ts")))
       .select(col("user_id"), col("event_id"),
         count(lit(1)).over(w).as("n_recent"),
-        sum(col("value").cast(Dec)).over(w).cast("double").as("recent_value"))
+        dsum(col("value")).over(w).cast("double").as("recent_value"))
   }
 
   /** Secondary-sort formulation of the q77 EWMA — the UNBOUNDED-group
@@ -445,11 +445,8 @@ object EventWindows {
           floor(col("value") * lit(1e6d)).as("v"))
         val st = pts.groupBy(col("event_type")).agg(count(lit(1)).as("n"),
           dsumD(col("m")).as("sm"), dsumD(col("v")).as("sv"),
-          // m·v and m² exceed the fast dsum's per-element unscaled-long
-          // range (their own doc bounds them ≤ 2.4e13 > 9.2e12) — the
-          // wide decimal path keeps them exact
-          dsumWideD(col("m") * col("v")).as("smv"),
-          dsumWideD(col("m") * col("m")).as("smm"))
+          dsumD(col("m") * col("v")).as("smv"),
+          dsumD(col("m") * col("m")).as("smm"))
         val cv = st.select(col("event_type"), col("n"),
           (col("sm") / lit(1440.0d)).as("sx"),
           (col("sv") * lit(1e-6d)).as("sy"),

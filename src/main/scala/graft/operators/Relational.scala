@@ -232,7 +232,7 @@ object Relational {
         Tables.lineitem(s, d)
           .filter(col("l_suppkey") <= 20)
           .select(col("l_suppkey"), col("l_orderkey"), col("l_linenumber"),
-            sum(col("l_quantity").cast(Dec)).over(w).cast("double").as("running_qty"))
+            dsum(col("l_quantity")).over(w).cast("double").as("running_qty"))
           .orderBy(col("l_suppkey"), col("l_orderkey"), col("l_linenumber"))
     },
 

@@ -1017,13 +1017,11 @@ object TextAnalysis {
           .select(col("source"),
             floor(log(col("rank").cast("double")) * lit(1e6d)).cast("bigint").as("x"),
             floor(log(col("cnt").cast("double")) * lit(1e6d)).cast("bigint").as("y"))
-        import graft.functions.DetAgg.{dsumD, dsumWideD}
+        import graft.functions.DetAgg.dsumD
         val st = pts.groupBy(col("source")).agg(count(lit(1)).as("n"),
           dsumD(col("x")).as("sxr"), dsumD(col("y")).as("syr"),
-          // x·y and x² exceed the fast dsum's per-element unscaled-long
-          // range (doc bound ~1.3e14 > 9.2e12) — wide path keeps them exact
-          dsumWideD(col("x") * col("y")).as("sxyr"),
-          dsumWideD(col("x") * col("x")).as("sxxr"))
+          dsumD(col("x") * col("y")).as("sxyr"),
+          dsumD(col("x") * col("x")).as("sxxr"))
         val cv = st.select(col("source"), col("n"),
           (col("sxr") * lit(1e-6d)).as("sx"), (col("syr") * lit(1e-6d)).as("sy"),
           (col("sxyr") * lit(1e-12d)).as("sxy"), (col("sxxr") * lit(1e-12d)).as("sxx"))

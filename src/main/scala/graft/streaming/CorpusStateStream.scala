@@ -45,20 +45,22 @@ object CorpusStateStream {
   private[streaming] def stateDf(spark: SparkSession, dir: String, schema: StructType): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a dangling .old with the table dir MISSING means compactState
-    // crashed between its two renames — treating that as "empty state"
-    // would silently re-admit every previously-seen document (the file
-    // source never redelivers committed files). Fail loudly; the .old
-    // dir IS the state, and compactState recovers it on its next run.
-    val old = new org.apache.hadoop.fs.Path(dir + ".old")
-    if (!fs.exists(p) && fs.exists(old))
-      throw new IllegalStateException(
-        s"$dir missing but $old exists: a state swap (compaction, rebalance, " +
-        s"or forget) crashed between its two renames — re-run that op (each " +
-        "recovers .old on its next invocation) before reading state")
     if (fs.exists(p)) spark.read.schema(schema).parquet(dir)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    else {
+      // a dangling .old with the table dir MISSING means compactState
+      // crashed between its two renames — treating that as "empty state"
+      // would silently re-admit every previously-seen document (the file
+      // source never redelivers committed files). Fail loudly; the .old
+      // dir IS the state, and compactState recovers it on its next run.
+      val old = new org.apache.hadoop.fs.Path(dir + ".old")
+      if (fs.exists(old))
+        throw new IllegalStateException(
+          s"$dir missing but $old exists: a state swap (compaction, rebalance, " +
+          s"or forget) crashed between its two renames — re-run that op (each " +
+          "recovers .old on its next invocation) before reading state")
+      spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    }
   }
 
   /** The persisted distinct-shingle set (q118's `existing`). */

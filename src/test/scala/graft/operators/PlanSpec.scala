@@ -24,8 +24,7 @@ class PlanSpec extends SparkSpec {
   private def planOf(name: String): SparkPlan =
     executedPlan(SparkEntry.queries(name)(spark, sf001))
 
-  private def planString(name: String): String =
-    SparkEntry.queries(name)(spark, sf001).queryExecution.executedPlan.toString
+  private def planString(name: String): String = planOf(name).toString
 
   test("q02: every predicate is pushed into the parquet scan") {
     val s = planString("q02_revenue_filter")
